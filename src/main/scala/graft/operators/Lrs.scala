@@ -180,10 +180,4 @@ object Lrs {
       Some(s"pit_id=${cursor.ts.getTime}")).flatten
     s"$path?${params.mkString("&")}"
   }
-
-  /** D5's store-side probe: fetch statements by id list
-    * (lrs/fs.py:102-112 etc.) — broadcast-friendly isin for request-sized
-    * lists. */
-  def byIds(store: DataFrame, ids: Seq[String]): DataFrame =
-    store.filter(col("event_id").isin(ids: _*))
 }

@@ -96,9 +96,9 @@ class IncrementalDedup(threshold: Double = 0.5, k: Int = 3) {
     * batchId like [[LakeSink]] does — or use [[DurableIncrementalDedup]],
     * which gates internally). */
   def addBatch(batch: DataFrame): BatchStats = {
-    // LAZY checkpoint + count = one materialization job, not two (eager
-    // checkpoint then count) — safe wherever nothing in the lineage is
-    // released before the count runs
+    // the no-arg localCheckpoint() is EAGER in Spark 4.1.2 (it calls
+    // checkpoint(eager = true, reliable = false)): one job materializes
+    // the frame, and the count is a second job over the checkpointed blocks
     val (newShingles, nNew) = labeled(batch, "dedup: shingle batch") {
       val df = shinglesOf(batch, k).localCheckpoint()
       (df, df.count()) }
@@ -114,8 +114,8 @@ class IncrementalDedup(threshold: Double = 0.5, k: Int = 3) {
     // filtered) — the separate candidate checkpoint bought only the nCands
     // stat, which the scored frame still carries; one fewer materialized
     // frame ≈ 3-4 fewer scheduled jobs per microbatch. Both stats come from
-    // the SAME materializing aggregate (count + conditional count), erasing
-    // the separate verified.count() job.
+    // ONE aggregate over the (eagerly) checkpointed frame (count +
+    // conditional count), erasing the separate verified.count() job.
     val allSh = shinglesState.fold(newShingles)(_.union(newShingles))
     val (scored, nCands, nVerified) = labeled(batch, "dedup: candidate+verify") {
       val df = scoredPairs(candidatePairs(newBands, bandsState), allSh,
@@ -267,7 +267,7 @@ object IncrementalDedup {
         .select(coalesce(col("rep_a"), col("id_a")).as("id_a"),
           coalesce(col("rep_b"), col("id_b")).as("id_b"))
     }.filter(col("id_a") =!= col("id_b")).distinct()
-      .localCheckpoint() // lazy: the count below materializes it — 1 job
+      .localCheckpoint() // eager: one job here, the count below is a second
     // the contraction graph is batch-sized BY CONSTRUCTION (endpoints are
     // batch docs ∪ touched reps — the property StreamingSpec asserts), so
     // its node count and components come from ONE bounded collect + driver
@@ -418,7 +418,7 @@ class DurableIncrementalDedup(spark: SparkSession, lakePath: String,
   private def strip(df: DataFrame): DataFrame = df.drop("_batch_id", "_part_id")
 
   private def readState(sink: LakeSink): Option[DataFrame] =
-    if (sink.committed().exists(_.rows > 0)) Some(strip(sink.readUniform(spark)))
+    if (sink.committed().exists(_.rows > 0)) Some(strip(sink.read(spark)))
     else None
 
   /** Newest committed label generation, read from its ONE segment dir —
@@ -452,7 +452,7 @@ class DurableIncrementalDedup(spark: SparkSession, lakePath: String,
       return BatchStats(0L, 0L, 0L, 0L, 0L, 0)
     val scratch = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val (newShingles, nNew) = labeled(batch, "durdedup: shingle batch") {
-      val df = shinglesOf(batch, k).localCheckpoint() // lazy + count: 1 job
+      val df = shinglesOf(batch, k).localCheckpoint() // eager, then count: 2 jobs
       (df, df.count()) }
     // EAGER (the in-memory twin's rationale): three join legs read it
     val newBands = labeled(batch, "durdedup: band batch") {
@@ -467,7 +467,7 @@ class DurableIncrementalDedup(spark: SparkSession, lakePath: String,
       val allSh = readState(shingleSink).fold(newShingles)(_.union(newShingles))
       val (scored, nCands, nVerified) = labeled(batch, "durdedup: candidate+verify") {
         val df = scoredPairs(candidatePairs(newBands, readState(bandSink)),
-          allSh, threshold).localCheckpoint() // lazy + agg: 1 job
+          allSh, threshold).localCheckpoint() // eager, then agg: 2 jobs
         val s = df.agg(count(lit(1)), count(when(col("ok"), true))).head()
         (df, s.getLong(0), s.getLong(1)) }
       scratch += scored

@@ -6,8 +6,12 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -40,6 +44,20 @@ import org.apache.spark.util.sketch.BloomFilter
   * Every row carries per-partition lineage columns `_batch_id`/`_part_id`,
   * and each commit records row counts — computed from the in-memory batch
   * on the way in, never by re-reading the files just written.
+  *
+  * A manifest entry (one JSON line of `_manifest.jsonl`, [[LakeSink
+  * .entryJson]]) holds: `batch` (segment id; negative for a compacted
+  * fold), `rows`, the event-time range `min_ts`/`max_ts` (micros, when the
+  * batch has a ts column), `folded` (streaming-id ranges a fold absorbed),
+  * `stats` (per-column zone stats) and `schema` — 16 hex chars of SHA-256
+  * over the written frame's schema JSON, nullability erased
+  * ([[LakeSink.schemaFingerprint]]). Readers resolve the table schema from
+  * the manifest (the Iceberg table-metadata rule): when every entry read
+  * carries the SAME fingerprint, the schema comes from one segment's
+  * parquet footer on the driver and the scan is planned with it — no
+  * schema-inference Spark job, no per-file footer I/O. Otherwise (an
+  * entry without a fingerprint, a column added mid-stream, a footer
+  * without Spark row metadata) readers fall back to `mergeSchema`.
   */
 class LakeSink(val path: String) extends Serializable {
 
@@ -150,6 +168,7 @@ class LakeSink(val path: String) extends Serializable {
       .withColumn("_batch_id", lit(batchId))
       .withColumn("_part_id", spark_partition_id())
       .persist(StorageLevel.MEMORY_AND_DISK)
+    val fingerprint = LakeSink.schemaFingerprint(withLineage.schema)
     try {
       withLineage.write.mode("overwrite").parquet(dir) // retry-safe rewrite
       // per-partition lineage metrics + event-time range: ONE pass over the
@@ -192,7 +211,7 @@ class LakeSink(val path: String) extends Serializable {
       }
       writeMetrics(batchId, perPart.map(r =>
         s"""{"part": ${r.get(0)}, "rows": ${r.getAs[Long]("n")}}"""))
-      commit(batchId, rows, range, covering, zstats)
+      commit(Committed(batchId, rows, range, covering, zstats, Some(fingerprint)))
       true
     } finally { withLineage.unpersist(); () }
   }
@@ -245,9 +264,7 @@ class LakeSink(val path: String) extends Serializable {
                 batchUnique.filter(col(idCol).isNotNull && might))
             case None => (batchUnique.limit(0), batchUnique)
           }
-          val dirs = cands.map(c => s"$path/batch=${c.batch}")
-          val existingIds = spark.read.parquet(dirs: _*)
-            .select(col(idCol)).distinct()
+          val existingIds = readEntries(spark, cands).select(col(idCol)).distinct()
           sure.unionByName(maybe.join(existingIds, Seq(idCol), "left_anti"))
         }
       addBatchTracked(batchId, novel, Some(idCol), Some(tsCol), covering)
@@ -313,11 +330,11 @@ class LakeSink(val path: String) extends Serializable {
       entries.partition(e => e.rows < 0 || e.rows < maxFoldRows)
     if (foldable.length < 2) return // nothing worth folding
     val gen = math.min(entries.map(_.batch).min, 0L) - 1
-    val dirs = foldable.map(e => s"$path/batch=${e.batch}")
-    // mergeSchema, like read(): without it one batch's footer wins and a
-    // column added mid-stream is DROPPED from the compacted segment while
-    // the original dirs get deleted — unrecoverable
-    val data = spark.read.option("mergeSchema", "true").parquet(dirs: _*)
+    // the read() schema rule: one footer only when every folded entry
+    // carries the same fingerprint, mergeSchema otherwise — a column added
+    // mid-stream must never be DROPPED from the compacted segment while
+    // the original dirs get deleted (unrecoverable)
+    val data = readEntries(spark, foldable)
     val dir = s"$path/batch=$gen"
     // emptiness from the manifest, not a Spark job: only an old-format
     // entry (rows = -1, count unknown) forces the isEmpty scan
@@ -327,15 +344,15 @@ class LakeSink(val path: String) extends Serializable {
       if (zorderCols.nonEmpty && hasRows)
         Some(graft.operators.LayoutOps.zorderWrite(data, zorderCols, dir, zorderFiles))
       else { data.write.mode("overwrite").parquet(dir); None }
+    val compacted = spark.read.schema(data.schema).parquet(dir)
     // entry rows are authoritative for current-format manifests; an
     // old-format entry (rows = -1) forces a recount so the compacted entry
     // never reports 0 over a data-bearing segment (probeCandidates would
     // then skip it forever)
     val rows =
       if (foldable.forall(_.rows >= 0)) foldable.map(_.rows).sum
-      else spark.read.parquet(dir).count()
+      else compacted.count()
     idCol.foreach { c =>
-      val compacted = spark.read.parquet(dir)
       val bf =
         if (rows == 0) BloomFilter.create(1000L, 0.01)
         else compacted.stat.bloomFilter(c, math.max(1000L, rows), 0.01)
@@ -373,7 +390,8 @@ class LakeSink(val path: String) extends Serializable {
       c -> ((r.min, r.max)) }).getOrElse(Map.empty)
     // new manifest generation: graduated segments verbatim + the new fold
     val lines = retained.map(LakeSink.entryJson) :+
-      LakeSink.entryJson(Committed(gen, rows, range, folded, stats))
+      LakeSink.entryJson(Committed(gen, rows, range, folded, stats,
+        Some(LakeSink.schemaFingerprint(data.schema))))
     val tmp = Paths.get(path, "_manifest.tmp")
     Files.write(tmp, lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
     // archive the generation being replaced as a time-travel snapshot
@@ -488,14 +506,11 @@ class LakeSink(val path: String) extends Serializable {
 
   /** Atomic manifest append: copy-on-write + rename. Single-writer (one
     * streaming query owns a sink), so no lock is needed. */
-  private def commit(batchId: Long, rows: Long, range: Option[(Long, Long)],
-                     covering: Seq[(Long, Long)] = Seq.empty,
-                     stats: Map[String, (Long, Long)] = Map.empty): Unit = {
+  private def commit(e: Committed): Unit = {
     Files.createDirectories(Paths.get(path))
     val prev =
       if (Files.exists(manifest)) Files.readString(manifest) else ""
-    val line =
-      LakeSink.entryJson(Committed(batchId, rows, range, covering, stats)) + "\n"
+    val line = LakeSink.entryJson(e) + "\n"
     val tmp = Paths.get(path, s"_manifest.tmp")
     Files.write(tmp, (prev + line).getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, manifest, StandardCopyOption.ATOMIC_MOVE,
@@ -504,23 +519,12 @@ class LakeSink(val path: String) extends Serializable {
 
   /** Committed data only (snapshot isolation at batch granularity).
     * Reads MANIFEST ENTRIES (segment dirs) — not committedBatches(), whose
-    * folded ids point at dirs compaction has reclaimed. `mergeSchema`
-    * because a long-running sink sees columns added mid-stream: without it
-    * the first file's footer wins and evolved columns silently vanish. */
+    * folded ids point at dirs compaction has reclaimed. The schema comes
+    * from the manifest's fingerprints (class doc): one driver-side footer
+    * read when the segments agree, `mergeSchema` when a long-running sink
+    * saw columns added mid-stream — without it the first file's footer
+    * would win and evolved columns would silently vanish. */
   def read(spark: SparkSession): DataFrame = readEntries(spark, committed())
-
-  /** [[read]] for sinks whose segments share ONE schema by construction
-    * (the dedup state tables: fixed-shape band/shingle/label rows). Skips
-    * parquet schema merging, which makes the DRIVER read every file's
-    * footer on each state read — O(segments) driver I/O per microbatch of
-    * the durable-dedup loop for information the first footer carries. The
-    * general [[read]] keeps mergeSchema: the DATA path's schema-evolution
-    * contract (StreamingSpec) depends on it. */
-  def readUniform(spark: SparkSession): DataFrame = {
-    val batches = committed().map(_.batch)
-    if (batches.isEmpty) spark.emptyDataFrame
-    else spark.read.parquet(batches.sorted.map(b => s"$path/batch=$b"): _*)
-  }
 
   /** Committed entries that may hold rows inside `box` (inclusive ranges
     * per zone-stat column). Conservative: zero-row segments are never
@@ -555,7 +559,7 @@ class LakeSink(val path: String) extends Serializable {
     // schema-bearing empty parquet segment
     if (paths.isEmpty && entries.nonEmpty) readEntries(spark, entries).limit(0)
     else if (paths.isEmpty) spark.emptyDataFrame
-    else spark.read.option("mergeSchema", "true").parquet(paths: _*)
+    else scan(spark, keep, paths)
   }
 
   /** One committed segment only — for GENERATION-SNAPSHOT readers (tables
@@ -571,13 +575,50 @@ class LakeSink(val path: String) extends Serializable {
     readEntries(spark, e)
   }
 
-  private def readEntries(spark: SparkSession, entries: Seq[Committed]): DataFrame = {
-    val batches = entries.map(_.batch)
-    if (batches.isEmpty) {
-      spark.emptyDataFrame
-    } else {
-      val dirs = batches.sorted.map(b => s"$path/batch=$b")
-      spark.read.option("mergeSchema", "true").parquet(dirs: _*)
+  private def readEntries(spark: SparkSession, entries: Seq[Committed]): DataFrame =
+    if (entries.isEmpty) spark.emptyDataFrame
+    else scan(spark, entries, entries.map(_.batch).sorted.map(b => s"$path/batch=$b"))
+
+  /** Parquet scan of `paths` (segment dirs or files of `entries`) with the
+    * schema resolved from the manifest: one footer when every entry
+    * carries the same fingerprint, `mergeSchema` inference otherwise. */
+  private def scan(spark: SparkSession, entries: Seq[Committed],
+                   paths: Seq[String]): DataFrame = {
+    val footer = entries.map(_.schema).distinct match {
+      case Seq(Some(_)) => footerSchema(spark, entries)
+      case _ => None
+    }
+    footer match {
+      case Some(s) => spark.read.schema(s).parquet(paths: _*)
+      case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
+    }
+  }
+
+  /** The Spark schema recorded in the footer of ONE data file of the
+    * given segments, read on the driver. None when no segment holds a
+    * parquet file or the footer lacks Spark's row metadata. */
+  private def footerSchema(spark: SparkSession, entries: Seq[Committed]): Option[StructType] = {
+    def dataFile(b: Long): Option[java.nio.file.Path] = {
+      val dir = Paths.get(path, s"batch=$b")
+      if (!Files.isDirectory(dir)) None
+      else {
+        val s = Files.list(dir)
+        try s.iterator().asScala.find { p =>
+          val n = p.getFileName.toString
+          n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+        }
+        finally s.close()
+      }
+    }
+    entries.iterator.flatMap(e => dataFile(e.batch)).nextOption().flatMap { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new HPath(f.toUri), spark.sessionState.newHadoopConf()))
+      val json =
+        try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+          .get(LakeSink.SparkRowMetadataKey))
+        finally reader.close()
+      json.flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption)
+        .collect { case s: StructType => s }
     }
   }
 
@@ -617,10 +658,12 @@ class LakeSink(val path: String) extends Serializable {
 object LakeSink {
   /** One committed-batch manifest entry. `folded` holds the inclusive
     * ranges of streaming batch ids a compacted segment absorbed (empty for
-    * ordinary commits). */
+    * ordinary commits); `schema` is the segment's [[schemaFingerprint]]
+    * (None in manifests written before fingerprints existed). */
   final case class Committed(batch: Long, rows: Long, range: Option[(Long, Long)],
                              folded: Seq[(Long, Long)] = Seq.empty,
-                             stats: Map[String, (Long, Long)] = Map.empty) {
+                             stats: Map[String, (Long, Long)] = Map.empty,
+                             schema: Option[String] = None) {
     /** Streaming-id RANGES this entry accounts for (entry id itself if it
       * IS a streaming batch, plus folded ranges). */
     def streamIdRanges: Seq[(Long, Long)] =
@@ -646,8 +689,23 @@ object LakeSink {
       else e.stats.toSeq.sortBy(_._1).map { case (c, (lo, hi)) =>
         val esc = c.replace("\\", "\\\\").replace("\"", "\\\"")
         s""""$esc": [$lo,$hi]""" }.mkString(""", "stats": {""", ",", "}")
-    s"""{"batch": ${e.batch}, "rows": ${e.rows}$rangeJson$foldedJson$statsJson}"""
+    val schemaJson = e.schema.map(f => s""", "schema": "$f"""").getOrElse("")
+    s"""{"batch": ${e.batch}, "rows": ${e.rows}$rangeJson$foldedJson$statsJson$schemaJson}"""
   }
+
+  /** Footer key under which Spark's parquet writer stores the row schema
+    * JSON. */
+  private val SparkRowMetadataKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** A manifest entry's schema fingerprint: 16 hex chars of SHA-256 over
+    * the schema JSON with nullability erased — a compacted fold (read back
+    * from parquet, all-nullable) and a later append of the same columns
+    * must agree, and readers apply `asNullable` either way. */
+  def schemaFingerprint(s: StructType): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(org.apache.spark.sql.graftbridge.Bridge.asNullable(s).json
+        .getBytes(StandardCharsets.UTF_8))
+      .take(8).map(b => f"$b%02x").mkString
 
   /** Merge inclusive ranges into a minimal sorted cover. */
   def mergeRanges(rs: Seq[(Long, Long)]): Seq[(Long, Long)] = {
@@ -709,7 +767,8 @@ object LakeSink {
           b.result()
         }
       Committed(n.get("batch").asLong,
-        if (n.has("rows")) n.get("rows").asLong else -1L, range, folded, stats)
+        if (n.has("rows")) n.get("rows").asLong else -1L, range, folded, stats,
+        if (n.has("schema")) Some(n.get("schema").asText) else None)
     }
   }
 }

@@ -41,6 +41,12 @@ object Bridge {
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
 
+  /** The schema with every nullability flag set — what a file-source read
+    * applies to its data schema (`DataType.asNullable` is
+    * `private[spark]`). */
+  def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    s.asNullable
+
   /** Never-throwing variant for cleanup paths (iterative operators,
     * streaming state maintenance) — a failed release is a leak, not an
     * error worth failing the job for. */

@@ -69,28 +69,6 @@ class BpeTrainerSpec extends SparkSuite {
     assert(batched.sameElements(seqA) && batched.sameElements(seqB))
   }
 
-  // count Spark jobs a trainer fires (listener delivery is async: poll
-  // until the count is stable)
-  private def countJobs(body: => Unit): Long = {
-    val counter = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        counter.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      var last = -1L
-      var spins = 0
-      while (counter.get() != last && spins < 50) {
-        last = counter.get(); Thread.sleep(100); spins += 1
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
-    counter.get()
-  }
-
   test("batched training learns the IDENTICAL merge table with >=5x fewer jobs") {
     // fixture with many token-disjoint frequent pairs at distinct counts —
     // the shape where batching pays (mid/late-stage BPE and multi-domain
@@ -103,8 +81,8 @@ class BpeTrainerSpec extends SparkSuite {
     corpus.count()
     var seqResult: (Seq[BpeTrainer.Merge], _) = null
     var batResult: (Seq[BpeTrainer.Merge], org.apache.spark.sql.Dataset[Array[Int]]) = null
-    val seqJobs = countJobs { seqResult = BpeTrainer.train(corpus, nMerges = 40) }
-    val batJobs = countJobs { batResult = BpeTrainer.trainBatched(corpus, nMerges = 40) }
+    val seqJobs = jobsIn { seqResult = BpeTrainer.train(corpus, nMerges = 40) }
+    val batJobs = jobsIn { batResult = BpeTrainer.trainBatched(corpus, nMerges = 40) }
     assert(seqResult._1.length === 40, "fixture corpus supports 40 merges")
     // identical table: same pairs, same fresh ids, same recorded counts
     assert(batResult._1 === seqResult._1)
@@ -128,8 +106,8 @@ class BpeTrainerSpec extends SparkSuite {
     corpus.count()
     var seqResult: (Seq[BpeTrainer.Merge], _) = null
     var batResult: (Seq[BpeTrainer.Merge], _) = null
-    val seqJobs = countJobs { seqResult = BpeTrainer.train(corpus, nMerges = 40) }
-    val batJobs = countJobs { batResult = BpeTrainer.trainBatched(corpus, nMerges = 40) }
+    val seqJobs = jobsIn { seqResult = BpeTrainer.train(corpus, nMerges = 40) }
+    val batJobs = jobsIn { batResult = BpeTrainer.trainBatched(corpus, nMerges = 40) }
     assert(batResult._1 === seqResult._1)
     assert(batJobs < seqJobs)
     corpus.unpersist()

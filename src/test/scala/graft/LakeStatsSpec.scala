@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.streaming.LakeSink
@@ -247,5 +249,87 @@ class LakeStatsSpec extends SparkSuite {
       Map("user_id" -> ((1L, 99L)), "we\"ird" -> ((-5L, 5L))))
     val line = LakeSink.entryJson(e)
     assert(LakeSink.Committed.parse(line) === e)
+  }
+
+  test("schema fingerprint: erases nullability, tells column sets apart, round-trips the manifest") {
+    val s = batch(0 until 1, 0L, 1L).schema
+    assert(s.exists(!_.nullable)) // the written frame has non-null columns
+    val fp = LakeSink.schemaFingerprint(s)
+    assert(fp.matches("[0-9a-f]{16}"), fp)
+    assert(fp === LakeSink.schemaFingerprint(org.apache.spark.sql.graftbridge.Bridge.asNullable(s)))
+    assert(fp !== LakeSink.schemaFingerprint(s.add("extra", "string")))
+    val e = LakeSink.Committed(3L, 10L, Some((5L, 9L)), schema = Some(fp))
+    assert(LakeSink.Committed.parse(LakeSink.entryJson(e)) === e)
+    // no fingerprint → no field, as in manifests written before it existed
+    assert(!LakeSink.entryJson(e.copy(schema = None)).contains("schema"))
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.select("event_id", "user_id", "ts", "_batch_id").as[(Long, Long, java.time.LocalDateTime, Long)]
+      .collect().sortBy(_._1).toSeq
+
+  /** Today's inference read of the segments, for comparison. */
+  private def mergeRead(dir: String, batches: Seq[Long]) =
+    spark.read.option("mergeSchema", "true").parquet(batches.map(b => s"$dir/batch=$b"): _*)
+
+  test("uniform-schema lake: read, readGeneration and readPruned plan without a Spark job") {
+    val (dir, sink) = freshLake()
+    try {
+      sink.addBatchStats(0L, batch(0 until 100, 0L, 1000L), Seq("user_id"))
+      sink.addBatchStats(1L, batch(100 until 200, 5000L, 6000L), Seq("user_id"))
+      sink.addBatchStats(2L, batch(0 until 0, 0L, 1L), Seq("user_id")) // zero-row commit
+      val fps = sink.committed().map(_.schema)
+      assert(fps.forall(_.isDefined) && fps.distinct.size == 1, fps)
+      val box = Map("user_id" -> ((5200L, 5800L)))
+      val reads = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "read" -> (() => sink.read(spark)),
+        "readGeneration" -> (() => sink.readGeneration(spark, 1L)),
+        "readPruned" -> (() => sink.readPruned(spark, box)))
+      reads.foreach { case (name, r) =>
+        val jobs = jobsIn(r().filter(col("user_id") > 0L).queryExecution.executedPlan)
+        assert(jobs === 0L, s"$name scheduled $jobs jobs before execution")
+      }
+      // the footer schema is the one inference derives, and the rows agree
+      val want = mergeRead(dir, Seq(0L, 1L, 2L))
+      assert(sink.read(spark).schema === want.schema)
+      assert(rows(sink.read(spark)) === rows(want))
+      assert(rows(sink.readPruned(spark, box)) ===
+        rows(want.filter(col("_batch_id") === 1L)))
+    } finally graft.operators.LayoutOps.deleteTree(Paths.get(dir))
+  }
+
+  test("manifest without schema fingerprints reads today's rows through mergeSchema") {
+    val (dir, sink) = freshLake()
+    try {
+      sink.addBatchStats(0L, batch(0 until 50, 0L, 100L), Seq("user_id"))
+      sink.addBatchStats(1L, batch(50 until 120, 200L, 300L), Seq("user_id"))
+      val m = Paths.get(dir, "_manifest.jsonl")
+      val old = Files.readAllLines(m).asScala.filter(_.nonEmpty)
+        .map(l => LakeSink.entryJson(LakeSink.Committed.parse(l).copy(schema = None)))
+      Files.write(m, old.mkString("", "\n", "\n").getBytes)
+      assert(sink.committed().forall(_.schema.isEmpty))
+      val got = sink.read(spark)
+      val want = mergeRead(dir, Seq(0L, 1L))
+      assert(got.schema === want.schema)
+      assert(rows(got) === rows(want))
+      // the fallback is the inference path: its job runs at resolution
+      assert(jobsIn(sink.read(spark)) >= 1L)
+    } finally graft.operators.LayoutOps.deleteTree(Paths.get(dir))
+  }
+
+  test("compaction keeps the job-free read: the fold and later appends share a fingerprint") {
+    val (dir, sink) = freshLake()
+    try {
+      (0 until 3).foreach(b => sink.addBatchStats(b.toLong,
+        batch(b * 40 until (b + 1) * 40, b * 1000L, b * 1000L + 500L), Seq("user_id")))
+      sink.compactInPlace(spark)
+      assert(sink.committed().map(_.batch) === Seq(-1L))
+      sink.addBatchStats(3L, batch(120 until 160, 3000L, 3500L), Seq("user_id"))
+      val fps = sink.committed().map(_.schema)
+      assert(fps.forall(_.isDefined) && fps.distinct.size == 1, fps)
+      assert(jobsIn(sink.read(spark).queryExecution.executedPlan) === 0L)
+      assert(rows(sink.read(spark)) === rows(mergeRead(dir, Seq(-1L, 3L))))
+      assert(sink.read(spark).count() === 160L)
+    } finally graft.operators.LayoutOps.deleteTree(Paths.get(dir))
   }
 }

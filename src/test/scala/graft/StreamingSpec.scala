@@ -508,6 +508,8 @@ class StreamingSpec extends SparkSuite {
     val sink = new LakeSink(tmp("lakeevo"))
     assert(sink.addBatch(0, Seq(("a", 1)).toDF("event_id", "v")))
     assert(sink.addBatch(1, Seq(("b", 2, "extra")).toDF("event_id", "v", "w")))
+    // the fingerprints differ, so the read takes the mergeSchema fallback
+    assert(sink.committed().map(_.schema).distinct.size === 2)
     val got = sink.read(spark)
     assert(got.columns.contains("w"))
     assert(got.count() === 2)
