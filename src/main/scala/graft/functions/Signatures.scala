@@ -1,11 +1,15 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData, XXH64}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.{Bridge => ExpressionUtils}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native signature expressions for the near-dup dedup family.
@@ -17,6 +21,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * slots simultaneously. Signature hash choice is internal — candidate
   * pairs are always re-verified with exact Jaccard, so output semantics are
   * unchanged (precision 1.0, recall set by the band shape).
+  *
+  * Two kernels are bit-exact replacements of builtin compositions, so state
+  * written by either form stays valid under the other:
+  *  - [[bandKeysCol]]: every LSH band key of a signature, each equal to
+  *    `xxhash64(concat_ws("_", b, slice(sig, b*rows+1, rows)))` — XXH64
+  *    (seed 42) over the UTF-8 of `"b_v1_v2"`, null slots skipped as
+  *    `concat_ws` skips them (a null signature keys every band on `"b"`).
+  *  - [[setJaccardCol]]: `round(size(array_intersect(a, b)) /
+  *    size(array_union(a, b)), 6)` in one pass over both arrays with one
+  *    hash table and no intermediate arrays — duplicates, null elements,
+  *    empty and null arrays included (the session's `size(null)` and
+  *    division-by-zero behaviour are captured like the builtins do).
   */
 object Signatures {
 
@@ -187,8 +203,115 @@ object Signatures {
     new GenericArrayData(Array[Any](valid, counts.size.toLong, top.toLong))
   }
 
+  /** `|set(a) ∩ set(b)| / |set(a) ∪ set(b)|` rounded HALF_UP to 6 places
+    * (Spark's `round` on a double), or NaN when both sets are empty. A null
+    * element counts as one more value, as in `array_intersect` /
+    * `array_union`. One open-addressing table: a's distinct elements go in
+    * with state 1; each b element then either joins the union (absent →
+    * state 2) or the intersection (state 1 → 3). */
+  def setJaccard(a: ArrayData, b: ArrayData): Double = {
+    val na = a.numElements()
+    val nb = b.numElements()
+    var cap = 16
+    while (cap < 2 * (na + nb)) cap <<= 1
+    val mask = cap - 1
+    val keys = new Array[UTF8String](cap)
+    val state = new Array[Byte](cap)
+    var union = 0
+    var inter = 0
+    var nullA = false
+    var nullB = false
+    var i = 0
+    while (i < na) {
+      if (a.isNullAt(i)) nullA = true
+      else {
+        val s = a.getUTF8String(i)
+        var p = slot(s, mask)
+        while (keys(p) != null && !keys(p).equals(s)) p = (p + 1) & mask
+        if (keys(p) == null) { keys(p) = s; state(p) = 1; union += 1 }
+      }
+      i += 1
+    }
+    i = 0
+    while (i < nb) {
+      if (b.isNullAt(i)) nullB = true
+      else {
+        val s = b.getUTF8String(i)
+        var p = slot(s, mask)
+        while (keys(p) != null && !keys(p).equals(s)) p = (p + 1) & mask
+        if (keys(p) == null) { keys(p) = s; state(p) = 2; union += 1 }
+        else if (state(p) == 1) { state(p) = 3; inter += 1 }
+      }
+      i += 1
+    }
+    if (nullA || nullB) union += 1
+    if (nullA && nullB) inter += 1
+    if (union == 0) Double.NaN
+    else java.math.BigDecimal.valueOf(inter.toDouble / union.toDouble)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+  }
+
+  private def slot(s: UTF8String, mask: Int): Int = {
+    val h = s.hashCode()
+    (h ^ (h >>> 16)) & mask
+  }
+
+  /** Every LSH band key of a MinHash signature: key b is XXH64 (seed 42)
+    * of the UTF-8 string `"b_v1_.._vrows"` over signature slots
+    * `b*rows until (b+1)*rows` — bit-identical to
+    * `xxhash64(concat_ws("_", b, slice(sig, b*rows+1, rows)))`. Null or
+    * missing slots are skipped as `concat_ws` skips them, so a null
+    * signature (null input) keys band b on `"b"` alone. */
+  def bandKeys(sig: ArrayData, bands: Int, rows: Int): ArrayData = {
+    val n = if (sig == null) 0 else sig.numElements()
+    val buf = new Array[Byte](11 + 21 * rows) // int + rows × ("_" + long)
+    val out = new Array[Long](bands)
+    var b = 0
+    while (b < bands) {
+      var len = writeDecimal(buf, 0, b)
+      var r = 0
+      while (r < rows) {
+        val i = b * rows + r
+        if (i < n && !sig.isNullAt(i)) {
+          buf(len) = '_'
+          len = writeDecimal(buf, len + 1, sig.getLong(i))
+        }
+        r += 1
+      }
+      out(b) = XXH64.hashUnsafeBytes(buf, Platform.BYTE_ARRAY_OFFSET, len, 42L)
+      b += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  /** ASCII decimal of `v` (what a long→string cast prints) at `pos`;
+    * returns the end offset. Digits are taken from the negated value, so
+    * Long.MinValue needs no special case. */
+  private def writeDecimal(buf: Array[Byte], pos: Int, v: Long): Int = {
+    var p = pos
+    var neg = v
+    if (v < 0) { buf(p) = '-'; p += 1 } else neg = -v
+    var digits = 1
+    var t = neg / 10
+    while (t != 0) { digits += 1; t /= 10 }
+    var q = p + digits - 1
+    while (q >= p) { buf(q) = ('0' - neg % 10).toByte; neg /= 10; q -= 1 }
+    p + digits
+  }
+
   def minhashSig(shingles: Column): Column =
     ExpressionUtils.column(MinHashSigExpr(ExpressionUtils.expression(shingles)))
+
+  /** All `bands` LSH keys of a signature column as `array<bigint>` (see
+    * [[bandKeys]]); never null. */
+  def bandKeysCol(sig: Column, bands: Int, rows: Int): Column =
+    ExpressionUtils.column(BandKeysExpr(ExpressionUtils.expression(sig), bands, rows))
+
+  /** Rounded set Jaccard of two `array<string>` columns — the value of
+    * `round(size(array_intersect(a, b)) / size(array_union(a, b)), 6)`. */
+  def setJaccardCol(a: Column, b: Column): Column =
+    ExpressionUtils.column(
+      SetJaccardExpr(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
 
   def simhashMd5Sig(features: Column): Column =
     ExpressionUtils.column(SimHashMd5Expr(ExpressionUtils.expression(features)))
@@ -399,6 +522,72 @@ case class IntCosineExpr(left: Expression, right: Expression) extends BinaryExpr
     Signatures.intCosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Signatures.intCosine($a, $b)")
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+case class BandKeysExpr(child: Expression, bands: Int, rows: Int) extends UnaryExpression {
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "band_keys"
+  override def eval(input: InternalRow): Any =
+    Signatures.bandKeys(child.eval(input).asInstanceOf[ArrayData], bands, rows)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      ArrayData ${ev.value} = graft.functions.Signatures.bandKeys(
+        ${c.isNull} ? null : ${c.value}, $bands, $rows);""", isNull = FalseLiteral)
+  }
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+/** `round(size(array_intersect(l, r)) / size(array_union(l, r)), 6)` as
+  * one kernel. The two session behaviours that shape the builtin's edge
+  * values are captured at construction, like `Size` and `Divide` capture
+  * them: under `legacySizeOfNull` a null array makes both sizes -1 (value
+  * 1.0), otherwise null; two empty arrays divide by zero — null, or the
+  * ANSI error when `failOnError`. */
+case class SetJaccardExpr(left: Expression, right: Expression,
+                          legacySizeOfNull: Boolean = SQLConf.get.legacySizeOfNull,
+                          failOnError: Boolean = SQLConf.get.ansiEnabled)
+    extends BinaryExpression {
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+  override def prettyName: String = "set_jaccard"
+  override def eval(input: InternalRow): Any = {
+    val a = left.eval(input)
+    val b = right.eval(input)
+    if (a == null || b == null) { if (legacySizeOfNull) 1.0 else null }
+    else {
+      val j = Signatures.setJaccard(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+      if (!j.isNaN) j
+      else if (failOnError) throw ExpressionUtils.divideByZeroError()
+      else null
+    }
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val l = left.genCode(ctx)
+    val r = right.genCode(ctx)
+    val onNullInput =
+      if (legacySizeOfNull) s"${ev.value} = 1.0;" else s"${ev.isNull} = true;"
+    val onEmpty =
+      if (failOnError) "throw org.apache.spark.sql.graftbridge.Bridge.divideByZeroError();"
+      else s"${ev.isNull} = true;"
+    ev.copy(code = code"""
+      ${l.code}
+      ${r.code}
+      boolean ${ev.isNull} = false;
+      double ${ev.value} = -1.0;
+      if (${l.isNull} || ${r.isNull}) {
+        $onNullInput
+      } else {
+        ${ev.value} = graft.functions.Signatures.setJaccard(${l.value}, ${r.value});
+        if (Double.isNaN(${ev.value})) {
+          $onEmpty
+        }
+      }""")
+  }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }

@@ -169,14 +169,13 @@ object TextOps {
     * batch pair path below and the incremental dedup index
     * ([[graft.streaming.IncrementalDedup]]): two band layouts that drift
     * apart would silently split the candidate space. */
-  def bandBuckets(docsWithShingles: DataFrame): DataFrame = {
-    val docs = docsWithShingles.withColumn("sig", minhashSig(col("sh")))
-    val bandCols = (0 until Bands).map { b =>
-      xxhash64(concat_ws("_", lit(b), slice(col("sig"), b * Rows + 1, Rows)))
-    }
-    docs.select(col("doc_id"), posexplode(array(bandCols: _*)))
+  def bandBuckets(docsWithShingles: DataFrame): DataFrame =
+    // one native pass per signature; each key is bit-identical to
+    // xxhash64(concat_ws("_", b, slice(sig, b*Rows+1, Rows))), so band
+    // state written by either form probes correctly under the other
+    docsWithShingles.select(col("doc_id"), posexplode(
+        graft.functions.Signatures.bandKeysCol(minhashSig(col("sh")), Bands, Rows)))
       .toDF("doc_id", "band", "bkey")
-  }
 
   /** LSH band + verify over any `(doc_id, sh: array<string>)` frame — shared
     * by the text path above and the token-table path
@@ -198,8 +197,7 @@ object TextOps {
       .join(docs.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
       .join(docs.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
-        round(size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))), 6).as("jaccard"))
+        graft.functions.Signatures.setJaccardCol(col("sh_a"), col("sh_b")).as("jaccard"))
     verified.filter(col("jaccard") >= threshold)
   }
 

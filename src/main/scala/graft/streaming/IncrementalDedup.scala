@@ -20,7 +20,9 @@ import graft.operators.{CorpusOps, TextOps}
   *     (new↔new) and equi-joined against the persistent band index
   *     (new↔existing). Band equi-joins, never a scan of old documents.
   *  2. exact-Jaccard verification of candidates only (shingle sets fetched
-  *     by id equi-join — AQE broadcasts the candidate side).
+  *     by id equi-join — AQE broadcasts the candidate side), scored by the
+  *     native one-pass set-Jaccard kernel
+  *     ([[graft.functions.Signatures.setJaccardCol]]).
   *  3. cluster merge WITHOUT whole-corpus connected components: every
   *     existing endpoint is COLLAPSED to its current cluster representative
   *     (unlabelled docs represent themselves), and the contraction runs on
@@ -96,11 +98,10 @@ class IncrementalDedup(threshold: Double = 0.5, k: Int = 3) {
     * batchId like [[LakeSink]] does — or use [[DurableIncrementalDedup]],
     * which gates internally). */
   def addBatch(batch: DataFrame): BatchStats = {
-    // the no-arg localCheckpoint() is EAGER in Spark 4.1.2 (it calls
-    // checkpoint(eager = true, reliable = false)): one job materializes
-    // the frame, and the count is a second job over the checkpointed blocks
+    // LAZY checkpoint (the no-arg localCheckpoint() is eager): the count
+    // is the one job, and it materializes the checkpoint blocks as it goes
     val (newShingles, nNew) = labeled(batch, "dedup: shingle batch") {
-      val df = shinglesOf(batch, k).localCheckpoint()
+      val df = shinglesOf(batch, k).localCheckpoint(false)
       (df, df.count()) }
     // EAGER on purpose: the candidate self-join reads this table on three
     // legs — a lazy checkpoint would recompute the signature pass per leg
@@ -114,12 +115,14 @@ class IncrementalDedup(threshold: Double = 0.5, k: Int = 3) {
     // filtered) — the separate candidate checkpoint bought only the nCands
     // stat, which the scored frame still carries; one fewer materialized
     // frame ≈ 3-4 fewer scheduled jobs per microbatch. Both stats come from
-    // ONE aggregate over the (eagerly) checkpointed frame (count +
-    // conditional count), erasing the separate verified.count() job.
+    // ONE aggregate (count + conditional count) over the lazily checkpointed
+    // frame, erasing the separate verified.count() job; the aggregate's job
+    // also stores the checkpoint blocks, so no separate job materializes
+    // the frame (the eager form ran one more job per batch).
     val allSh = shinglesState.fold(newShingles)(_.union(newShingles))
     val (scored, nCands, nVerified) = labeled(batch, "dedup: candidate+verify") {
       val df = scoredPairs(candidatePairs(newBands, bandsState), allSh,
-        threshold).localCheckpoint()
+        threshold).localCheckpoint(false)
       val s = df.agg(count(lit(1)), count(when(col("ok"), true))).head()
       (df, s.getLong(0), s.getLong(1)) }
     val verified = scored.filter(col("ok")).select("id_a", "id_b")
@@ -135,7 +138,7 @@ class IncrementalDedup(threshold: Double = 0.5, k: Int = 3) {
     if (nVerified > 0) {
       labeled(batch, "dedup: label merge")(labelMerge(verified, labelsState)) match {
         case Some(m) =>
-          nNodes = m.nNodes; nTouched = touchedReps(m.comp, labelsState)
+          nNodes = m.nNodes; nTouched = m.nTouchedReps
           rounds = m.ccRounds
           val prev = labelsState
           labelsState = Some(labeled(batch, "dedup: label merge") {
@@ -231,43 +234,51 @@ object IncrementalDedup {
     * equi-join; emits `(id_a, id_b, ok)` with the threshold verdict as a
     * flag instead of a filter, so ONE candidate-sized materialization
     * serves both the nCandidatePairs stat and the verified set.
-    * round(,6) BEFORE the threshold compare — identical to the batch path,
-    * so a boundary pair never flips between the two. */
+    * round(,6) BEFORE the threshold compare — the same set-Jaccard kernel
+    * as the batch path, so a boundary pair never flips between the two. */
   private[streaming] def scoredPairs(cands: DataFrame, allSh: DataFrame,
                                      threshold: Double): DataFrame =
     cands
       .join(allSh.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
       .join(allSh.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
-        (round(size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))), 6) >= threshold).as("ok"))
+        (graft.functions.Signatures.setJaccardCol(col("sh_a"), col("sh_b")) >= threshold)
+          .as("ok"))
 
   /** Result of the rep-collapsed contraction: `nextLabels` is a PLAN
     * (caller materializes — checkpoint or lake write), `comp` and `scratch`
     * are checkpointed batch-scoped frames the caller must [[release]] after
-    * materializing `nextLabels`. */
-  private[streaming] final case class LabelMerge(
+    * materializing `nextLabels`. `nTouchedReps` counts the contraction
+    * nodes that were existing cluster reps. */
+  private[graft] final case class LabelMerge(
       nextLabels: DataFrame, comp: DataFrame, scratch: Seq[DataFrame],
-      nNodes: Long, ccRounds: Int)
+      nNodes: Long, nTouchedReps: Long, ccRounds: Int)
 
   /** Collapse verified-pair endpoints to their current reps, run connected
     * components on the batch-sized contraction, and patch the label table.
     * None when the collapsed graph is empty (all pairs internal to existing
     * clusters). */
-  private[streaming] def labelMerge(verified: DataFrame,
-                                    labelsState: Option[DataFrame]): Option[LabelMerge] = {
+  private[graft] def labelMerge(verified: DataFrame,
+                                labelsState: Option[DataFrame]): Option[LabelMerge] = {
     // collapse existing endpoints to their current reps (docs without a
-    // label row — new docs and old singletons — represent themselves)
-    val collapsed = labelsState.fold(verified) { lbl =>
+    // label row — new docs and old singletons — represent themselves).
+    // `is_rep_x`: the endpoint collapsed from a label row, so its node is an
+    // existing rep. Every rep has its own label row, so the flag is a
+    // function of the node: deduplicating on the edge alone loses nothing
+    // (and keeps a plain edge distinct's partitioning, hence the committed
+    // label files), and nTouchedReps comes from the collected edges
+    val collapsed = labelsState.fold(verified.select(col("id_a"), col("id_b"),
+        lit(false).as("is_rep_a"), lit(false).as("is_rep_b"))) { lbl =>
       verified
         .join(lbl.select(col("doc_id").as("id_a"), col("rep").as("rep_a")),
           Seq("id_a"), "left")
         .join(lbl.select(col("doc_id").as("id_b"), col("rep").as("rep_b")),
           Seq("id_b"), "left")
         .select(coalesce(col("rep_a"), col("id_a")).as("id_a"),
-          coalesce(col("rep_b"), col("id_b")).as("id_b"))
-    }.filter(col("id_a") =!= col("id_b")).distinct()
-      .localCheckpoint() // eager: one job here, the count below is a second
+          coalesce(col("rep_b"), col("id_b")).as("id_b"),
+          col("rep_a").isNotNull.as("is_rep_a"), col("rep_b").isNotNull.as("is_rep_b"))
+    }.filter(col("id_a") =!= col("id_b")).dropDuplicates("id_a", "id_b")
+      .localCheckpoint(false) // lazy: the count below materializes it
     // the contraction graph is batch-sized BY CONSTRUCTION (endpoints are
     // batch docs ∪ touched reps — the property StreamingSpec asserts), so
     // its node count and components come from ONE bounded collect + driver
@@ -278,13 +289,17 @@ object IncrementalDedup {
     // enough to ride plans as a broadcast; past it, the distributed loop
     val localLimit = 1L << 18
     val nEdges = collapsed.count()
-    val longIds = collapsed.schema.fields.forall(
-      _.dataType == org.apache.spark.sql.types.LongType)
+    val longIds = Seq("id_a", "id_b").forall(
+      collapsed.schema(_).dataType == org.apache.spark.sql.types.LongType)
     if (nEdges == 0) { release(collapsed); None }
     else if (nEdges <= localLimit && longIds) {
       val spark = collapsed.sparkSession
       import spark.implicits._
-      val edges = collapsed.collect().map(r => (r.getLong(0), r.getLong(1)))
+      val rows = collapsed.collect()
+      val edges = rows.map(r => (r.getLong(0), r.getLong(1)))
+      val nTouched = rows.iterator
+        .flatMap(r => Iterator(r.getLong(0) -> r.getBoolean(2), r.getLong(1) -> r.getBoolean(3)))
+        .collect { case (v, true) => v }.toSet.size.toLong
       val parent = new java.util.HashMap[Long, Long](edges.length * 2)
       def find(x: Long): Long = {
         var r = x
@@ -304,14 +319,16 @@ object IncrementalDedup {
       // LocalRelation — joins against it broadcast; nothing to release
       val comp = nodes.map(v => (v, find(v))).toSeq.toDF("node", "new_rep")
       val nextLabels = patchLabels(comp, labelsState)
-      Some(LabelMerge(nextLabels, comp, Seq(collapsed), nodes.length.toLong, 0))
+      Some(LabelMerge(nextLabels, comp, Seq(collapsed), nodes.length.toLong,
+        nTouched, 0))
     } else {
-      val nNodes = collapsed.select(explode(array(col("id_a"), col("id_b"))))
+      val edges = collapsed.select("id_a", "id_b")
+      val nNodes = edges.select(explode(array(col("id_a"), col("id_b"))))
         .distinct().count()
-      val (comp0, rounds) = CorpusOps.connectedComponentsWithRounds(collapsed)
+      val (comp0, rounds) = CorpusOps.connectedComponentsWithRounds(edges)
       val comp = comp0.toDF("node", "new_rep").localCheckpoint(true)
       Some(LabelMerge(patchLabels(comp, labelsState), comp,
-        Seq(collapsed, comp), nNodes, rounds))
+        Seq(collapsed, comp), nNodes, touchedReps(comp, labelsState), rounds))
     }
   }
 
@@ -334,8 +351,11 @@ object IncrementalDedup {
         comp.select(col("node").as("doc_id"), col("new_rep").as("rep"))
     }
 
-  private[streaming] def touchedReps(comp: DataFrame,
-                                     labelsState: Option[DataFrame]): Long =
+  /** Contraction nodes that are existing cluster reps, by join — the
+    * distributed fallback's count (the local path reads it off the
+    * collapsed edges). */
+  private[graft] def touchedReps(comp: DataFrame,
+                                 labelsState: Option[DataFrame]): Long =
     labelsState.fold(0L)(lbl =>
       comp.join(lbl.select(col("rep").as("node")).distinct(), Seq("node"))
         .count())
@@ -452,7 +472,7 @@ class DurableIncrementalDedup(spark: SparkSession, lakePath: String,
       return BatchStats(0L, 0L, 0L, 0L, 0L, 0)
     val scratch = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val (newShingles, nNew) = labeled(batch, "durdedup: shingle batch") {
-      val df = shinglesOf(batch, k).localCheckpoint() // eager, then count: 2 jobs
+      val df = shinglesOf(batch, k).localCheckpoint(false) // lazy: the count is the 1 job
       (df, df.count()) }
     // EAGER (the in-memory twin's rationale): three join legs read it
     val newBands = labeled(batch, "durdedup: band batch") {
@@ -467,7 +487,7 @@ class DurableIncrementalDedup(spark: SparkSession, lakePath: String,
       val allSh = readState(shingleSink).fold(newShingles)(_.union(newShingles))
       val (scored, nCands, nVerified) = labeled(batch, "durdedup: candidate+verify") {
         val df = scoredPairs(candidatePairs(newBands, readState(bandSink)),
-          allSh, threshold).localCheckpoint() // eager, then agg: 2 jobs
+          allSh, threshold).localCheckpoint(false) // lazy: the agg materializes it
         val s = df.agg(count(lit(1)), count(when(col("ok"), true))).head()
         (df, s.getLong(0), s.getLong(1)) }
       scratch += scored
@@ -478,7 +498,7 @@ class DurableIncrementalDedup(spark: SparkSession, lakePath: String,
         labeled(batch, "durdedup: label merge")(labelMerge(verified, labelsState))
           .foreach { m =>
           stats = stats.copy(nGraphNodes = m.nNodes,
-            nTouchedReps = touchedReps(m.comp, labelsState), ccRounds = m.ccRounds)
+            nTouchedReps = m.nTouchedReps, ccRounds = m.ccRounds)
           // full current table = this generation's rows; the manifest
           // commit is atomic, so a crash mid-write never becomes "current"
           labeled(batch, "durdedup: commit labels") {

@@ -47,6 +47,11 @@ object Bridge {
   def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
     s.asNullable
 
+  /** The error a `Divide` by zero raises under ANSI evaluation
+    * (`QueryExecutionErrors` is `private[sql]`). */
+  def divideByZeroError(): ArithmeticException =
+    org.apache.spark.sql.errors.QueryExecutionErrors.divideByZeroError(null)
+
   /** Never-throwing variant for cleanup paths (iterative operators,
     * streaming state maintenance) — a failed release is a leak, not an
     * error worth failing the job for. */

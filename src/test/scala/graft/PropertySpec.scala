@@ -10,9 +10,46 @@ import graft.functions.{TokenCodec, Uuid5, XapiEquivalent}
   * id derivation, and equivalence relations. */
 class PropertySpec extends SparkSuite {
 
-  private def check(prop: Prop): Unit = {
-    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(200), prop)
+  private def check(prop: Prop, minSuccessful: Int = 200): Unit = {
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(minSuccessful), prop)
     assert(res.passed, res.status.toString)
+  }
+
+  /** `rows` as a frame over an RDD, so the projection on top runs in
+    * whole-stage codegen (a local relation would be folded by the
+    * optimizer with interpreted `eval`). */
+  private def rddFrame(rows: Seq[org.apache.spark.sql.Row],
+                       schema: org.apache.spark.sql.types.StructType) =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+
+  /** The builtin composition the set-Jaccard kernel replaces. */
+  private def builtinJaccard(a: org.apache.spark.sql.Column,
+                             b: org.apache.spark.sql.Column) = {
+    import org.apache.spark.sql.functions._
+    round(size(array_intersect(a, b)).cast("double") / size(array_union(a, b)), 6)
+  }
+
+  /** Run `body` with generated code only: a codegen compile error then
+    * fails the test instead of silently falling back to `eval`. */
+  private def codegenOnly[T](body: => T): T = {
+    val keys = Seq("spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+    val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Equality of two nullable doubles down to the bit pattern. */
+  private def sameDouble(a: Any, b: Any): Boolean = (a, b) match {
+    case (null, null) => true
+    case (x: Double, y: Double) =>
+      java.lang.Double.doubleToRawLongBits(x) == java.lang.Double.doubleToRawLongBits(y)
+    case _ => false
   }
 
   private val unicodeText: Gen[String] =
@@ -242,5 +279,138 @@ class PropertySpec extends SparkSuite {
       out.length <= s.length && (l != r || noPair) &&
         (if (l != r) noPair else true)
     })
+  }
+
+  test("set-Jaccard edge values: pinned builtin values, matched by the kernel") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types._
+    val at = ArrayType(StringType, containsNull = true)
+    val schema = StructType(Seq(StructField("a", at), StructField("b", at)))
+    // (a, b, the builtin's value in the engine session: ANSI off)
+    val cases: Seq[(Seq[String], Seq[String], java.lang.Double)] = Seq(
+      (Seq("x", "x", "y"), Seq("x"), 0.5),         // duplicates count once
+      (Seq("a", "b", "c"), Seq("c", "b", "a", "a"), 1.0),
+      (Seq("a", "b", "c"), Seq("a"), 0.333333),    // HALF_UP at 6 places
+      (Seq("a", "b", "c"), Seq("a", "b"), 0.666667),
+      (Seq("日本 語", "é"), Seq("é", "z"), 0.333333),
+      (Seq.empty, Seq("x"), 0.0),
+      (Seq.empty, Seq.empty, null),                // 0 / 0
+      (null, Seq("x"), 1.0),                       // legacy size(null) = -1:
+      (null, Seq.empty, 1.0),                      // -1 / -1
+      (null, null, 1.0),
+      (Seq(null, "x"), Seq(null), 0.5),            // null is one more value
+      (Seq(null, null), Seq.empty, 0.0))
+    val got = rddFrame(cases.map { case (a, b, _) => Row(a, b) }, schema)
+      .select(builtinJaccard(col("a"), col("b")),
+        graft.functions.Signatures.setJaccardCol(col("a"), col("b")))
+      .collect()
+    got.zip(cases).foreach { case (r, (a, b, want)) =>
+      assert(sameDouble(r.get(0), want), s"builtin on ($a, $b)")
+      assert(sameDouble(r.get(1), want), s"kernel on ($a, $b)")
+    }
+
+    // under ANSI evaluation size(null) is null and 0 / 0 raises; the
+    // kernel captures the mode at construction, like the builtins
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      def both(a: Seq[String], b: Seq[String]) =
+        rddFrame(Seq(Row(a, b)), schema).select(
+          builtinJaccard(col("a"), col("b")).as("builtin"),
+          graft.functions.Signatures.setJaccardCol(col("a"), col("b")).as("kernel"))
+      val r = both(null, Seq("x")).head()
+      assert(r.isNullAt(0) && r.isNullAt(1))
+      val empty = both(Seq.empty, Seq.empty)
+      empty.columns.foreach { c =>
+        val e = intercept[Exception](empty.select(c).collect())
+        assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .exists(_.getMessage.contains("DIVIDE_BY_ZERO")), s"$c: $e")
+      }
+    } finally spark.conf.set("spark.sql.ansi.enabled", "false")
+  }
+
+  test("set-Jaccard kernel equals round(size(array_intersect)/size(array_union), 6)") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.functions.{SetJaccardExpr, Signatures}
+
+    // a small alphabet makes shared elements and duplicates frequent;
+    // non-ASCII and empty strings ride along, null elements occasionally
+    val elem: Gen[String] = Gen.frequency(
+      12 -> Gen.oneOf("a b c", "b c d", "c d e", "x", "y", "", "日本 語", "é ü", "😀 z"),
+      1 -> Gen.const(null: String))
+    val arr: Gen[Seq[String]] = Gen.frequency(
+      6 -> Gen.listOf(elem).map(_.take(12)),
+      2 -> Gen.const(Seq.empty[String]),
+      1 -> Gen.const(null: Seq[String]))
+    val pair: Gen[(Seq[String], Seq[String])] = Gen.frequency(
+      5 -> Gen.zip(arr, arr),
+      1 -> arr.map(a => (a, a)),                                   // identical
+      1 -> arr.map(a => (a, if (a == null) null else a.reverse ++ a)), // same set, dups
+      1 -> Gen.zip(arr, arr).map { case (a, b) =>                  // disjoint
+        (a, if (b == null) null else b.map(x => if (x == null) x else x + "#")) })
+    val at = ArrayType(StringType, containsNull = true)
+    val schema = StructType(Seq(StructField("a", at), StructField("b", at)))
+    val kernel = SetJaccardExpr(BoundReference(0, at, nullable = true),
+      BoundReference(1, at, nullable = true))
+    def arrayData(xs: Seq[String]): Any =
+      if (xs == null) null
+      else new GenericArrayData(xs.map(x => if (x == null) null else UTF8String.fromString(x)).toArray[Any])
+
+    codegenOnly(check(forAll(Gen.listOfN(40, pair)) { pairs =>
+      val df = rddFrame(pairs.map { case (a, b) => Row(a, b) }, schema)
+      val got = df.select(builtinJaccard(col("a"), col("b")).as("builtin"),
+          Signatures.setJaccardCol(col("a"), col("b")).as("codegen"))
+        .collect()
+      got.length == pairs.length && got.zip(pairs).forall { case (r, (a, b)) =>
+        val interpreted = kernel.eval(InternalRow(arrayData(a), arrayData(b)))
+        sameDouble(r.get(0), r.get(1)) && sameDouble(r.get(0), interpreted)
+      }
+    }, minSuccessful = 25))
+  }
+
+  test("band-key kernel equals xxhash64(concat_ws) over every band slice") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types._
+    import graft.functions.{BandKeysExpr, Signatures}
+    import graft.operators.TextOps.{Bands, Rows}
+
+    val value: Gen[java.lang.Long] = Gen.frequency(
+      4 -> Gen.chooseNum(Long.MinValue, Long.MaxValue).map(Long.box),
+      2 -> Gen.chooseNum(-1000L, 2147483647L).map(Long.box),
+      1 -> Gen.oneOf(Long.MinValue, Long.MaxValue, 0L, -1L, 1L, -10L, 10L).map(Long.box),
+      1 -> Gen.const(null: java.lang.Long))
+    val sig: Gen[Seq[java.lang.Long]] = Gen.frequency(
+      6 -> Gen.listOfN(Bands * Rows, value),      // a full signature
+      2 -> Gen.listOf(value).map(_.take(Bands * Rows + 3)), // short or long
+      1 -> Gen.const(null: Seq[java.lang.Long]))
+    val st = ArrayType(LongType, containsNull = true)
+    val schema = StructType(Seq(StructField("sig", st)))
+    val kernel = BandKeysExpr(BoundReference(0, st, nullable = true), Bands, Rows)
+    val builtin = array((0 until Bands).map(b =>
+      xxhash64(concat_ws("_", lit(b), slice(col("sig"), b * Rows + 1, Rows)))): _*)
+
+    codegenOnly(check(forAll(Gen.listOfN(20, sig)) { sigs =>
+      val got = rddFrame(sigs.map(Row(_)), schema)
+        .select(builtin.as("builtin"),
+          Signatures.bandKeysCol(col("sig"), Bands, Rows).as("codegen"))
+        .collect()
+      got.length == sigs.length && got.zip(sigs).forall { case (r, s) =>
+        val want = r.getSeq[Long](0)
+        val in = if (s == null) null else new GenericArrayData(s.toArray[Any])
+        val interpreted = kernel.eval(InternalRow(in)).asInstanceOf[
+          org.apache.spark.sql.catalyst.util.ArrayData].toLongArray().toSeq
+        want == r.getSeq[Long](1) && want == interpreted
+      }
+    }, minSuccessful = 25))
   }
 }

@@ -835,6 +835,60 @@ class StreamingSpec extends SparkSuite {
       viaMem.as[(Long, Long)].collect().toSet)
   }
 
+  test("incremental dedup job census: pinned per-batch job counts, in-memory and durable") {
+    import graft.streaming.{DurableIncrementalDedup, IncrementalDedup}
+    val bChanges = Seq(3 -> "b3", 7 -> "b7", 11 -> "b11", 15 -> "b15", 19 -> "b19")
+    // batch 0 founds clusters A and B; batch 1 merges into A (and adds new
+    // clusters); batch 2 bridges A and B — both later batches collapse
+    // endpoints onto existing reps
+    val batches: Seq[Seq[(Long, String)]] = Seq(
+      Seq(0L -> dedupDoc(), 1L -> dedupDoc(25 -> "a1x"),
+        2L -> dedupDoc(bChanges: _*), 3L -> dedupDoc(bChanges :+ (23 -> "b23"): _*),
+        4L -> saltedDoc("s0w"), 5L -> saltedDoc("s1w")),
+      Seq(6L -> dedupDoc(21 -> "a2x"), 7L -> saltedDoc("s0w", 25 -> "d0x"),
+        8L -> saltedDoc("e0w"), 9L -> saltedDoc("e0w", 25 -> "e1x"),
+        10L -> saltedDoc("fw")),
+      Seq(11L -> dedupDoc(3 -> "b3", 7 -> "b7")))
+
+    val mem = new IncrementalDedup(threshold = 0.5)
+    val memStats = scala.collection.mutable.ArrayBuffer.empty[IncrementalDedup.BatchStats]
+    val memJobs = batches.map(b => jobsIn { memStats += mem.addBatch(b.toDF("doc_id", "text")) })
+    val dur = new DurableIncrementalDedup(spark, tmp("censuslake"), threshold = 0.5)
+    val durStats = scala.collection.mutable.ArrayBuffer.empty[IncrementalDedup.BatchStats]
+    val durJobs = batches.zipWithIndex.map { case (b, i) =>
+      jobsIn { durStats += dur.addBatch(i.toLong, b.toDF("doc_id", "text")) } }
+    // the fixture exercises what the counts cover: merges into existing
+    // clusters on both later batches, on the local union-find path
+    assert(memStats.map(_.nTouchedReps) === Seq(0L, 1L, 2L))
+    assert(durStats === memStats)
+    assert(memJobs === Seq(13L, 16L, 17L), "in-memory jobs per batch")
+    assert(durJobs === Seq(21L, 25L, 26L), "durable jobs per batch")
+  }
+
+  test("incremental dedup: touched-rep count from the collapsed edges equals the label join") {
+    import graft.streaming.IncrementalDedup
+    // clusters {10, 11, 12} (rep 10) and {20, 21} (rep 20); verified pairs
+    // reach cluster 10 through non-rep members (11, 12) AND through the rep
+    // itself (10), cluster 20 through a non-rep (21) only; one pair is
+    // internal to cluster 10 and one joins two new docs
+    val labels = Seq(10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L)
+      .toDF("doc_id", "rep")
+    val verified = Seq(11L -> 30L, 10L -> 31L, 12L -> 21L, 21L -> 32L,
+      11L -> 12L, 33L -> 34L).toDF("id_a", "id_b")
+    val m = IncrementalDedup.labelMerge(verified, Some(labels)).get
+    try {
+      assert(m.ccRounds === 0, "expected the local union-find path")
+      assert(m.nTouchedReps === IncrementalDedup.touchedReps(m.comp, Some(labels)))
+      assert(m.nTouchedReps === 2L)
+      assert(m.nNodes === 7L) // 10, 20, 30, 31, 32, 33, 34
+      // no label table yet: nothing can be a touched rep
+      val first = IncrementalDedup.labelMerge(verified, None).get
+      assert(first.nTouchedReps === 0L &&
+        IncrementalDedup.touchedReps(first.comp, None) === 0L)
+      first.scratch.foreach(IncrementalDedup.release)
+    } finally m.scratch.foreach(IncrementalDedup.release)
+  }
+
   test("readGeneration reads exactly one segment and fails loudly after compaction") {
     import graft.streaming.LakeSink
     import spark.implicits._
