@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
-/** Job-level profile of the ANN query family — same listener shape as
-  * [[ReplayProfile]]: per-query job count and summed job wall time vs
+/** Job-level profile of the ANN query family: per-query job count and
+  * summed job wall time vs
   * total wall, isolating driver-side fixed costs (planning, codebook
   * collects, index write commits) from executor work. Args: [sfDir]
   * [comma-separated query names, default the 6 ANN queries]. */

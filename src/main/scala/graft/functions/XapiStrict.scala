@@ -1,12 +1,6 @@
 package graft.functions
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.{Bridge => ExpressionUtils}
-import org.apache.spark.sql.types.{BooleanType, DataType}
-import org.apache.spark.unsafe.types.UTF8String
+import com.fasterxml.jackson.databind.JsonNode
 
 /** Strict cross-field xAPI statement rules that need a raw-JSON walk (they
   * operate on the document BEFORE schema projection, like the reference's
@@ -23,16 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object XapiStrict {
 
-  private val mapper = new ObjectMapper()
   private val InteractionLists = Set("choices", "scale", "source", "target", "steps")
-
-  def ok(json: String): Boolean = {
-    if (json == null) return false
-    val root =
-      try mapper.readTree(json)
-      catch { case _: Exception => return false }
-    root != null && root.isObject && walk(root)
-  }
 
   /** Entry point over an already-parsed tree (used by the one-parse
     * whole-row xAPI verdict). */
@@ -65,21 +50,4 @@ object XapiStrict {
     }
     true
   }
-
-  /** Static entry point for generated code. */
-  def okJ(s: UTF8String): Boolean = s != null && ok(s.toString)
-
-  def xapiStrict(stmtJson: Column): Column =
-    ExpressionUtils.column(XapiStrictExpr(ExpressionUtils.expression(stmtJson)))
-}
-
-case class XapiStrictExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "xapi_strict"
-  override protected def nullSafeEval(v: Any): Any =
-    XapiStrict.okJ(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.XapiStrict.okJ($c)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }

@@ -54,10 +54,4 @@ object ZOrder {
       Bridge.expression((v - lit(min)) * lit(65535L)),
       Bridge.expression(lit(max - min))))
   }
-
-  /** The scaled bucket span one 16-bit cell covers in original units,
-    * rounded up — used by readers to convert a value predicate into a
-    * conservative cell predicate. */
-  def cellWidth(min: Long, max: Long): Long =
-    if (max == min) 1L else ((max - min) + 65534L) / 65535L
 }

@@ -409,17 +409,4 @@ object BpeTrainer {
       .agg(count(lit(1)).as("n_docs"), sum("ok").as("n_ok"),
         sum("orig").cast("long").as("orig_tokens"))
   }
-
-  /** Reduction in corpus token count per learned merge — the audit a
-    * tokenizer build reports. `count` is the adjacent-pair count at merge
-    * time, an upper bound on tokens removed (overlapping runs like `aaa`
-    * count two pairs but merge once); measure the exact ratio from the
-    * returned corpus sizes. */
-  def compressionReport(merges: Seq[Merge], originalTokens: Long): Seq[(Int, Long, Double)] = {
-    var remaining = originalTokens
-    merges.map { m =>
-      remaining -= m.count
-      (m.newId, m.count, remaining.toDouble / originalTokens)
-    }
-  }
 }

@@ -158,22 +158,4 @@ object Synth {
       }
     }.toDF()
   }
-
-  /** Actor-profile side stream for the stateful stream-stream join (J3):
-    * (actor_key, name, cohort, updated_at). One update per user per epoch,
-    * cadence interleaved with statement timestamps. */
-  def profileTable(spark: SparkSession, nUsers: Int, epochs: Int): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val rows = for {
-      e <- 0 until epochs
-      u <- 0 until nUsers
-    } yield {
-      val us = baseEpochMicros + e.toLong * 600_000_000L + Math.floorMod(mix(u.toLong, e + 41L), 1_000_000L)
-      (u.toString, s"name-$u", s"cohort-${Math.floorMod(mix(u.toLong, e + 43L), 5L)}",
-        new java.sql.Timestamp(us / 1000L))
-    }
-    rows.toDF("actor_key", "p_name", "cohort", "updated_at")
-      .withColumn("updated_at", $"updated_at".cast("timestamp"))
-  }
 }

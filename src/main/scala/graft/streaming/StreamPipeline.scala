@@ -241,11 +241,4 @@ object StreamPipeline {
     }
     healed.toSeq.sorted
   }
-
-  /** Late-tolerant landing: no stateful operator in the path, dedup wholly
-    * at the merge sink — use when late arrivals must be preserved. */
-  def runLateTolerant(input: DataFrame, sinkPath: String, checkpoint: String): StreamingQuery = {
-    val sink = new LakeSink(sinkPath)
-    toLake(statements(input), sink, checkpoint).start()
-  }
 }

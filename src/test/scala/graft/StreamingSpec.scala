@@ -835,6 +835,55 @@ class StreamingSpec extends SparkSuite {
       viaMem.as[(Long, Long)].collect().toSet)
   }
 
+  test("durable incremental dedup: both partial-commit crash windows replay to the uncrashed run") {
+    import graft.streaming.DurableIncrementalDedup
+    import scala.jdk.CollectionConverters._
+    val founding = Seq(0L -> dedupDoc(), 1L -> dedupDoc(25 -> "a1x"), 4L -> saltedDoc("s0w"))
+    // changes labels: 6 joins cluster 0, 7 pairs the singleton 4
+    val merging = Seq(6L -> dedupDoc(21 -> "a2x"), 7L -> saltedDoc("s0w", 25 -> "d0x"))
+    // no verified pair, but a candidate (jaccard 0.400): on replay its bands
+    // are already in the index, so the new↔old join re-yields the pair
+    val pairless = Seq(20L -> saltedDoc("pw"),
+      21L -> saltedDoc("pw", 3 -> "q3", 7 -> "q7", 11 -> "q11", 15 -> "q15"))
+    val later = Seq(22L -> saltedDoc("pw", 25 -> "px")) // near-dup of 20
+    val batches = Seq(founding, merging, pairless, later)
+    def open(lake: String) = new DurableIncrementalDedup(spark, lake, threshold = 0.5)
+    def labelsOf(lake: String) = open(lake).labels.as[(Long, Long)].collect().toSet
+    // a crash between two commits: the last manifest entry never landed
+    def dropLastCommit(sink: String): Unit = {
+      val p = java.nio.file.Paths.get(sink, "_manifest.jsonl")
+      val lines = Files.readAllLines(p).asScala.filter(_.nonEmpty)
+      Files.write(p, lines.init.asJava); ()
+    }
+
+    val ref = tmp("crashref")
+    val want = batches.zipWithIndex.map { case (b, i) =>
+      open(ref).addBatch(i.toLong, b.toDF("doc_id", "text")) }
+    assert(want(1).nVerifiedPairs > 0 && want(2).nVerifiedPairs === 0L &&
+      want(2).nCandidatePairs > 0 && want(3).nVerifiedPairs > 0)
+
+    val lake = tmp("crashlake")
+    open(lake).addBatch(0L, founding.toDF("doc_id", "text"))
+    open(lake).addBatch(1L, merging.toDF("doc_id", "text"))
+    val afterMerge = labelsOf(lake)
+    // (a) labels committed, bands and shingles not: the label recompute is
+    // skipped and only the deltas land
+    dropLastCommit(s"$lake/shingles"); dropLastCommit(s"$lake/bands")
+    val a = open(lake).addBatch(1L, merging.toDF("doc_id", "text"))
+    assert(a.nVerifiedPairs === 0L && a.nNewDocs === want(1).nNewDocs)
+    assert(labelsOf(lake) === afterMerge)
+
+    // (b) bands committed, shingles not: full recompute with the batch's own
+    // bands already in the index — stats exactly as uncrashed
+    open(lake).addBatch(2L, pairless.toDF("doc_id", "text"))
+    dropLastCommit(s"$lake/shingles")
+    assert(open(lake).addBatch(2L, pairless.toDF("doc_id", "text")) === want(2))
+
+    // the replayed state serves the next batch like the uncrashed one
+    assert(open(lake).addBatch(3L, later.toDF("doc_id", "text")) === want(3))
+    assert(labelsOf(lake) === labelsOf(ref))
+  }
+
   test("incremental dedup job census: pinned per-batch job counts, in-memory and durable") {
     import graft.streaming.{DurableIncrementalDedup, IncrementalDedup}
     val bChanges = Seq(3 -> "b3", 7 -> "b7", 11 -> "b11", 15 -> "b15", 19 -> "b19")
