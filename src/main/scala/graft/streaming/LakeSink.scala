@@ -6,9 +6,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.format.{FileMetaData, SchemaElement, Type => PType, Util}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -41,9 +39,16 @@ import org.apache.spark.util.sketch.BloomFilter
   *    bloom-stats analogue). False positives only cost anti-join input —
   *    correctness comes from the join.
   *
-  * Every row carries per-partition lineage columns `_batch_id`/`_part_id`,
-  * and each commit records row counts — computed from the in-memory batch
-  * on the way in, never by re-reading the files just written.
+  * Every row carries lineage columns `_batch_id` and `_part_id`: the
+  * `spark_partition_id()` of the partition that produced it (0 for every
+  * row of a frame Catalyst folded into a LocalRelation, however many tasks
+  * write it). Like an Iceberg append, a commit takes its row counts, the
+  * per-part `_metrics` line, the event-time range and the zone stats from
+  * the footers of the files its write just produced — the write is the
+  * commit's only Spark action, with no cache of the batch. When a needed
+  * footer stat is missing (INT96 timestamps, a writer that records no
+  * stats) the commit runs one aggregate over those files instead, never a
+  * second action on the incoming frame.
   *
   * A manifest entry (one JSON line of `_manifest.jsonl`, [[LakeSink
   * .entryJson]]) holds: `batch` (segment id; negative for a compacted
@@ -141,8 +146,8 @@ class LakeSink(val path: String) extends Serializable {
     * the given integral columns in the manifest entry — the Iceberg
     * column-stats analogue generalizing the event-time range: readers with
     * a null-rejecting range predicate skip whole committed segments via
-    * [[readPruned]] without opening a single file. Computed in the SAME
-    * one-pass per-partition aggregate the lineage metrics already pay. */
+    * [[readPruned]] without opening a single file. Taken from the same
+    * footers as the lineage metrics (or the same fallback aggregate). */
   def addBatchStats(batchId: Long, df: DataFrame,
                     statCols: Seq[String], tsCol: String = "ts"): Boolean =
     addBatchTracked(batchId, df, None,
@@ -167,53 +172,28 @@ class LakeSink(val path: String) extends Serializable {
     val withLineage = df
       .withColumn("_batch_id", lit(batchId))
       .withColumn("_part_id", spark_partition_id())
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val fingerprint = LakeSink.schemaFingerprint(withLineage.schema)
-    try {
-      withLineage.write.mode("overwrite").parquet(dir) // retry-safe rewrite
-      // per-partition lineage metrics + event-time range: ONE pass over the
-      // cached batch (north rule: "every microbatch emits per-partition
-      // lineage and metrics")
-      val ts = tsCol.filter(withLineage.columns.contains)
-      val aggCols = Seq(count(lit(1)).as("n")) ++ ts.toSeq.flatMap { c =>
-        val m = unix_micros(col(c).cast("timestamp"))
-        Seq(min(m).as("min_ts"), max(m).as("max_ts"))
-      } ++ zcols.flatMap { c =>
-        Seq(min(col(c).cast("long")).as(s"min_zs_$c"),
-          max(col(c).cast("long")).as(s"max_zs_$c"))
-      }
-      val perPart = withLineage.groupBy("_part_id").agg(aggCols.head, aggCols.tail: _*)
-        .collect()
-      val rows = perPart.map(_.getAs[Long]("n")).sum
-      val range = ts.flatMap { _ =>
-        val mins = perPart.flatMap(r => Option(r.getAs[java.lang.Long]("min_ts")).map(_.toLong))
-        val maxs = perPart.flatMap(r => Option(r.getAs[java.lang.Long]("max_ts")).map(_.toLong))
-        if (mins.isEmpty) None else Some((mins.min, maxs.max))
-      }
-      // all-null columns record no stat (entry stays a read candidate);
-      // stats over the non-null values are sound for the null-rejecting
-      // range predicates readPruned serves
-      val zstats = zcols.flatMap { c =>
-        val mins = perPart.flatMap(r => Option(r.getAs[java.lang.Long](s"min_zs_$c")).map(_.toLong))
-        val maxs = perPart.flatMap(r => Option(r.getAs[java.lang.Long](s"max_zs_$c")).map(_.toLong))
-        if (mins.isEmpty) None else Some(c -> ((mins.min, maxs.max)))
-      }.toMap
-      idCol.filter(withLineage.columns.contains).foreach { c =>
-        // stat.bloomFilter NPEs on empty input (null aggregate buffer) —
-        // an all-dup batch commits 0 rows and gets an explicit empty bloom
-        val bf =
-          if (rows == 0) BloomFilter.create(1000L, 0.01)
-          else withLineage.stat.bloomFilter(c, math.max(1000L, rows), 0.01)
-        val bos = new ByteArrayOutputStream()
-        bf.writeTo(bos)
-        Files.createDirectories(bloomPath(batchId).getParent)
-        Files.write(bloomPath(batchId), bos.toByteArray)
-      }
-      writeMetrics(batchId, perPart.map(r =>
-        s"""{"part": ${r.get(0)}, "rows": ${r.getAs[Long]("n")}}"""))
-      commit(Committed(batchId, rows, range, covering, zstats, Some(fingerprint)))
-      true
-    } finally { withLineage.unpersist(); () }
+    // retry-safe rewrite, and the commit's only action on `df`: a second
+    // one would rerun a foreachBatch frame's stateful upstream
+    withLineage.write.mode("overwrite").parquet(dir)
+    val ts = tsCol.filter(withLineage.columns.contains)
+    lazy val written = df.sparkSession.read.schema(withLineage.schema).parquet(dir)
+    val w = LakeSink.footerStats(LakeSink.dataFiles(Paths.get(dir)), ts, zcols)
+      .getOrElse(LakeSink.aggregateStats(written, ts, zcols))
+    idCol.filter(withLineage.columns.contains).foreach { c =>
+      // stat.bloomFilter NPEs on empty input (null aggregate buffer) —
+      // an all-dup batch commits 0 rows and gets an explicit empty bloom
+      val bf =
+        if (w.rows == 0) BloomFilter.create(1000L, 0.01)
+        else written.select(c).stat.bloomFilter(c, math.max(1000L, w.rows), 0.01)
+      val bos = new ByteArrayOutputStream()
+      bf.writeTo(bos)
+      Files.createDirectories(bloomPath(batchId).getParent)
+      Files.write(bloomPath(batchId), bos.toByteArray)
+    }
+    writeMetrics(batchId, w.parts.map { case (p, n) => s"""{"part": $p, "rows": $n}""" })
+    commit(Committed(batchId, w.rows, w.range, covering, w.stats, Some(fingerprint)))
+    true
   }
 
   /** Committed batches whose event-time range may contain rows of a batch
@@ -490,7 +470,7 @@ class LakeSink(val path: String) extends Serializable {
     }
   }
 
-  private def writeMetrics(batchId: Long, perPart: Array[String]): Unit = {
+  private def writeMetrics(batchId: Long, perPart: Seq[String]): Unit = {
     Files.createDirectories(Paths.get(path, "_metrics"))
     val line = s"""{"batch": $batchId, "partitions": [${perPart.mkString(",")}]}\n"""
     Files.write(Paths.get(path, "_metrics", s"batch-$batchId.json"),
@@ -585,7 +565,7 @@ class LakeSink(val path: String) extends Serializable {
   private def scan(spark: SparkSession, entries: Seq[Committed],
                    paths: Seq[String]): DataFrame = {
     val footer = entries.map(_.schema).distinct match {
-      case Seq(Some(_)) => footerSchema(spark, entries)
+      case Seq(Some(_)) => footerSchema(entries)
       case _ => None
     }
     footer match {
@@ -595,32 +575,17 @@ class LakeSink(val path: String) extends Serializable {
   }
 
   /** The Spark schema recorded in the footer of ONE data file of the
-    * given segments, read on the driver. None when no segment holds a
-    * parquet file or the footer lacks Spark's row metadata. */
-  private def footerSchema(spark: SparkSession, entries: Seq[Committed]): Option[StructType] = {
-    def dataFile(b: Long): Option[java.nio.file.Path] = {
-      val dir = Paths.get(path, s"batch=$b")
-      if (!Files.isDirectory(dir)) None
-      else {
-        val s = Files.list(dir)
-        try s.iterator().asScala.find { p =>
-          val n = p.getFileName.toString
-          n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-        }
-        finally s.close()
+    * given segments ([[LakeSink.readFooter]], no Spark job). None when no
+    * segment holds a parquet file or the footer lacks Spark's row
+    * metadata. */
+  private def footerSchema(entries: Seq[Committed]): Option[StructType] =
+    entries.iterator.flatMap(e => LakeSink.dataFiles(Paths.get(path, s"batch=${e.batch}")))
+      .nextOption().flatMap(LakeSink.readFooter).flatMap { fm =>
+        Option(fm.getKey_value_metadata).flatMap(_.asScala
+          .find(_.getKey == LakeSink.SparkRowMetadataKey)).map(_.getValue)
       }
-    }
-    entries.iterator.flatMap(e => dataFile(e.batch)).nextOption().flatMap { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new HPath(f.toUri), spark.sessionState.newHadoopConf()))
-      val json =
-        try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
-          .get(LakeSink.SparkRowMetadataKey))
-        finally reader.close()
-      json.flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption)
-        .collect { case s: StructType => s }
-    }
-  }
+      .flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption)
+      .collect { case s: StructType => s }
 
   /** Time travel: the table exactly as it stood when snapshot `version`
     * was archived (i.e. before that compaction). Fails loudly if the
@@ -696,6 +661,154 @@ object LakeSink {
   /** Footer key under which Spark's parquet writer stores the row schema
     * JSON. */
   private val SparkRowMetadataKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** What a commit records about the files its write produced: rows per
+    * `_part_id` (ascending part id), the event-time range and the zone
+    * stats. */
+  private[streaming] final case class Written(parts: Seq[(Long, Long)],
+                                              range: Option[(Long, Long)],
+                                              stats: Map[String, (Long, Long)]) {
+    def rows: Long = parts.map(_._2).sum
+  }
+
+  /** The parquet data files of one segment dir, by name. */
+  private[streaming] def dataFiles(dir: java.nio.file.Path): Seq[java.nio.file.Path] =
+    if (!Files.isDirectory(dir)) Seq.empty
+    else {
+      val s = Files.list(dir)
+      try s.iterator().asScala.filter { p =>
+        val n = p.getFileName.toString
+        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+      }.toSeq.sortBy(_.getFileName.toString)
+      finally s.close()
+    }
+
+  /** A local parquet file's footer, decoded on the driver straight from
+    * the file tail (`len:int32le "PAR1"` after the thrift `FileMetaData`).
+    * None for a file too short to hold one or without the plaintext
+    * magic (an encrypted footer). */
+  private[streaming] def readFooter(f: java.nio.file.Path): Option[FileMetaData] = {
+    val ch = java.nio.channels.FileChannel.open(f, java.nio.file.StandardOpenOption.READ)
+    try {
+      def read(pos: Long, n: Int): java.nio.ByteBuffer = {
+        val b = java.nio.ByteBuffer.allocate(n).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        while (b.hasRemaining && ch.read(b, pos + b.position()) >= 0) ()
+        b.flip(); b
+      }
+      val size = ch.size()
+      val tail = if (size >= 12) read(size - 8, 8) else java.nio.ByteBuffer.allocate(0)
+      val magic = tail.remaining == 8 &&
+        new String(tail.array, 4, 4, StandardCharsets.US_ASCII) == "PAR1"
+      val len = if (magic) tail.getInt(0) else -1
+      if (len <= 0 || len > size - 12) None
+      else Some(Util.readFileMetaData(new java.io.ByteArrayInputStream(read(size - 8 - len, len).array)))
+    } finally ch.close()
+  }
+
+  /** [[Written]] from the footers of a segment's data files, with no Spark
+    * job. Files with 0 rows are skipped (an empty batch writes one empty
+    * file); the part is the file's `_part_id` min = max, and files are
+    * grouped by it. None when a needed stat is missing: a `_part_id` whose
+    * min ≠ max, a `ts` not stored as INT64 TIMESTAMP(MICROS, UTC) — INT96,
+    * the default of a session that does not pin `outputTimestampType` — or
+    * written with LEGACY datetime rebasing, or a column chunk with neither
+    * min/max nor an all-null count. */
+  private[streaming] def footerStats(files: Seq[java.nio.file.Path], ts: Option[String],
+                                     zcols: Seq[String]): Option[Written] = {
+    val footers = files.map(readFooter)
+    if (footers.exists(_.isEmpty)) return None
+    def rows(fm: FileMetaData): Long = fm.getRow_groups.asScala.map(_.getNum_rows).sum
+    val live = footers.flatten.filter(rows(_) > 0)
+    val parts = live.map(fm => colRange(fm, "_part_id", integral).collect {
+      case Some((lo, hi)) if lo == hi => lo -> rows(fm) })
+    def union(c: String, ok: SchemaElement => Boolean) = hull(live.map(colRange(_, c, ok)))
+    // a LEGACY-rebased write stores Julian micros for old timestamps
+    val rebased = live.exists(fm => Option(fm.getKey_value_metadata)
+      .exists(_.asScala.exists(_.getKey == "org.apache.spark.legacyDateTime")))
+    val range = ts.map(c => if (rebased) None else union(c, tsMicrosUtc))
+    val zone = zcols.map(c => c -> union(c, integral))
+    if (parts.exists(_.isEmpty) || range.exists(_.isEmpty) || zone.exists(_._2.isEmpty)) None
+    else Some(Written(
+      parts.flatten.groupMapReduce(_._1)(_._2)(_ + _).toSeq.sortBy(_._1),
+      range.flatten.flatten,
+      zone.collect { case (c, Some(Some(r))) => c -> r }.toMap))
+  }
+
+  /** [[Written]] by one aggregate over the files just written — the
+    * fallback when [[footerStats]] lacks a stat. */
+  private[streaming] def aggregateStats(written: DataFrame, ts: Option[String],
+                                        zcols: Seq[String]): Written = {
+    val aggCols = Seq(count(lit(1)).as("n")) ++ ts.toSeq.flatMap { c =>
+      val m = unix_micros(col(c).cast("timestamp"))
+      Seq(min(m).as("min_ts"), max(m).as("max_ts"))
+    } ++ zcols.flatMap { c =>
+      Seq(min(col(c).cast("long")).as(s"min_zs_$c"), max(col(c).cast("long")).as(s"max_zs_$c"))
+    }
+    val perPart = written.groupBy("_part_id").agg(aggCols.head, aggCols.tail: _*).collect()
+    // all-null columns record no stat (entry stays a read candidate);
+    // stats over the non-null values are sound for the null-rejecting
+    // range predicates readPruned serves
+    def span(lo: String, hi: String): Option[(Long, Long)] = {
+      val mins = perPart.flatMap(r => Option(r.getAs[java.lang.Long](lo)).map(_.toLong))
+      val maxs = perPart.flatMap(r => Option(r.getAs[java.lang.Long](hi)).map(_.toLong))
+      if (mins.isEmpty) None else Some((mins.min, maxs.max))
+    }
+    Written(perPart.map(r => (r.getInt(0).toLong, r.getAs[Long]("n"))).toSeq.sortBy(_._1),
+      ts.flatMap(_ => span("min_ts", "max_ts")),
+      zcols.flatMap(c => span(s"min_zs_$c", s"max_zs_$c").map(c -> _)).toMap)
+  }
+
+  private def integral(e: SchemaElement): Boolean =
+    e.getType == PType.INT32 || e.getType == PType.INT64
+
+  /** Spark's `TimestampType` under `outputTimestampType=TIMESTAMP_MICROS`:
+    * the stats are exactly `unix_micros(ts)`. */
+  private def tsMicrosUtc(e: SchemaElement): Boolean =
+    e.getType == PType.INT64 && e.isSetLogicalType &&
+      e.getLogicalType.isSetTIMESTAMP && {
+        val t = e.getLogicalType.getTIMESTAMP
+        t.isIsAdjustedToUTC && t.getUnit.isSetMICROS
+      }
+
+  /** (min, max) of a top-level column over a file's row groups: None when
+    * the column is absent, fails `ok`, or a chunk holding values has no
+    * min/max; Some(None) when every value is null. */
+  private def colRange(fm: FileMetaData, c: String,
+                       ok: SchemaElement => Boolean): Option[Option[(Long, Long)]] =
+    topLevel(fm).get(c).filter(ok).flatMap { e =>
+      def decode(b: Array[Byte]): Long = {
+        val bb = java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        if (e.getType == PType.INT32) bb.getInt.toLong else bb.getLong
+      }
+      val chunks = fm.getRow_groups.asScala.toSeq.map { rg =>
+        rg.getColumns.asScala.map(_.getMeta_data)
+          .find(_.getPath_in_schema.asScala == Seq(c)).flatMap { md =>
+            val st = md.getStatistics
+            if (st == null) None
+            else if (st.isSetMin_value && st.isSetMax_value)
+              Some(Some((decode(st.getMin_value), decode(st.getMax_value))))
+            else if (st.isSetNull_count && st.getNull_count == md.getNum_values) Some(None)
+            else None
+          }
+      }
+      hull(chunks)
+    }
+
+  /** The union of (min, max) ranges: None when any is unknown, Some(None)
+    * when none holds a non-null value. */
+  private def hull(rs: Seq[Option[Option[(Long, Long)]]]): Option[Option[(Long, Long)]] =
+    if (rs.exists(_.isEmpty)) None
+    else Some(rs.flatten.flatten.reduceOption((a, b) =>
+      (math.min(a._1, b._1), math.max(a._2, b._2))))
+
+  /** A footer's top-level schema elements by name. The schema list is the
+    * tree flattened depth-first, so each group's subtree is skipped. */
+  private def topLevel(fm: FileMetaData): Map[String, SchemaElement] = {
+    val it = fm.getSchema.iterator()
+    def children(e: SchemaElement): Int = if (e.isSetNum_children) e.getNum_children else 0
+    def skip(e: SchemaElement): Unit = (0 until children(e)).foreach(_ => skip(it.next()))
+    (0 until children(it.next())).map { _ => val e = it.next(); skip(e); e.getName -> e }.toMap
+  }
 
   /** A manifest entry's schema fingerprint: 16 hex chars of SHA-256 over
     * the schema JSON with nullability erased — a compacted fold (read back

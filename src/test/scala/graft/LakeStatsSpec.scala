@@ -127,8 +127,9 @@ class LakeStatsSpec extends SparkSuite {
   }
 
   test("streaming ingest records stats per microbatch; pruned read after the run") {
-    // the 100-TB shape: foreachBatch commits carry zone stats for free (same
-    // one-pass aggregate), and a later analytical read skips cold segments
+    // the 100-TB shape: foreachBatch commits carry zone stats for free (from
+    // the written files' footers), and a later analytical read skips cold
+    // segments
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.Trigger
     implicit val sqlCtx: org.apache.spark.sql.SQLContext =
@@ -330,6 +331,152 @@ class LakeStatsSpec extends SparkSuite {
       assert(jobsIn(sink.read(spark).queryExecution.executedPlan) === 0L)
       assert(rows(sink.read(spark)) === rows(mergeRead(dir, Seq(-1L, 3L))))
       assert(sink.read(spark).count() === 160L)
+    } finally graft.operators.LayoutOps.deleteTree(Paths.get(dir))
+  }
+
+  /** A batch whose `ts` is a (UTC-adjusted) timestamp, which the engine
+    * session stores as INT64 TIMESTAMP_MICROS; every 9th ts is null. */
+  private def tsBatch(ids: Range, uLo: Long, uHi: Long) =
+    batch(ids, uLo, uHi).withColumn("ts",
+      when(col("event_id") % 9 =!= 4, col("ts").cast("timestamp")))
+      .withColumn("bucket", (col("event_id") % 7).cast("int"))
+
+  /** What a commit of segment `b` must record, by the aggregate rule over a
+    * plain read of the segment: its manifest entry, its `_metrics` line and,
+    * for an id column, its bloom bytes. */
+  private def oracle(dir: String, b: Long, ts: Option[String], zcols: Seq[String],
+                     idCol: Option[String] = None) = {
+    val seg = spark.read.parquet(s"$dir/batch=$b")
+    val parts = seg.groupBy("_part_id").count().as[(Int, Long)].collect().sortBy(_._1)
+    val rows = parts.map(_._2).sum
+    def span(c: org.apache.spark.sql.Column): Option[(Long, Long)] = {
+      val r = seg.agg(min(c), max(c)).head()
+      if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1)))
+    }
+    val entry = LakeSink.Committed(b, rows,
+      ts.flatMap(c => span(unix_micros(col(c).cast("timestamp")))), Seq.empty,
+      zcols.flatMap(c => span(col(c).cast("long")).map(c -> _)).toMap,
+      Some(LakeSink.schemaFingerprint(seg.schema)))
+    val metrics = parts.map { case (p, n) => s"""{"part": $p, "rows": $n}""" }
+      .mkString(s"""{"batch": $b, "partitions": [""", ",", "]}")
+    val bloom = idCol.map { c =>
+      val bf =
+        if (rows == 0) org.apache.spark.util.sketch.BloomFilter.create(1000L, 0.01)
+        else seg.stat.bloomFilter(c, math.max(1000L, rows), 0.01)
+      val bos = new java.io.ByteArrayOutputStream()
+      bf.writeTo(bos); bos.toByteArray.toSeq
+    }
+    (entry, metrics, bloom)
+  }
+
+  /** Asserts that commit `b` recorded exactly what [[oracle]] derives. */
+  private def assertParity(dir: String, sink: LakeSink, b: Long, ts: Option[String],
+                           zcols: Seq[String], idCol: Option[String] = None): Unit = {
+    val (entry, metrics, bloom) = oracle(dir, b, ts, zcols, idCol)
+    assert(sink.committed().find(_.batch == b) === Some(entry))
+    assert(Files.readString(Paths.get(dir, "_metrics", s"batch-$b.json")).trim === metrics)
+    bloom.foreach(want => assert(
+      Files.readAllBytes(Paths.get(dir, "_bloom", s"batch-$b.bin")).toSeq === want))
+  }
+
+  private def segmentFiles(dir: String, b: Long) =
+    Files.list(Paths.get(dir, s"batch=$b")).iterator().asScala.map(_.getFileName.toString)
+      .filter(n => n.endsWith(".parquet") && !n.startsWith(".")).toSeq
+
+  test("footer stats: a multi-partition frame commits in ONE job, as the aggregate rule") {
+    val (dir, sink) = freshLake()
+    try {
+      val df = tsBatch(0 until 400, 0L, 100000L).repartition(4, col("event_id"))
+        .localCheckpoint()
+      assert(jobsIn(sink.addBatchStats(0L, df, Seq("user_id", "bucket"))) === 1L)
+      assert(segmentFiles(dir, 0L).size === 4)
+      assertParity(dir, sink, 0L, Some("ts"), Seq("user_id", "bucket"))
+      val e = sink.committed().head
+      assert(e.rows === 400L && e.range.isDefined && e.stats.keySet === Set("user_id", "bucket"))
+    } finally graft.operators.LayoutOps.deleteTree(Paths.get(dir))
+  }
+
+  test("footer stats: a LocalRelation frame writes _part_id 0 from two files") {
+    val (dir, sink) = freshLake()
+    try {
+      // Catalyst folds the lineage projection into the LocalRelation, so
+      // spark_partition_id() is 0 on every row although two tasks write it
+      assert(sink.addBatchStats(0L, tsBatch(0 until 2, 0L, 10L), Seq("user_id")))
+      assert(segmentFiles(dir, 0L).size === 2)
+      assert(spark.read.parquet(s"$dir/batch=0").select("_part_id").distinct()
+        .as[Int].collect().toSeq === Seq(0))
+      assertParity(dir, sink, 0L, Some("ts"), Seq("user_id"))
+      assert(Files.readString(Paths.get(dir, "_metrics", "batch-0.json")).trim ===
+        """{"batch": 0, "partitions": [{"part": 0, "rows": 2}]}""")
+    } finally graft.operators.LayoutOps.deleteTree(Paths.get(dir))
+  }
+
+  test("footer stats: an empty batch, an all-null zone column, a ts range under TIMESTAMP_MICROS") {
+    val (dir, sink) = freshLake()
+    try {
+      // empty batch: one empty file, 0 rows, no range, no stats, no parts
+      assert(sink.addBatchStats(0L, tsBatch(0 until 0, 0L, 1L), Seq("user_id")))
+      assertParity(dir, sink, 0L, Some("ts"), Seq("user_id"))
+      val e0 = sink.committed().head
+      assert(e0.rows === 0L && e0.range.isEmpty && e0.stats.isEmpty)
+      // all-null zone column: no stat for it, the other column keeps one
+      val nulls = tsBatch(0 until 60, 0L, 100L).repartition(2)
+        .withColumn("user_id", lit(null).cast("long"))
+      assert(sink.addBatchStats(1L, nulls, Seq("user_id", "bucket")))
+      assertParity(dir, sink, 1L, Some("ts"), Seq("user_id", "bucket"))
+      assert(sink.committed().find(_.batch == 1L).get.stats.keySet === Set("bucket"))
+      // ts under TIMESTAMP_MICROS, spread over three partitions
+      val ranged = tsBatch(60 until 150, 0L, 100L).repartition(3)
+      assert(sink.addBatchStats(2L, ranged, Seq("user_id")))
+      assertParity(dir, sink, 2L, Some("ts"), Seq("user_id"))
+      val want = ranged.agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts"))))
+        .as[(Long, Long)].head()
+      assert(sink.committed().find(_.batch == 2L).get.range === Some(want))
+    } finally graft.operators.LayoutOps.deleteTree(Paths.get(dir))
+  }
+
+  test("footer stats: INT96 timestamps fall back to one aggregate over the written files") {
+    val (dir, sink) = freshLake()
+    val key = "spark.sql.parquet.outputTimestampType"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, "INT96")
+    try {
+      val df = tsBatch(0 until 200, 0L, 5000L).repartition(3).localCheckpoint()
+      // the write, then the aggregate's two jobs (shuffle map + result)
+      assert(jobsIn(sink.addBatchStats(0L, df, Seq("user_id"))) === 3L)
+      assertParity(dir, sink, 0L, Some("ts"), Seq("user_id"))
+      assert(sink.committed().head.range.isDefined)
+    } finally {
+      spark.conf.set(key, before)
+      graft.operators.LayoutOps.deleteTree(Paths.get(dir))
+    }
+  }
+
+  test("footer stats: addBatchMerged records the aggregate rule's entry, metrics and bloom") {
+    val (dir, sink) = freshLake()
+    try {
+      // the merge path probes string ids (statement ids)
+      def stmts(ids: Range) =
+        tsBatch(ids, 0L, 1000L).withColumn("id", format_string("s-%d", col("event_id")))
+      assert(sink.addBatchMerged(0L, stmts(0 until 120).repartition(2), "id"))
+      assertParity(dir, sink, 0L, Some("ts"), Seq.empty, Some("id"))
+      // half the ids already committed: only the novel part lands
+      assert(sink.addBatchMerged(1L, stmts(60 until 200).repartition(3), "id"))
+      assertParity(dir, sink, 1L, Some("ts"), Seq.empty, Some("id"))
+      assert(sink.committed().map(_.rows) === Seq(120L, 80L))
+      // all-dup batch: 0 rows and the explicit empty bloom
+      assert(sink.addBatchMerged(2L, stmts(0 until 50), "id"))
+      assertParity(dir, sink, 2L, Some("ts"), Seq.empty, Some("id"))
+      assert(sink.committed().last.rows === 0L)
+    } finally graft.operators.LayoutOps.deleteTree(Paths.get(dir))
+  }
+
+  test("addBatch of a checkpointed frame runs exactly one Spark job") {
+    val (dir, sink) = freshLake()
+    try {
+      val df = tsBatch(0 until 300, 0L, 1000L).repartition(3).localCheckpoint()
+      assert(jobsIn(sink.addBatch(0L, df)) === 1L)
+      assert(sink.committed().map(_.rows) === Seq(300L))
     } finally graft.operators.LayoutOps.deleteTree(Paths.get(dir))
   }
 }
