@@ -39,6 +39,16 @@ import org.apache.spark.util.sketch.BloomFilter
   *    bloom-stats analogue). False positives only cost anti-join input —
   *    correctness comes from the join.
   *
+  * Files per commit: the probe aggregate of [[addBatchMerged]] fills the
+  * cache of the deduplicated batch, whose `sizeInBytes` statistic is then
+  * the batch's actual cached size. The commit coalesces to ⌈size /
+  * `spark.sql.files.maxPartitionBytes`⌉ partitions (never more than it
+  * has), so it is never split into files smaller than one read split; a
+  * reader pays per file (footer decode, a Hadoop `Configuration` copy), not
+  * per row. A batch without a ts column runs no probe aggregate, and its
+  * commit keeps one file per partition. Readers skip zero-row segments
+  * (see `readEntries`).
+  *
   * Every row carries lineage columns `_batch_id` and `_part_id`: the
   * `spark_partition_id()` of the partition that produced it (0 for every
   * row of a frame Catalyst folded into a LocalRelation, however many tasks
@@ -247,7 +257,14 @@ class LakeSink(val path: String) extends Serializable {
           val existingIds = readEntries(spark, cands).select(col(idCol)).distinct()
           sure.unionByName(maybe.join(existingIds, Seq(idCol), "left_anti"))
         }
-      addBatchTracked(batchId, novel, Some(idCol), Some(tsCol), covering)
+      // files per commit (class doc): known only once the probe aggregate
+      // has filled the cache, so a ts-less batch keeps its partitioning
+      val sized = org.apache.spark.sql.graftbridge.Bridge.cachedSizeInBytes(batchUnique)
+        .fold(novel) { bytes =>
+          val split = org.apache.spark.sql.graftbridge.Bridge.filesMaxPartitionBytes(spark)
+          novel.coalesce(math.max(1L, (bytes + split - 1) / split).min(Int.MaxValue).toInt)
+        }
+      addBatchTracked(batchId, sized, Some(idCol), Some(tsCol), covering)
     } finally { batchUnique.unpersist(); () }
   }
 
@@ -539,7 +556,7 @@ class LakeSink(val path: String) extends Serializable {
     // schema-bearing empty parquet segment
     if (paths.isEmpty && entries.nonEmpty) readEntries(spark, entries).limit(0)
     else if (paths.isEmpty) spark.emptyDataFrame
-    else scan(spark, keep, paths)
+    else scan(spark, keep, paths, paths)
   }
 
   /** One committed segment only — for GENERATION-SNAPSHOT readers (tables
@@ -555,22 +572,32 @@ class LakeSink(val path: String) extends Serializable {
     readEntries(spark, e)
   }
 
+  /** Scan of `entries`' segments. Zero-row segments hold only a schema, so
+    * they are left out of the scan (one is kept when every entry is empty,
+    * as the schema-bearing segment); old-format entries (rows = -1) stay
+    * in. The `mergeSchema` fallback reads every segment, so a column only
+    * an empty segment added still appears. */
   private def readEntries(spark: SparkSession, entries: Seq[Committed]): DataFrame =
     if (entries.isEmpty) spark.emptyDataFrame
-    else scan(spark, entries, entries.map(_.batch).sorted.map(b => s"$path/batch=$b"))
+    else {
+      def dirs(es: Seq[Committed]) = es.map(_.batch).sorted.map(b => s"$path/batch=$b")
+      val live = entries.filter(_.rows != 0)
+      scan(spark, entries, dirs(if (live.nonEmpty) live else entries.take(1)), dirs(entries))
+    }
 
   /** Parquet scan of `paths` (segment dirs or files of `entries`) with the
     * schema resolved from the manifest: one footer when every entry
-    * carries the same fingerprint, `mergeSchema` inference otherwise. */
+    * carries the same fingerprint, `mergeSchema` inference over
+    * `mergePaths` otherwise. */
   private def scan(spark: SparkSession, entries: Seq[Committed],
-                   paths: Seq[String]): DataFrame = {
+                   paths: Seq[String], mergePaths: Seq[String]): DataFrame = {
     val footer = entries.map(_.schema).distinct match {
       case Seq(Some(_)) => footerSchema(entries)
       case _ => None
     }
     footer match {
       case Some(s) => spark.read.schema(s).parquet(paths: _*)
-      case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
+      case None => spark.read.option("mergeSchema", "true").parquet(mergePaths: _*)
     }
   }
 

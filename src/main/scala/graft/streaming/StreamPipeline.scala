@@ -42,13 +42,13 @@ object StreamPipeline {
 
   /** D5 streaming dedup: state bounded by the watermark (RocksDB).
     *
-    * Late-data contract (SURVEY.md §2.10): rows arriving after the watermark
-    * are NOT silently dropped — dropDuplicatesWithinWatermark passes them
-    * through (it merely cannot guarantee dedup for them), so they still land
-    * in the lake; the windowed aggregations do drop them from closed
-    * windows. The sink-side [[LakeSink.addBatchMerged]] closes the residual
-    * duplicate risk for beyond-watermark stragglers, and per-batch observe
-    * counters make the late volume visible. */
+    * Late-data contract (SURVEY.md §2.10): a row whose event time is older
+    * than the watermark is DROPPED here — dropDuplicatesWithinWatermark
+    * filters it before the dedup state and counts it in the operator's
+    * `numRowsDroppedByWatermark` progress metric (StreamingSpec pins this).
+    * A pipeline that must keep late rows writes [[statements]] to the lake
+    * without this operator: [[LakeSink.addBatchMerged]] then removes
+    * duplicates by id at any lateness. */
   def deduped(statements: DataFrame): DataFrame =
     statements.dropDuplicatesWithinWatermark(Seq("id"))
 
@@ -162,9 +162,10 @@ object StreamPipeline {
 
   /** End-to-end job: input stream → validate/convert → within-watermark
     * dedup → merge-by-id lake. The stateful dedup bounds the duplicate rate
-    * cheaply in-stream; the sink merge guarantees store-wide uniqueness and
-    * keeps late rows (routed, never silently dropped). Sessions/counts/join
-    * run as sibling queries on the same source. */
+    * cheaply in-stream and drops rows older than the watermark (counted in
+    * its `numRowsDroppedByWatermark`, see [[deduped]]); the sink merge
+    * guarantees store-wide uniqueness. Sessions/counts/join run as sibling
+    * queries on the same source. */
   def run(input: DataFrame, sinkPath: String, checkpoint: String): StreamingQuery = {
     val sink = new LakeSink(sinkPath)
     toLake(deduped(statements(input)), sink, checkpoint).start()

@@ -41,6 +41,29 @@ object Bridge {
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
 
+  /** The in-memory size of a persisted frame's cache, once a job has
+    * filled every partition of it (the accumulated size `InMemoryRelation`
+    * reports as `sizeInBytes` from then on). None when the frame is not
+    * cached or not yet materialized: before that, the statistic is only the
+    * planner's estimate. `CacheManager.lookupCachedData` takes the classic
+    * `Dataset`, whose cache internals are `private[sql]`. */
+  def cachedSizeInBytes(df: org.apache.spark.sql.DataFrame): Option[Long] =
+    df match {
+      case d: org.apache.spark.sql.classic.Dataset[_] =>
+        d.sparkSession.sharedState.cacheManager.lookupCachedData(d)
+          .map(_.cachedRepresentation.cacheBuilder)
+          .filter(_.isCachedColumnBuffersLoaded)
+          .map(_.sizeInBytesStats.value.longValue)
+      case _ => None
+    }
+
+  /** `spark.sql.files.maxPartitionBytes` as the session resolves it. */
+  def filesMaxPartitionBytes(spark: org.apache.spark.sql.SparkSession): Long =
+    spark match {
+      case s: org.apache.spark.sql.classic.SparkSession => s.sessionState.conf.filesMaxPartitionBytes
+      case _ => org.apache.spark.sql.internal.SQLConf.get.filesMaxPartitionBytes
+    }
+
   /** The schema with every nullability flag set — what a file-source read
     * applies to its data schema (`DataType.asNullable` is
     * `private[spark]`). */

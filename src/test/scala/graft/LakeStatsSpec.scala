@@ -456,8 +456,6 @@ class LakeStatsSpec extends SparkSuite {
     val (dir, sink) = freshLake()
     try {
       // the merge path probes string ids (statement ids)
-      def stmts(ids: Range) =
-        tsBatch(ids, 0L, 1000L).withColumn("id", format_string("s-%d", col("event_id")))
       assert(sink.addBatchMerged(0L, stmts(0 until 120).repartition(2), "id"))
       assertParity(dir, sink, 0L, Some("ts"), Seq.empty, Some("id"))
       // half the ids already committed: only the novel part lands
@@ -468,6 +466,84 @@ class LakeStatsSpec extends SparkSuite {
       assert(sink.addBatchMerged(2L, stmts(0 until 50), "id"))
       assertParity(dir, sink, 2L, Some("ts"), Seq.empty, Some("id"))
       assert(sink.committed().last.rows === 0L)
+    } finally graft.operators.LayoutOps.deleteTree(Paths.get(dir))
+  }
+
+  /** `body` with AQE off: the session a streaming `foreachBatch` runs in. */
+  private def withoutAqe[T](body: => T): T = {
+    val key = "spark.sql.adaptive.enabled"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try body finally spark.conf.set(key, before)
+  }
+
+  private def stmts(ids: Range) =
+    tsBatch(ids, 0L, 1000L).withColumn("id", format_string("s-%d", col("event_id")))
+
+  test("right-sized merge commit: a ts-bearing batch writes one file in 3 jobs, as the aggregate rule") {
+    val (dir, sink) = freshLake()
+    try withoutAqe {
+      // probe aggregate (fills the cache) + write + bloom; the size comes
+      // from the filled cache's statistics, not from a job
+      assert(jobsIn(sink.addBatchMerged(0L, stmts(0 until 300).repartition(3), "id")) === 3L)
+      assert(segmentFiles(dir, 0L).size === 1)
+      assertParity(dir, sink, 0L, Some("ts"), Seq.empty, Some("id"))
+      // a probing commit (half its ids already committed) is right-sized too
+      assert(sink.addBatchMerged(1L, stmts(150 until 450).repartition(3), "id"))
+      assert(segmentFiles(dir, 1L).size === 1)
+      assertParity(dir, sink, 1L, Some("ts"), Seq.empty, Some("id"))
+      assert(sink.committed().map(_.rows) === Seq(300L, 150L))
+    } finally graft.operators.LayoutOps.deleteTree(Paths.get(dir))
+  }
+
+  test("right-sized merge commit: a ts-less batch keeps its partitioning") {
+    val (dir, sink) = freshLake()
+    try withoutAqe {
+      // no ts column → no probe aggregate → the size is unknown before the
+      // write, so the commit writes one file per shuffle partition of the
+      // intra-batch dedup, as before
+      val df = stmts(0 until 300).drop("ts").repartition(3)
+      assert(sink.addBatchMerged(0L, df, "id"))
+      val shuffle = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      assert(segmentFiles(dir, 0L).size === shuffle)
+      assert(sink.read(spark).count() === 300L)
+    } finally graft.operators.LayoutOps.deleteTree(Paths.get(dir))
+  }
+
+  test("reads skip zero-row segments; the mergeSchema fallback still sees their columns") {
+    val (dir, sink) = freshLake()
+    try {
+      sink.addBatchStats(0L, batch(0 until 50, 0L, 100L), Seq("user_id"))
+      sink.addBatchStats(1L, batch(0 until 0, 0L, 1L), Seq("user_id")) // zero-row commit
+      sink.addBatchStats(2L, batch(50 until 90, 200L, 300L), Seq("user_id"))
+      val files = sink.read(spark).inputFiles.toSeq
+      assert(files.nonEmpty && !files.exists(_.contains("/batch=1/")), files)
+      assert(files.count(_.contains("/batch=0/")) >= 1 && files.count(_.contains("/batch=2/")) >= 1)
+      assert(sink.read(spark).count() === 90L)
+      assert(sink.readAsOf(spark, 1L).get.inputFiles.forall(!_.contains("/batch=1/")))
+      // a column only an empty segment added: fingerprints disagree, so the
+      // read falls back to mergeSchema over every segment and keeps it
+      sink.addBatchStats(3L, batch(0 until 0, 0L, 1L).withColumn("extra", lit(1L)), Seq("user_id"))
+      val evolved = sink.read(spark)
+      assert(evolved.columns.contains("extra"), evolved.columns.toSeq)
+      assert(evolved.count() === 90L)
+    } finally graft.operators.LayoutOps.deleteTree(Paths.get(dir))
+  }
+
+  test("a lake of zero-row segments reads with the table schema; so does an empty generation") {
+    val (dir, sink) = freshLake()
+    try {
+      sink.addBatchStats(0L, batch(0 until 0, 0L, 1L), Seq("user_id"))
+      sink.addBatchStats(1L, batch(0 until 0, 0L, 1L), Seq("user_id"))
+      val want = mergeRead(dir, Seq(0L, 1L)).schema
+      val all = sink.read(spark)
+      assert(all.schema === want)
+      assert(all.count() === 0L)
+      val gen = sink.readGeneration(spark, 1L)
+      assert(gen.schema === want)
+      assert(gen.count() === 0L)
+      // one schema-bearing segment is scanned, not every empty one
+      assert(all.inputFiles.forall(_.contains("/batch=0/")))
     } finally graft.operators.LayoutOps.deleteTree(Paths.get(dir))
   }
 

@@ -103,6 +103,28 @@ class StreamingSpec extends SparkSuite {
     assert(got.length === got.distinct.length, "late duplicates leaked past the merge sink")
   }
 
+  test("deduped drops rows older than the watermark and counts them on the dedup operator") {
+    val mem = MemoryStream[InputRow]
+    val q = StreamPipeline.deduped(StreamPipeline.statements(mem.toDF())).select("id")
+      .writeStream.format("memory").queryName("deduped_late")
+      .option("checkpointLocation", tmp("cpdeduplate"))
+      .trigger(Trigger.ProcessingTime(0)).start()
+    try {
+      // far-future rows advance the watermark past rows 0..49's event times
+      mem.addData(inputRows(100000, 100050): _*)
+      q.processAllAvailable()
+      mem.addData(inputRows(0, 50): _*)
+      q.processAllAvailable()
+      val got = spark.table("deduped_late").as[String].collect().toSet
+      val late = (0L until 50L).filter(Synth.isConvertible)
+      val lateIds = late.map(i => graft.functions.Uuid5.uuid5(Synth.UuidNamespace, Synth.edxJson(i)))
+      assert(lateIds.nonEmpty && !lateIds.exists(got.contains), "late rows passed the dedup")
+      val dropped = q.recentProgress.flatMap(_.stateOperators)
+        .filter(_.operatorName == "dedupeWithinWatermark").map(_.numRowsDroppedByWatermark).sum
+      assert(dropped === late.size.toLong)
+    } finally q.stop()
+  }
+
   test("forwarding tees statements to a downstream store after the primary write") {
     val mem = MemoryStream[InputRow]
     val primary = new LakeSink(tmp("primary"))
