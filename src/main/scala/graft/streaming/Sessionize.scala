@@ -2,16 +2,31 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Stateful per-actor sessionization (A3, north rule):
-  * `flatMapGroupsWithState` keyed by (actor, source) with an event-time gap
-  * timeout, RocksDB-backed state. Emits CLOSED sessions only (append mode):
-  * a session closes when a new event arrives past the gap, or when the
-  * watermark passes session_end + gap (timeout path) — so results are
-  * deterministic for a given input + watermark, per the north rule.
+/** Stateful per-actor sessionization (A3, north rule): one
+  * `flatMapGroupsWithState` keyed by actor with an event-time timeout,
+  * RocksDB-backed state. A session belongs to one (actor, source); the
+  * actor's state holds the open session of each of its sources. Emits
+  * CLOSED sessions only (append mode): a session closes when a new event of
+  * its source arrives past the gap, or when the watermark passes
+  * session_end + gap (timeout path) — so results are deterministic for a
+  * given input + watermark, per the north rule.
+  *
+  * [[deduplicated]] runs the within-watermark id dedup in the same
+  * operator: the actor's state also holds the ids seen within the
+  * watermark, so `sessions(deduped(…))` costs one shuffle and one
+  * state-store commit per partition instead of two. That equals
+  * `dropDuplicatesWithinWatermark("id")` followed by sessionization
+  * whenever every copy of an id carries the same actor_key and ts (true of
+  * converted statements: `id = uuid5(raw)`, and actor_key and ts are
+  * functions of `raw`).
   *
   * The session payload (count, bounds, verb histogram) is the custom state
   * the reference never had (its only aggregates were counters); the plain
@@ -22,7 +37,15 @@ object Sessionize {
 
   case class Event(actor_key: String, source: String, ts: Timestamp, verb_id: String)
 
-  case class SessionState(start: Long, end: Long, n: Long, verbs: Map[String, Long])
+  /** An [[Event]] with its statement id; a null id is never deduplicated. */
+  case class IdEvent(actor_key: String, id: String, source: String, ts: Timestamp, verb_id: String)
+
+  /** The open session of one source. */
+  case class Open(source: String, start: Long, end: Long, n: Long, verbs: Map[String, Long])
+
+  /** One actor's state: id → expiry (µs, ts + watermark delay) for the ids
+    * seen within the watermark, and the open session per source. */
+  case class ActorState(ids: Map[String, Long], open: Seq[Open])
 
   case class Session(
       actor_key: String, source: String,
@@ -31,53 +54,124 @@ object Sessionize {
 
   val DefaultGapMs: Long = 30L * 60 * 1000 // 30 minutes (SURVEY.md §2.8 A3)
 
-  private def toSession(key: (String, String), s: SessionState): Session = {
-    val top = s.verbs.toSeq.sortBy { case (v, n) => (-n, v) }.head._1
-    Session(key._1, key._2, new Timestamp(s.start), new Timestamp(s.end),
-      s.n, s.verbs.size, top)
+  /** A session being extended within one call of [[process]]. */
+  private final class Acc(val source: String, var start: Long, var end: Long, var n: Long,
+                          val verbs: mutable.HashMap[String, Long]) {
+    def add(t: Long, verb: String): Unit = {
+      start = math.min(start, t)
+      end = math.max(end, t)
+      n += 1
+      verbs(verb) = verbs.getOrElse(verb, 0L) + 1
+    }
+
+    def session(actor: String): Session = {
+      val top = verbs.minBy { case (v, c) => (-c, v) }._1
+      Session(actor, source, new Timestamp(start), new Timestamp(end), n, verbs.size, top)
+    }
+
+    def toOpen: Open = Open(source, start, end, n, verbs.toMap)
   }
 
-  def process(gapMs: Long)(
-      key: (String, String),
-      rows: Iterator[Event],
-      state: GroupState[SessionState]): Iterator[Session] = {
-    if (state.hasTimedOut) {
-      val out = state.getOption.map(toSession(key, _)).iterator
-      state.remove()
-      return out
+  private object Acc {
+    def apply(o: Open): Acc = new Acc(o.source, o.start, o.end, o.n, mutable.HashMap.from(o.verbs))
+    def first(source: String, t: Long, verb: String): Acc =
+      new Acc(source, t, t, 1, mutable.HashMap(verb -> 1L))
+  }
+
+  private val ByTimeVerb: Ordering[IdEvent] = (a, b) => {
+    val c = java.lang.Long.compare(a.ts.getTime, b.ts.getTime)
+    if (c != 0) c else a.verb_id.compareTo(b.verb_id)
+  }
+
+  /** One actor's batch (or its timeout), in this order:
+    *  1. drop rows whose id is already stored or was seen earlier in the
+    *     batch (arrival order, the first copy wins), checking the ids
+    *     stored so far before any eviction;
+    *  2. per source, extend or close sessions over the kept rows in
+    *     (ts, verb_id) order;
+    *  3. close every session whose end + gap is below the watermark,
+    *     also one extended in step 2 (consecutive data batches can move
+    *     the watermark past a kept row's ts + gap);
+    *  4. evict ids whose expiry the watermark has reached;
+    *  5. time out at the earliest remaining end + gap or id expiry, or
+    *     remove the state when nothing remains.
+    * With `delayUs` the watermark delay in µs, steps 1 and 4 are
+    * `dropDuplicatesWithinWatermark`'s own. */
+  def process(gapMs: Long, delayUs: Long)(
+      actor: String,
+      rows: Iterator[IdEvent],
+      state: GroupState[ActorState]): Iterator[Session] = {
+    val wm = state.getCurrentWatermarkMs()
+    val ids = mutable.HashMap.empty[String, Long]
+    val open = mutable.HashMap.empty[String, Acc]
+    state.getOption.foreach { s =>
+      ids ++= s.ids
+      s.open.foreach(o => open(o.source) = Acc(o))
     }
-    // within a microbatch rows are unordered — sort by event time
-    val sorted = rows.toArray.sortBy(e => (e.ts.getTime, e.verb_id))
-    var cur = state.getOption
-    val closed = scala.collection.mutable.ArrayBuffer.empty[Session]
-    sorted.foreach { e =>
-      val t = e.ts.getTime
-      cur match {
-        case Some(s) if t - s.end <= gapMs =>
-          cur = Some(SessionState(math.min(s.start, t), math.max(s.end, t), s.n + 1,
-            s.verbs.updated(e.verb_id, s.verbs.getOrElse(e.verb_id, 0L) + 1)))
-        case Some(s) => // gap exceeded → close previous, open new
-          closed += toSession(key, s)
-          cur = Some(SessionState(t, t, 1, Map(e.verb_id -> 1L)))
-        case None =>
-          cur = Some(SessionState(t, t, 1, Map(e.verb_id -> 1L)))
+    val bySource = mutable.HashMap.empty[String, mutable.ArrayBuffer[IdEvent]]
+    rows.foreach { e =>
+      val fresh = e.id == null || !ids.contains(e.id)
+      if (fresh) {
+        if (e.id != null) ids(e.id) = DateTimeUtils.fromJavaTimestamp(e.ts) + delayUs
+        bySource.getOrElseUpdate(e.source, mutable.ArrayBuffer.empty) += e
       }
     }
-    cur.foreach { s =>
-      state.update(s)
-      // close when the event-time watermark passes end-of-session + gap
-      state.setTimeoutTimestamp(s.end + gapMs)
+    val closed = mutable.ArrayBuffer.empty[Session]
+    bySource.foreach { case (source, es) =>
+      var cur = open.getOrElse(source, null)
+      es.sortInPlace()(ByTimeVerb).foreach { e =>
+        val t = e.ts.getTime
+        if (cur != null && t - cur.end <= gapMs) cur.add(t, e.verb_id)
+        else { // gap exceeded → close previous, open new
+          if (cur != null) closed += cur.session(actor)
+          cur = Acc.first(source, t, e.verb_id)
+        }
+      }
+      open(source) = cur
+    }
+    open.filterInPlace { (_, s) =>
+      val live = s.end + gapMs >= wm
+      if (!live) closed += s.session(actor)
+      live
+    }
+    ids.filterInPlace((_, expiry) => expiry > wm * 1000)
+    if (ids.isEmpty && open.isEmpty) state.remove()
+    else {
+      state.update(ActorState(ids.toMap, open.valuesIterator.map(_.toOpen).toSeq))
+      // an id expiring at e µs is evicted once wm * 1000 >= e, which is
+      // the first watermark strictly above floor((e - 1) / 1000) ms. After
+      // steps 3 and 4 both minima are >= wm, as setTimeoutTimestamp requires
+      state.setTimeoutTimestamp(math.min(
+        open.valuesIterator.map(_.end + gapMs).minOption.getOrElse(Long.MaxValue),
+        ids.valuesIterator.map(e => Math.floorDiv(e - 1, 1000L)).minOption.getOrElse(Long.MaxValue)))
     }
     closed.iterator
   }
 
-  /** @param statements stream with actor_key/source/ts/verb_id and a
-    *                    watermark already set on ts */
-  def apply(statements: Dataset[Event], gapMs: Long = DefaultGapMs): Dataset[Session] = {
-    import statements.sparkSession.implicits._
-    statements
-      .groupByKey(e => (e.actor_key, e.source))
+  /** Sessions of a plain event stream, without id dedup.
+    * @param statements stream with actor_key/source/ts/verb_id and a
+    *                   watermark already set on ts */
+  def apply(statements: Dataset[Event], gapMs: Long = DefaultGapMs): Dataset[Session] =
+    sessionize(statements.select(col("actor_key"), lit(null).cast("string").as("id"),
+      col("source"), col("ts"), col("verb_id")), gapMs, delayUs = 0L)
+
+  /** Sessions (default gap) of a statement stream whose rows repeating an
+    * id within the watermark are dropped by the same operator, with the
+    * delay of the watermark on ts.
+    * @param statements stream with id/actor_key/source/ts/verb_id and a
+    *                   watermark already set on ts; every copy of an id
+    *                   must carry the same actor_key and ts */
+  def deduplicated(statements: DataFrame): Dataset[Session] = {
+    val delayMs = statements.schema("ts").metadata.getLong(EventTimeWatermark.delayKey)
+    sessionize(statements.select(col("actor_key"), col("id"), col("source"), col("ts"),
+      col("verb_id")), DefaultGapMs, DateTimeUtils.millisToMicros(delayMs))
+  }
+
+  private def sessionize(events: DataFrame, gapMs: Long, delayUs: Long): Dataset[Session] = {
+    import events.sparkSession.implicits._
+    events.as[IdEvent]
+      .groupByKey(_.actor_key)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        process(gapMs))
+        process(gapMs, delayUs))
   }
 }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 import graft.operators.{Convert, Store, Validate}
@@ -14,7 +15,9 @@ import graft.sources.Synth
   *  - watermarked dedup (`dropDuplicatesWithinWatermark("id")` — D5; the
   *    store-wide guarantee at 10^12 scale comes from the idempotent sink +
   *    within-watermark dedup, exactly the ES/Mongo id-keyed model),
-  *  - per-actor sessionization ([[Sessionize]], RocksDB state),
+  *  - per-actor sessionization ([[Sessionize]], RocksDB state keyed by
+  *    actor_key); `sessions(deduped(…))` fuses the dedup into the
+  *    sessionizer, one stateful operator instead of two,
   *  - tumbling/sliding per-verb/per-source counts (A1/A2) with optional
   *    key salting for hot actors/verbs,
   *  - a watermark-bounded stream-stream join against actor-profile updates
@@ -46,6 +49,9 @@ object StreamPipeline {
     * than the watermark is DROPPED here — dropDuplicatesWithinWatermark
     * filters it before the dedup state and counts it in the operator's
     * `numRowsDroppedByWatermark` progress metric (StreamingSpec pins this).
+    * Under [[sessions]] the dedup runs inside the sessionizer: a late row
+    * is dropped there and counted in the `flatMapGroupsWithState`
+    * operator's `numRowsDroppedByWatermark` instead.
     * A pipeline that must keep late rows writes [[statements]] to the lake
     * without this operator: [[LakeSink.addBatchMerged]] then removes
     * duplicates by id at any lateness. */
@@ -98,13 +104,31 @@ object StreamPipeline {
         col("session_window.end").as("session_end"),
         col("actor_key"), col("source"), col("n_events"), col("n_verbs"))
 
-  /** Custom-state sessionization ([[Sessionize]]). */
-  def sessions(statements: DataFrame): Dataset[Sessionize.Session] = {
-    import statements.sparkSession.implicits._
-    Sessionize(statements
-      .select(col("actor_key"), col("source"), col("ts"), col("verb_id"))
-      .as[Sessionize.Event])
-  }
+  /** Custom-state sessionization ([[Sessionize]]), one stateful operator
+    * keyed by actor_key.
+    *
+    * When `statements` is exactly [[deduped]]`(s)` (a top-level
+    * `dropDuplicatesWithinWatermark("id")`), the dedup is fused into the
+    * sessionizer: `s` is sessionized directly by
+    * [[Sessionize.deduplicated]], whose per-actor state also holds the ids
+    * seen within the watermark. That saves a shuffle and a state-store
+    * commit per partition per microbatch. Any other input is sessionized
+    * as it is, with no dedup.
+    *
+    * Precondition of the fused path: every copy of an id carries the same
+    * actor_key and ts, as converted statements do (`id = uuid5(raw)`, and
+    * actor_key and ts are functions of `raw`). A copy of an id re-sent
+    * from another source still counts once, in the source of the copy
+    * that arrived first. */
+  def sessions(statements: DataFrame): Dataset[Sessionize.Session] =
+    Bridge.withinWatermarkDedup(statements) match {
+      case Some((Seq("id"), input)) => Sessionize.deduplicated(input)
+      case _ =>
+        import statements.sparkSession.implicits._
+        Sessionize(statements
+          .select(col("actor_key"), col("source"), col("ts"), col("verb_id"))
+          .as[Sessionize.Event])
+    }
 
   /** J3: watermark-bounded stream-stream join of statements against
     * actor-profile updates `(actor_key, p_name, cohort, updated_at)`:

@@ -75,6 +75,23 @@ object Bridge {
   def divideByZeroError(): ArithmeticException =
     org.apache.spark.sql.errors.QueryExecutionErrors.divideByZeroError(null)
 
+  /** The key names and the input of a frame whose plan is a top-level
+    * `dropDuplicatesWithinWatermark`, or None for any other frame. The
+    * input is rebuilt from the analyzed child plan, which keeps the
+    * watermark metadata and any `observe` beneath the dedup
+    * (`classic.Dataset.ofRows` is `private[sql]`). */
+  def withinWatermarkDedup(df: org.apache.spark.sql.DataFrame)
+      : Option[(Seq[String], org.apache.spark.sql.DataFrame)] =
+    df match {
+      case d: org.apache.spark.sql.classic.Dataset[_] =>
+        d.queryExecution.analyzed match {
+          case org.apache.spark.sql.catalyst.plans.logical.DeduplicateWithinWatermark(keys, child) =>
+            Some((keys.map(_.name), org.apache.spark.sql.classic.Dataset.ofRows(d.sparkSession, child)))
+          case _ => None
+        }
+      case _ => None
+    }
+
   /** Never-throwing variant for cleanup paths (iterative operators,
     * streaming state maintenance) — a failed release is a leak, not an
     * error worth failing the job for. */

@@ -622,6 +622,165 @@ class StreamingSpec extends SparkSuite {
     assert(sessions.count(_._1 == "B") === 1)
   }
 
+  // ---- The fused dedup + sessionizer under sessions(deduped(…)) ------------
+
+  private val T0 = Timestamp.valueOf("2024-01-01 00:00:00").getTime
+  private val Minute = 60L * 1000
+
+  /** Seeded random statement batches: fresh rows around a moving clock,
+    * copies of earlier ids (same actor, ts and verb) re-sent from the same
+    * or another source in this or a later batch, rows at or below the
+    * watermark, and clock jumps wider than the gap plus the delay. */
+  private def stmtBatches(seed: Long, batches: Int, delayMs: Long): Seq[Seq[SessionStmt]] = {
+    val rnd = new scala.util.Random(seed)
+    val sources = Seq("browser", "server", "mobile")
+    val sent = scala.collection.mutable.ArrayBuffer.empty[SessionStmt]
+    var now = T0
+    var maxTs = Long.MinValue
+    var nextId = 0
+    def fresh(ts: Long) = {
+      nextId += 1
+      SessionStmt(s"id-$seed-$nextId", s"actor${rnd.nextInt(4)}", sources(rnd.nextInt(3)),
+        new Timestamp(ts), s"verb${rnd.nextInt(3)}")
+    }
+    (0 until batches).map { _ =>
+      now += (if (rnd.nextDouble() < 0.25) (45 + rnd.nextInt(90)) * Minute else rnd.nextInt(15) * Minute)
+      val wm = if (maxTs == Long.MinValue) 0L else maxTs - delayMs
+      val batch = (0 until 10 + rnd.nextInt(15)).map { _ =>
+        rnd.nextInt(10) match {
+          case 0 if wm > T0 => fresh(wm - rnd.nextInt(60) * Minute) // late: ts <= watermark
+          case 1 | 2 if sent.nonEmpty =>
+            val s = sent(rnd.nextInt(sent.size))
+            if (rnd.nextBoolean()) s else s.copy(source = sources(rnd.nextInt(3)))
+          case _ =>
+            val s = fresh(now + (rnd.nextInt(11) - 5) * Minute)
+            sent += s
+            s
+        }
+      }
+      maxTs = math.max(maxTs, batch.map(_.ts.getTime).max)
+      batch
+    }
+  }
+
+  private def sessionRows(table: String): Seq[(String, String, Long, Long, Long, Int, String)] =
+    spark.table(table).collect().toSeq.map(r => (r.getAs[String]("actor_key"),
+      r.getAs[String]("source"), r.getAs[Timestamp]("session_start").getTime,
+      r.getAs[Timestamp]("session_end").getTime, r.getAs[Long]("n_events"),
+      r.getAs[Int]("n_verbs"), r.getAs[String]("top_verb"))).sorted
+
+  test("sessions(deduped(…)) equals Spark's dedup then the (actor, source) sessionizer after every batch") {
+    Seq(11L, 12L, 13L).foreach { seed =>
+      val mem = MemoryStream[SessionStmt]
+      val stmts = mem.toDF().withWatermark("ts", "7 minutes")
+      val fused = StreamPipeline.sessions(StreamPipeline.deduped(stmts))
+      val reference = SessionizeReference(stmts.dropDuplicatesWithinWatermark("id")
+        .select("actor_key", "source", "ts", "verb_id").as[Sessionize.Event])
+      val qf = fused.writeStream.format("memory").queryName(s"fused_$seed")
+        .outputMode("append").option("checkpointLocation", tmp("cpfused")).start()
+      val qr = reference.writeStream.format("memory").queryName(s"reference_$seed")
+        .outputMode("append").option("checkpointLocation", tmp("cpref")).start()
+      try {
+        stmtBatches(seed, 8, 7 * Minute).zipWithIndex.foreach { case (batch, b) =>
+          mem.addData(batch: _*)
+          qf.processAllAvailable(); qr.processAllAvailable()
+          assert(sessionRows(s"fused_$seed") === sessionRows(s"reference_$seed"),
+            s"seed $seed, after batch $b")
+        }
+        assert(sessionRows(s"fused_$seed").nonEmpty, s"seed $seed closed no session")
+        assert(qf.lastProgress.stateOperators.map(_.operatorName).toSeq === Seq("flatMapGroupsWithState"))
+      } finally { qf.stop(); qr.stop() }
+    }
+  }
+
+  test("fused sessions: a restart from the checkpoint equals an uninterrupted run") {
+    val mem = MemoryStream[SessionStmt]
+    val sessions = StreamPipeline.sessions(StreamPipeline.deduped(
+      mem.toDF().withWatermark("ts", "10 minutes"))).toDF()
+    def start(sink: LakeSink, cp: String) = sessions.writeStream.outputMode("append")
+      .option("checkpointLocation", cp)
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) => sink.addBatch(id, b); () }
+      .start()
+    val whole = new LakeSink(tmp("sesswhole"))
+    val restarted = new LakeSink(tmp("sessrestart"))
+    val cpWhole = tmp("cpwhole")
+    val cpRestart = tmp("cprestart")
+    val qw = start(whole, cpWhole)
+    var qr = start(restarted, cpRestart)
+    try {
+      stmtBatches(21L, 8, 10 * Minute).zipWithIndex.foreach { case (batch, b) =>
+        if (b == 4) { qr.stop(); qr = start(restarted, cpRestart) }
+        mem.addData(batch: _*)
+        qw.processAllAvailable(); qr.processAllAvailable()
+      }
+    } finally { qw.stop(); qr.stop() }
+    def rows(sink: LakeSink) = sink.read(spark)
+      .select("actor_key", "source", "session_start", "session_end", "n_events", "n_verbs", "top_verb")
+      .collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    assert(rows(whole).nonEmpty)
+    assert(rows(restarted) === rows(whole))
+  }
+
+  test("sessions(deduped(statements)) runs one state operator that drops and counts late rows") {
+    def run(name: String, dedup: Boolean) = {
+      val mem = MemoryStream[InputRow]
+      val stmts = StreamPipeline.statements(mem.toDF())
+      val q = StreamPipeline.sessions(if (dedup) StreamPipeline.deduped(stmts) else stmts)
+        .writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", tmp("cpsesscensus"))
+        .trigger(Trigger.ProcessingTime(0)).start()
+      try {
+        mem.addData(inputRows(100000, 100050): _*) // advances the watermark past rows 0..49
+        q.processAllAvailable()
+        mem.addData(inputRows(0, 50): _*) // late
+        q.processAllAvailable()
+        mem.addData(inputRows(200000, 200001): _*) // closes the sessions of rows 100000..100049
+        q.processAllAvailable()
+        val ops = q.lastProgress.stateOperators.toSeq
+        val dropped = q.recentProgress.flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
+        val events = spark.table(name).agg(sum("n_events")).collect().head.getLong(0)
+        (ops.map(_.operatorName), dropped, events)
+      } finally q.stop()
+    }
+    val late = (0L until 50L).filter(Synth.isConvertible)
+    val onTime = (100000L until 100050L).filter(Synth.isConvertible)
+    val distinctIds = onTime.map(i => graft.functions.Uuid5.uuid5(Synth.UuidNamespace, Synth.edxJson(i))).distinct
+    assert(distinctIds.size < onTime.size, "the input must carry duplicate ids")
+    val (ops, dropped, events) = run("sess_fused_census", dedup = true)
+    assert(ops === Seq("flatMapGroupsWithState"))
+    assert(dropped === late.size.toLong)
+    assert(events === distinctIds.size.toLong)
+    // without deduped the sessionizer keeps every copy of an id
+    val (plainOps, _, plainEvents) = run("sess_plain_census", dedup = false)
+    assert(plainOps === Seq("flatMapGroupsWithState"))
+    assert(plainEvents === onTime.size.toLong)
+  }
+
+  test("fused sessions: a data batch whose watermark passed ts + gap closes that session in the batch") {
+    // with no-data batches off, batch 1 evicts and times out at the
+    // watermark batch 0 set (11:50) but filters late rows by the one batch
+    // 0 ran at (none): the row at 10:05 is kept, and its session's
+    // end + gap (10:35) is already below 11:50
+    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val mem = MemoryStream[SessionStmt]
+    def at(hm: String) = Timestamp.valueOf(s"2024-01-01 $hm:00")
+    spark.conf.set(key, "false")
+    val q = try StreamPipeline.sessions(StreamPipeline.deduped(mem.toDF().withWatermark("ts", "10 minutes")))
+      .writeStream.format("memory").queryName("sess_jump").outputMode("append")
+      .option("checkpointLocation", tmp("cpsessjump")).start()
+    finally spark.conf.unset(key)
+    try {
+      mem.addData(SessionStmt("a1", "A", "browser", at("10:00"), "v1"),
+        SessionStmt("b1", "B", "browser", at("12:00"), "v1"))
+      q.processAllAvailable()
+      mem.addData(SessionStmt("a2", "A", "browser", at("10:05"), "v2"),
+        SessionStmt("a1", "A", "server", at("10:00"), "v1")) // a re-send of a1
+      q.processAllAvailable()
+      assert(sessionRows("sess_jump") === Seq(("A", "browser", at("10:00").getTime,
+        at("10:05").getTime, 2L, 2, "v1")))
+    } finally q.stop()
+  }
+
   test("tumbling stream counts equal the batch aggregation on the same data") {
     val mem = MemoryStream[InputRow]
     val stmts = StreamPipeline.statements(mem.toDF())
@@ -1178,5 +1337,64 @@ test("time travel: snapshots read the pre-compaction table; vacuum honors retent
     }
     assert(got.keySet === expect.keySet)
     expect.foreach { case (src, top) => assert(got(src) === top, s"source $src") }
+  }
+}
+
+/** A statement row as the sessions path reads it. */
+case class SessionStmt(id: String, actor_key: String, source: String, ts: Timestamp, verb_id: String)
+
+/** The sessionizer as it ran before the id dedup was fused into it: one
+  * `flatMapGroupsWithState` keyed by (actor, source), fed by Spark's own
+  * `dropDuplicatesWithinWatermark`. The differential reference of
+  * [[Sessionize]]. */
+object SessionizeReference {
+  import org.apache.spark.sql.Dataset
+  import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+  import Sessionize.{Event, Session}
+
+  case class SessionState(start: Long, end: Long, n: Long, verbs: Map[String, Long])
+
+  private def toSession(key: (String, String), s: SessionState): Session = {
+    val top = s.verbs.toSeq.sortBy { case (v, n) => (-n, v) }.head._1
+    Session(key._1, key._2, new Timestamp(s.start), new Timestamp(s.end),
+      s.n, s.verbs.size, top)
+  }
+
+  def process(gapMs: Long)(
+      key: (String, String),
+      rows: Iterator[Event],
+      state: GroupState[SessionState]): Iterator[Session] = {
+    if (state.hasTimedOut) {
+      val out = state.getOption.map(toSession(key, _)).iterator
+      state.remove()
+      return out
+    }
+    val sorted = rows.toArray.sortBy(e => (e.ts.getTime, e.verb_id))
+    var cur = state.getOption
+    val closed = scala.collection.mutable.ArrayBuffer.empty[Session]
+    sorted.foreach { e =>
+      val t = e.ts.getTime
+      cur match {
+        case Some(s) if t - s.end <= gapMs =>
+          cur = Some(SessionState(math.min(s.start, t), math.max(s.end, t), s.n + 1,
+            s.verbs.updated(e.verb_id, s.verbs.getOrElse(e.verb_id, 0L) + 1)))
+        case Some(s) =>
+          closed += toSession(key, s)
+          cur = Some(SessionState(t, t, 1, Map(e.verb_id -> 1L)))
+        case None =>
+          cur = Some(SessionState(t, t, 1, Map(e.verb_id -> 1L)))
+      }
+    }
+    cur.foreach { s =>
+      state.update(s)
+      state.setTimeoutTimestamp(s.end + gapMs)
+    }
+    closed.iterator
+  }
+
+  def apply(events: Dataset[Event], gapMs: Long = Sessionize.DefaultGapMs): Dataset[Session] = {
+    import events.sparkSession.implicits._
+    events.groupByKey(e => (e.actor_key, e.source))
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(process(gapMs))
   }
 }
