@@ -44,7 +44,8 @@ object Sessionize {
   case class Open(source: String, start: Long, end: Long, n: Long, verbs: Map[String, Long])
 
   /** One actor's state: id → expiry (µs, ts + watermark delay) for the ids
-    * seen within the watermark, and the open session per source. */
+    * seen within the watermark as of the actor's last call, and the open
+    * session per source. */
   case class ActorState(ids: Map[String, Long], open: Seq[Open])
 
   case class Session(
@@ -85,34 +86,46 @@ object Sessionize {
 
   /** One actor's batch (or its timeout), in this order:
     *  1. drop rows whose id is already stored or was seen earlier in the
-    *     batch (arrival order, the first copy wins), checking the ids
-    *     stored so far before any eviction;
+    *     batch (arrival order, the first copy wins), checking every stored
+    *     id, expired ones too: a row repeating an id that has expired
+    *     carries its ts, so it is older than the watermark and Spark has
+    *     already dropped it;
     *  2. per source, extend or close sessions over the kept rows in
     *     (ts, verb_id) order;
     *  3. close every session whose end + gap is below the watermark,
     *     also one extended in step 2 (consecutive data batches can move
     *     the watermark past a kept row's ts + gap);
     *  4. evict ids whose expiry the watermark has reached;
-    *  5. time out at the earliest remaining end + gap or id expiry, or
-    *     remove the state when nothing remains.
+    *  5. time out at the earliest remaining end + gap, or, with no session
+    *     open, at the latest id expiry; remove the state when nothing
+    *     remains.
     * With `delayUs` the watermark delay in µs, steps 1 and 4 are
-    * `dropDuplicatesWithinWatermark`'s own. */
+    * `dropDuplicatesWithinWatermark`'s own. Ids are evicted only when the
+    * actor is called: an id is kept by a session of its source whose end
+    * is at least its ts, so with delay ≤ gap the session's timeout comes
+    * after the id's expiry, and an actor is woken only to close sessions.
+    *
+    * Cost: the actor's state is one row, rewritten whenever the actor is
+    * called, so a batch costs the actor's ids within the watermark, not
+    * just its new ones. That is cheap while an actor holds few ids per
+    * watermark window; one hot actor (every anonymous statement shares
+    * the actor_key "anonymous") or microbatches much shorter in event
+    * time than the delay make it grow (see ROADMAP item 2). */
   def process(gapMs: Long, delayUs: Long)(
       actor: String,
       rows: Iterator[IdEvent],
       state: GroupState[ActorState]): Iterator[Session] = {
     val wm = state.getCurrentWatermarkMs()
-    val ids = mutable.HashMap.empty[String, Long]
+    val stored = state.getOption
+    val storedIds = stored.fold(Map.empty[String, Long])(_.ids)
+    val newIds = mutable.HashMap.empty[String, Long]
     val open = mutable.HashMap.empty[String, Acc]
-    state.getOption.foreach { s =>
-      ids ++= s.ids
-      s.open.foreach(o => open(o.source) = Acc(o))
-    }
+    stored.foreach(_.open.foreach(o => open(o.source) = Acc(o)))
     val bySource = mutable.HashMap.empty[String, mutable.ArrayBuffer[IdEvent]]
     rows.foreach { e =>
-      val fresh = e.id == null || !ids.contains(e.id)
+      val fresh = e.id == null || !(storedIds.contains(e.id) || newIds.contains(e.id))
       if (fresh) {
-        if (e.id != null) ids(e.id) = DateTimeUtils.fromJavaTimestamp(e.ts) + delayUs
+        if (e.id != null) newIds(e.id) = DateTimeUtils.fromJavaTimestamp(e.ts) + delayUs
         bySource.getOrElseUpdate(e.source, mutable.ArrayBuffer.empty) += e
       }
     }
@@ -134,16 +147,18 @@ object Sessionize {
       if (!live) closed += s.session(actor)
       live
     }
-    ids.filterInPlace((_, expiry) => expiry > wm * 1000)
+    val wmUs = DateTimeUtils.millisToMicros(wm)
+    val ids = (if (storedIds.valuesIterator.exists(_ <= wmUs)) storedIds.filter(_._2 > wmUs)
+      else storedIds) ++ newIds.filter(_._2 > wmUs)
     if (ids.isEmpty && open.isEmpty) state.remove()
     else {
-      state.update(ActorState(ids.toMap, open.valuesIterator.map(_.toOpen).toSeq))
-      // an id expiring at e µs is evicted once wm * 1000 >= e, which is
-      // the first watermark strictly above floor((e - 1) / 1000) ms. After
-      // steps 3 and 4 both minima are >= wm, as setTimeoutTimestamp requires
-      state.setTimeoutTimestamp(math.min(
-        open.valuesIterator.map(_.end + gapMs).minOption.getOrElse(Long.MaxValue),
-        ids.valuesIterator.map(e => Math.floorDiv(e - 1, 1000L)).minOption.getOrElse(Long.MaxValue)))
+      state.update(ActorState(ids, open.valuesIterator.map(_.toOpen).toSeq))
+      // after steps 3 and 4 every end + gap is >= wm and every expiry >
+      // wm * 1000; an id expiring at e µs is evicted by the first
+      // watermark above floor((e - 1) / 1000) ms, as the timeout fires
+      state.setTimeoutTimestamp(
+        if (open.nonEmpty) open.valuesIterator.map(_.end + gapMs).min
+        else Math.floorDiv(ids.valuesIterator.max - 1, 1000L))
     }
     closed.iterator
   }

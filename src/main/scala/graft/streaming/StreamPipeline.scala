@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
@@ -112,17 +113,24 @@ object StreamPipeline {
     * sessionizer: `s` is sessionized directly by
     * [[Sessionize.deduplicated]], whose per-actor state also holds the ids
     * seen within the watermark. That saves a shuffle and a state-store
-    * commit per partition per microbatch. Any other input is sessionized
-    * as it is, with no dedup.
+    * commit per partition per microbatch. The fusion reads the dedup's
+    * delay from the watermark on `ts`; without one the dedup stays Spark's
+    * own operator, and the query fails at start, as every sessionizer
+    * input without a watermark on `ts` does (event-time timeouts need it).
+    * Any other input is sessionized as it is, with no dedup.
     *
     * Precondition of the fused path: every copy of an id carries the same
     * actor_key and ts, as converted statements do (`id = uuid5(raw)`, and
     * actor_key and ts are functions of `raw`). A copy of an id re-sent
     * from another source still counts once, in the source of the copy
-    * that arrived first. */
+    * that arrived first. Its cost: each actor called in a batch rewrites
+    * the ids it holds within the watermark ([[Sessionize.process]]), so
+    * the fusion pays off while actors hold few ids per watermark window. */
   def sessions(statements: DataFrame): Dataset[Sessionize.Session] =
     Bridge.withinWatermarkDedup(statements) match {
-      case Some((Seq("id"), input)) => Sessionize.deduplicated(input)
+      case Some((Seq("id"), input)) if input.schema.exists(f =>
+          f.name == "ts" && f.metadata.contains(EventTimeWatermark.delayKey)) =>
+        Sessionize.deduplicated(input)
       case _ =>
         import statements.sparkSession.implicits._
         Sessionize(statements

@@ -781,6 +781,54 @@ class StreamingSpec extends SparkSuite {
     } finally q.stop()
   }
 
+  test("fused sessions: an actor times out at its sessions' end + gap, not at each id's expiry") {
+    import org.apache.spark.api.java.Optional
+    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
+    import Sessionize.{ActorState, IdEvent}
+    def at(hms: String) = Timestamp.valueOf(s"2024-01-01 $hms")
+    val delayUs = 10 * Minute * 1000
+    def call(gapMs: Long, prior: Option[ActorState], wm: String, rows: IdEvent*) = {
+      val state = TestGroupState.create[ActorState](
+        prior.fold(Optional.empty[ActorState]())(Optional.of(_)), GroupStateTimeout.EventTimeTimeout,
+        0L, Optional.of(at(wm).getTime), prior.nonEmpty && rows.isEmpty)
+      val out = Sessionize.process(gapMs, delayUs)("A", rows.iterator, state).toSeq
+      (out.map(s => (s.source, s.n_events)), state)
+    }
+    // delay 10 min < gap 30 min: the ids expire before the sessions that hold them end
+    val (none, s1) = call(30 * Minute, None, "09:00:00",
+      IdEvent("A", "a1", "browser", at("10:00:00"), "v1"), IdEvent("A", "a2", "server", at("10:04:00"), "v1"))
+    assert(none.isEmpty && s1.get.ids.keySet === Set("a1", "a2"))
+    assert(s1.getTimeoutTimestampMs.get === at("10:30:00").getTime)
+    val (first, s2) = call(30 * Minute, Some(s1.get), "10:31:00")
+    assert(first === Seq(("browser", 1L)))
+    assert(s2.get.ids.isEmpty && s2.get.open.map(_.source) === Seq("server"))
+    assert(s2.getTimeoutTimestampMs.get === at("10:34:00").getTime)
+    val (second, s3) = call(30 * Minute, Some(s2.get), "10:35:00")
+    assert(second === Seq(("server", 1L)) && s3.isRemoved)
+    // delay 10 min > gap 5 min: with its session closed, the actor waits for the last id to expire
+    val (_, t1) = call(5 * Minute, None, "09:00:00", IdEvent("A", "a1", "browser", at("10:00:00"), "v1"))
+    assert(t1.getTimeoutTimestampMs.get === at("10:05:00").getTime)
+    val (closed, t2) = call(5 * Minute, Some(t1.get), "10:06:00")
+    assert(closed === Seq(("browser", 1L)) && t2.get.ids.keySet === Set("a1") && t2.get.open.isEmpty)
+    assert(t2.getTimeoutTimestampMs.get === at("10:10:00").getTime - 1)
+    val (_, t3) = call(5 * Minute, Some(t2.get), "10:10:00")
+    assert(t3.isRemoved)
+  }
+
+  test("sessions(deduped(…)) over a stream watermarked on another column is not fused") {
+    // the fused path reads the dedup's delay from ts; without a watermark on
+    // ts the dedup stays Spark's own operator, and the query fails at start
+    // as it does over Spark's dedup: event-time timeouts need ts watermarked
+    val mem = MemoryStream[SessionStmt]
+    val stmts = mem.toDF().withColumn("arrival", col("ts")).withWatermark("arrival", "7 minutes")
+    def error(plan: => org.apache.spark.sql.Dataset[Sessionize.Session]) =
+      intercept[org.apache.spark.sql.AnalysisException](plan.writeStream.format("memory")
+        .queryName("arrival").option("checkpointLocation", tmp("cparrival")).start()).getCondition
+    assert(error(StreamPipeline.sessions(StreamPipeline.deduped(stmts))) ===
+      error(SessionizeReference(stmts.dropDuplicatesWithinWatermark("id")
+        .select("actor_key", "source", "ts", "verb_id").as[Sessionize.Event])))
+  }
+
   test("tumbling stream counts equal the batch aggregation on the same data") {
     val mem = MemoryStream[InputRow]
     val stmts = StreamPipeline.statements(mem.toDF())
