@@ -25,20 +25,15 @@ case class Graft(spark: SparkSession,
                  uuidNamespace: String = sources.Synth.UuidNamespace,
                  platformUrl: String = sources.Synth.PlatformUrl) {
 
-  /** `ralph read` — JSONL lines from a file/directory (S1). */
+  /** `ralph read` — JSONL lines from a file/directory (S1), or from an
+    * object store (S9/S10: an `s3a://` or `swift://` URI once
+    * [[sources.ObjectStore]] has configured the connector). */
   def read(path: String, maxStatements: Option[Int] = None): DataFrame =
     FsJsonl.read(spark, path, maxStatements = maxStatements)
-
-  /** Read the pre-tokenized input table (BASELINE.json input_hint shape). */
-  def readTokens(path: String): DataFrame = spark.read.parquet(path)
 
   /** `ralph read -b ldp` (S11): consume unread gz archives, history-gated. */
   def readLdp(dir: String, historyPath: String): DataFrame =
     sources.Ldp.readNew(spark, dir, historyPath)
-
-  /** `ralph read -b s3 '…'` (S9): configure once, then any s3a:// URI reads
-    * through the ordinary FS path. */
-  def readS3(uri: String): DataFrame = sources.ObjectStore.readJsonl(spark, uri)
 
   /** `ralph extract -p gelf|es` (S15/S16): raw log lines → event JSON. */
   def extract(df: DataFrame, parser: String, line: Column = col("raw")): DataFrame =

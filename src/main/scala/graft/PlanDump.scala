@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for declared queries to files — the
   * plan-evidence tool for optimization rounds (plans/rNN/<q>_<tag>.txt).
   * Args: <outDir> <tag> [comma-separated query names | substring filter].
@@ -16,13 +14,8 @@ object PlanDump {
     val only = args.drop(2).headOption
       .map(f => (n: String) => f.split(",").exists(n.contains))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.build(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]", 32)
     spark.sparkContext.setLogLevel("ERROR")
-    Sessions.tune(spark)
     Files.createDirectories(Paths.get(outDir))
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(q => only.forall(_(q._1))).foreach { case (name, fn) =>

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.EmbeddingOps
@@ -27,13 +27,8 @@ object RecallAudit {
   def main(args: Array[String]): Unit = {
     val sfs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.build(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]", 32)
     spark.sparkContext.setLogLevel("ERROR")
-    Sessions.tune(spark)
 
     val nQ = 10
     val k = 5

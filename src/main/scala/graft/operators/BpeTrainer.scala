@@ -153,31 +153,18 @@ object BpeTrainer {
     * When the strict filter empties the batch (an all-ties round) the
     * round degrades to the sequential single-merge step, which is always
     * sound. BpeTrainerSpec asserts table identity against [[train]] across
-    * fixture + fuzz corpora and counts the Spark jobs saved. */
+    * fixture + fuzz corpora and counts the Spark jobs saved. Spark job count
+    * is proportional to driver rounds, not merges (BASELINE.md, "Large-vocab
+    * BPE evidence": 3.0 jobs per round at 1,000 merges on sf0.1). */
   def trainBatched(seqs: Dataset[Array[Int]], nMerges: Int,
                    minCount: Long = 2L, batchK: Int = 16): (Seq[Merge], Dataset[Array[Int]]) = {
-    val (m, t, _) = trainBatchedWithRounds(seqs, nMerges, minCount, batchK)
-    (m, t)
-  }
-
-  /** [[trainBatched]] + the DRIVER ROUND count — the scaling evidence a
-    * large-vocab build reports (BpeProfile / BASELINE.md): Spark job count
-    * is proportional to rounds, and rounds collapse toward nMerges/batchK
-    * while distinct pair counts remain (the strict-cutoff batches are
-    * full), degrading to 1-merge rounds only in the all-ties tail of a
-    * small corpus. */
-  def trainBatchedWithRounds(seqs: Dataset[Array[Int]], nMerges: Int,
-                             minCount: Long = 2L, batchK: Int = 16)
-      : (Seq[Merge], Dataset[Array[Int]], Int) = {
     val spark = seqs.sparkSession
     import spark.implicits._
     var current = seqs.persist(StorageLevel.MEMORY_AND_DISK)
     var nextId = seedNextId(current)
     val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
-    var rounds = 0
     var done = false
     while (merges.length < nMerges && !done) {
-      rounds += 1
       val want = math.min(batchK, nMerges - merges.length)
       val cand = rankedPairCounts(current)
         .filter(org.apache.spark.sql.functions.col("count") >= minCount)
@@ -212,7 +199,7 @@ object BpeTrainer {
         }
       }
     }
-    (merges.toSeq, current, rounds)
+    (merges.toSeq, current)
   }
 
   /** The tokenizer side: apply a learned merge table to any sequence (e.g.
@@ -385,7 +372,7 @@ object BpeTrainer {
     // each do sub-second work — spreading them over 32 tasks costs more in
     // per-round scheduling than the parallelism returns (measured in-suite:
     // fanned ~4.9-5.7 s vs unfanned ~3.9 s), and the final encode pass is
-    // ~0.25 s even single-task (BpeProfile)
+    // ~0.25 s even single-task (BASELINE.md, "Large-vocab BPE evidence")
     val docs = TextOps.documents(spark, dir).select("doc_id", "text")
     val seqs = docs.select("text").as[String].map(graft.functions.TokenCodec.encodeString)
     val (merges, trained) = trainBatched(seqs, nMerges)

@@ -242,10 +242,10 @@ object TextOps {
     * The signature table is MATERIALIZED once (localCheckpoint) before the
     * band self-join: both join sides otherwise re-evaluate the whole
     * scan→shingle→md5-signature subtree (the aggregate+join re-evaluation
-    * trap), paying the heaviest stage twice. Measured on sf0.1
-    * (SimhashProfile): shipped 1.03 s → 0.71 s; the alternative
-    * union-of-4-projections split (no Generate, every method JIT-able) is
-    * SLOWER at 1.4 s — 4 scans beat nothing. At 10^12 docs the sig table
+    * trap), paying the heaviest stage twice. Measured on sf0.1 (BASELINE.md,
+    * "q_simhash_pairs closed with data"): shipped 1.03 s → 0.71 s; the
+    * alternative union-of-4-projections split (no Generate, every method
+    * JIT-able) is SLOWER at 1.4 s — 4 scans beat nothing. At 10^12 docs the sig table
     * is 16 B/doc, vastly cheaper to store once than to recompute from
     * text twice (on a cluster it would be a persisted intermediate). */
   def simhashPairs(spark: SparkSession, dir: String, maxHamming: Int = 3): DataFrame =

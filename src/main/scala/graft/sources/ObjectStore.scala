@@ -1,21 +1,23 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Object-store backends (S9 S3, S10 Swift) — the reference's
   * boto3/swiftclient streaming readers and multipart writers
   * (/root/reference/src/ralph/backends/data/s3.py:114-414, swift.py) map
-  * onto Spark's Hadoop filesystem connectors: the engine code is identical
-  * to the FS path (`spark.read.text("s3a://bucket/…")`), only the
-  * FileSystem configuration differs. This object is that configuration
-  * path, kept as code (not just a doc note) so a cluster deployment is a
-  * one-call setup.
+  * onto Spark's Hadoop filesystem connectors: only the FileSystem
+  * configuration differs from the FS path. This object is that
+  * configuration, kept as code (not just a doc note) so a cluster
+  * deployment is a one-call setup. Reads then go through `Graft.read` on
+  * the object-store URI (`s3a://bucket/prefix` glob,
+  * `swift://container.service/prefix`), the same `FsJsonl.read` as a
+  * local directory.
   *
   * Sandbox caveat: this container is zero-egress and ships no
   * hadoop-aws/hadoop-openstack jars, so these paths cannot be
   * integration-tested here; the conf keys are the stable, documented
   * Hadoop contract (verified against the Hadoop 3.x docs shipped with
-  * Spark 4). ObjectStoreSpec asserts the configuration lands in the
+  * Spark 4). SourcesSpec asserts the configuration lands in the
   * session's hadoopConfiguration.
   */
 object ObjectStore {
@@ -45,9 +47,4 @@ object ObjectStore {
     c.set(s"fs.swift.service.$service.tenant", tenant)
     c.set("fs.swift.impl", "org.apache.hadoop.fs.swift.snative.SwiftNativeFileSystem")
   }
-
-  /** Reads are the ordinary FS path over an object-store URI
-    * (`s3a://bucket/prefix` glob, `swift://container.service/prefix`). */
-  def readJsonl(spark: SparkSession, uri: String): DataFrame =
-    FsJsonl.read(spark, uri)
 }

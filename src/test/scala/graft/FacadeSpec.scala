@@ -47,6 +47,18 @@ class FacadeSpec extends SparkSuite {
     assert(out.count() === 1)
   }
 
+  test("readLdp reads a gz archive once") {
+    val g = Graft(spark)
+    val dir = Files.createTempDirectory("graft-fldp").toString
+    val out = new java.util.zip.GZIPOutputStream(
+      new java.io.FileOutputStream(s"$dir/archive-1.gz"))
+    out.write("{\"id\": 1}\n{\"id\": 2}".getBytes("UTF-8")); out.close()
+    val hist = Files.createTempDirectory("graft-fldph").toString + "/history"
+    assert(g.readLdp(dir, hist).as[String].collect().toSet ===
+      Set("""{"id": 1}""", """{"id": 2}"""))
+    assert(g.readLdp(dir, hist).count() === 0)
+  }
+
   test("zorderWrite | readPruned facade round-trip") {
     val g = Graft(spark)
     val dir = Files.createTempDirectory("graft-fzo").toString
