@@ -274,11 +274,9 @@ object SparkEntry {
     // once and the probe machinery reads the appended files correctly
     "q_ann_ivf_incremental" -> ((s, d) => {
       import org.apache.spark.sql.functions._
-      val idx = s"${graft.operators.LayoutOps.scratchBase()}/graft-ivfinc-" +
-        d.replaceAll("[^A-Za-z0-9.]", "_")
+      val idx = graft.operators.LayoutOps.scratchDirUntilExit("graft-ivfinc-").toString
       val emb = EmbeddingOps.embeddings(s, d)
-      // deterministic path, ALWAYS rebuilt (the q_ann_ivfpq rationale);
-      // STATIC overwrite clears any earlier appends atomically
+      // a fresh dir per call, ALWAYS built (the q_ann_ivfpq rationale)
       EmbeddingOps.buildIvfIndexOn(s, emb.filter(col("vec_id") % 3 === 0),
         idx, nCells = 16)
       EmbeddingOps.appendToIvfIndex(s, idx, emb.filter(col("vec_id") % 3 === 1))
@@ -298,12 +296,14 @@ object SparkEntry {
     // same partition-pruned compressed plumbing (EmbeddingSpec)
     "q_ann_ivfpq" -> ((s, d) => {
       import org.apache.spark.sql.functions._
-      val idx = s"${graft.operators.LayoutOps.scratchBase()}/graft-ivfpq-" +
-        d.replaceAll("[^A-Za-z0-9.]", "_")
-      // deterministic path, ALWAYS rebuilt: reusing a leftover index made
-      // the timed query's work depend on host /tmp state (irreproducible
-      // bench times) and could silently serve an index built under old
-      // parameters. The build is part of what this query measures.
+      // a fresh dir per call, read by the returned frame and deleted at
+      // JVM exit, so the index is ALWAYS built: reusing a leftover index
+      // made the timed query's work depend on host /tmp state
+      // (irreproducible bench times) and could silently serve an index
+      // built under old parameters, and a fixed path let two processes
+      // delete each other's files. The build is part of what this query
+      // measures.
+      val idx = graft.operators.LayoutOps.scratchDirUntilExit("graft-ivfpq-").toString
       EmbeddingOps.buildIvfPqIndex(s, d, idx, nCells = 16, m = 8, kCodes = 256)
       val queries = EmbeddingOps.embeddings(s, d).filter(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
@@ -311,12 +311,11 @@ object SparkEntry {
         rerank = Int.MaxValue)
     }),
     // SQ8 (int8-binary) compressed scan + exact re-rank — same
-    // deterministic-tmpdir always-rebuild rationale as q_ann_ivfpq; the
-    // rerank window is 64 (measured exact ≥ top-5 at every test sf with
-    // wide margin, EmbeddingSpec)
+    // fresh-dir always-build rationale as q_ann_ivfpq; the rerank window
+    // is 64 (measured exact ≥ top-5 at every test sf with wide margin,
+    // EmbeddingSpec)
     "q_ann_sq8" -> ((s, d) => {
-      val idx = s"${graft.operators.LayoutOps.scratchBase()}/graft-sq8-" +
-        d.replaceAll("[^A-Za-z0-9.]", "_")
+      val idx = graft.operators.LayoutOps.scratchDirUntilExit("graft-sq8-").toString
       EmbeddingOps.buildSq8Index(s, d, idx)
       EmbeddingOps.sq8TopK(s, d, idx, nQueries = 10, k = 5, rerank = 64)
     }),

@@ -64,6 +64,22 @@ object LayoutOps {
   def scratchDir(prefix: String): java.nio.file.Path =
     Files.createTempDirectory(scratchBase(), prefix)
 
+  /** A fresh [[scratchDir]] deleted when the JVM exits: for state a
+    * returned frame reads lazily (an index a query builds and then scans),
+    * which the builder cannot delete before the caller has run it. Every
+    * call gets its own dir, so concurrent builds never share files. */
+  def scratchDirUntilExit(prefix: String): java.nio.file.Path = {
+    val d = scratchDir(prefix)
+    untilExit.add(d)
+    d
+  }
+
+  private lazy val untilExit = {
+    val dirs = java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
+    sys.addShutdownHook(dirs.forEach(d => deleteTree(d)))
+    dirs
+  }
+
   /** Recursive delete for scratch dirs (deepest-first; missing tolerated). */
   def deleteTree(root: java.nio.file.Path): Unit = {
     if (Files.exists(root)) {

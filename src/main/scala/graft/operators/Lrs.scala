@@ -10,9 +10,16 @@ import org.apache.spark.sql.functions._
   * /root/reference/src/ralph/backends/lrs/fs.py:62-405 (ES/Mongo/CH agree).
   *
   * One Catalyst filter stack replaces the reference's four per-backend query
-  * translators; every predicate lands on a pushdown column of [[Store]] (or
-  * a nested field of `stmt`), so parquet row-group stats + partition pruning
-  * do what ES/Mongo/CH indexes did for the reference.
+  * translators. statementId, verb, activity, registration, since/until and
+  * the keyset cursor compare top-level columns of [[Store]] with literals,
+  * so parquet row-group stats skip row groups, and over a
+  * [[graft.streaming.LakeSink]] read its file index also skips whole
+  * segments by their event-time range and id bloom. The agent filters
+  * compare fields nested in `stmt` structs, which parquet pushdown takes
+  * too. related_activities searches the contextActivities lists with
+  * `array_contains`, which no stat can skip: the scan reads only the `id`
+  * of each list (nested schema pruning), stays vectorized, and the
+  * predicate runs on the rows read.
   */
 object Lrs {
 
@@ -101,11 +108,16 @@ object Lrs {
   }
 
   /** related_activities: object.id or any contextActivities id, or the
-    * SubStatement's object id (lrs/fs.py:315-335). */
+    * SubStatement's object id (lrs/fs.py:315-335). A list is searched as
+    * `array_contains(list.id, a)`: under a filter it keeps the same rows as
+    * `exists(coalesce(list, array()), x => x.id === a)` (a null list, a
+    * null element or a null id is null or false in both, never true), but
+    * it is not a lambda, so nested schema pruning reads only `id` of each
+    * list and the scan stays vectorized. */
   private def relatedActivityMatch(stmt: Column, activityId: String): Column = {
     val ca = stmt.getField("context").getField("contextActivities")
     val inList = Seq("parent", "grouping", "category", "other").map { f =>
-      exists(coalesce(ca.getField(f), array()), x => x.getField("id") === activityId)
+      array_contains(ca.getField(f).getField("id"), activityId)
     }.reduce(_ || _)
     val obj = stmt.getField("object")
     obj.getField("id") === activityId || inList ||

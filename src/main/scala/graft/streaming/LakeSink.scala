@@ -8,6 +8,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.parquet.format.{FileMetaData, SchemaElement, Type => PType, Util}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.storage.StorageLevel
@@ -44,10 +46,9 @@ import org.apache.spark.util.sketch.BloomFilter
   * the batch's actual cached size. The commit coalesces to ⌈size /
   * `spark.sql.files.maxPartitionBytes`⌉ partitions (never more than it
   * has), so it is never split into files smaller than one read split; a
-  * reader pays per file (footer decode, a Hadoop `Configuration` copy), not
-  * per row. A batch without a ts column runs no probe aggregate, and its
-  * commit keeps one file per partition. Readers skip zero-row segments
-  * (see `readEntries`).
+  * scan pays per file (an open and a footer decode), not per row. A
+  * batch without a ts column runs no probe aggregate, and its commit keeps
+  * one file per partition.
   *
   * Every row carries lineage columns `_batch_id` and `_part_id`: the
   * `spark_partition_id()` of the partition that produced it (0 for every
@@ -63,23 +64,32 @@ import org.apache.spark.util.sketch.BloomFilter
   * A manifest entry (one JSON line of `_manifest.jsonl`, [[LakeSink
   * .entryJson]]) holds: `batch` (segment id; negative for a compacted
   * fold), `rows`, the event-time range `min_ts`/`max_ts` (micros, when the
-  * batch has a ts column), `folded` (streaming-id ranges a fold absorbed),
-  * `stats` (per-column zone stats) and `schema` — 16 hex chars of SHA-256
-  * over the written frame's schema JSON, nullability erased
-  * ([[LakeSink.schemaFingerprint]]). Readers resolve the table schema from
-  * the manifest (the Iceberg table-metadata rule): when every entry read
-  * carries the SAME fingerprint, the schema comes from one segment's
-  * parquet footer on the driver and the scan is planned with it — no
-  * schema-inference Spark job, no per-file footer I/O. Otherwise (an
-  * entry without a fingerprint, a column added mid-stream, a footer
-  * without Spark row metadata) readers fall back to `mergeSchema`.
+  * batch has a ts column) and `ts_col` (the column it covers), `folded`
+  * (streaming-id ranges a fold absorbed), `stats` (per-column zone stats),
+  * `id_col` (the column the segment's `_bloom/batch-N.bin` holds) and
+  * `schema` — 16 hex chars of SHA-256 over the written frame's schema
+  * JSON, nullability erased ([[LakeSink.schemaFingerprint]]).
+  *
+  * Readers (`read`, `readGeneration`, `readSnapshot`, `readAsOf`, the merge
+  * probe and the compaction fold) scan a `HadoopFsRelation` over a
+  * [[LakeFileIndex]]: the data files of the entries read, listed with NIO
+  * (no `InMemoryFileIndex` listing, no `DataSource` resolution), zero-row
+  * segments left out. Per query, the index drops the segments the filters
+  * cannot match by the entries' event-time range, zone stats and id
+  * bloom, and the files of a Z-ordered fold by its zone map; the scan
+  * still applies the exact predicate. The table schema comes from the
+  * manifest (the Iceberg table-metadata rule): when every entry read
+  * carries the SAME fingerprint, from one segment's parquet footer on the
+  * driver — no schema-inference Spark job. Otherwise (an entry without a
+  * fingerprint, a column added mid-stream, a footer without Spark row
+  * metadata) it is inferred with `mergeSchema` over every segment.
   */
 class LakeSink(val path: String) extends Serializable {
 
   import LakeSink.Committed
 
   private def manifest = Paths.get(path, "_manifest.jsonl")
-  private def bloomPath(batchId: Long) = Paths.get(path, "_bloom", s"batch-$batchId.bin")
+  private def bloomPath(batchId: Long) = LakeSink.bloomFile(path, batchId)
   private def snapshotDir = Paths.get(path, "_snapshots")
   private def snapshotPath(v: Long) = snapshotDir.resolve(f"manifest-v$v%05d.jsonl")
 
@@ -154,10 +164,10 @@ class LakeSink(val path: String) extends Serializable {
 
   /** As [[addBatch]], also recording per-commit (min, max) ZONE STATS for
     * the given integral columns in the manifest entry — the Iceberg
-    * column-stats analogue generalizing the event-time range: readers with
-    * a null-rejecting range predicate skip whole committed segments via
-    * [[readPruned]] without opening a single file. Taken from the same
-    * footers as the lineage metrics (or the same fallback aggregate). */
+    * column-stats analogue generalizing the event-time range: a read
+    * filtered by a range of such a column skips the committed segments
+    * outside it without opening a file ([[LakeFileIndex]]). Taken from the
+    * same footers as the lineage metrics (or the same fallback aggregate). */
   def addBatchStats(batchId: Long, df: DataFrame,
                     statCols: Seq[String], tsCol: String = "ts"): Boolean =
     addBatchTracked(batchId, df, None,
@@ -202,7 +212,8 @@ class LakeSink(val path: String) extends Serializable {
       Files.write(bloomPath(batchId), bos.toByteArray)
     }
     writeMetrics(batchId, w.parts.map { case (p, n) => s"""{"part": $p, "rows": $n}""" })
-    commit(Committed(batchId, w.rows, w.range, covering, w.stats, Some(fingerprint)))
+    commit(Committed(batchId, w.rows, w.range, covering, w.stats, Some(fingerprint),
+      ts, idCol.filter(withLineage.columns.contains)))
     true
   }
 
@@ -304,11 +315,12 @@ class LakeSink(val path: String) extends Serializable {
     * ZORDER: compaction is the one moment the lake rewrites data anyway, so
     * re-clustering it is free shuffle-wise (the fold's write becomes one
     * range shuffle on the Morton key instead of a plain write). The fold
-    * dir then carries a FILE-level `_zstats.json` zone map — [[readPruned]]
-    * prunes inside compacted folds at file granularity, recovering the
-    * segment-level pruning resolution that folding many small commits into
-    * one manifest entry would otherwise destroy. Fold-entry stats for the
-    * Z-columns come from the zone map's exact global bounds. */
+    * dir then carries a FILE-level `_zstats.json` zone map — reads
+    * ([[LakeFileIndex]]) prune inside compacted folds at file granularity,
+    * recovering the segment-level pruning resolution that folding many
+    * small commits into one manifest entry would otherwise destroy.
+    * Fold-entry stats for the Z-columns come from the zone map's exact
+    * global bounds. */
   def compactInPlace(spark: SparkSession, idCol: Option[String] = None,
                      maxFoldRows: Long = Long.MaxValue,
                      zorderCols: Seq[String] = Seq.empty,
@@ -385,10 +397,16 @@ class LakeSink(val path: String) extends Serializable {
     // and available without — the every-entry-statted union rule)
     val stats = unionStats ++ zoneMap.map(_.bounds.map { case (c, r) =>
       c -> ((r.min, r.max)) }).getOrElse(Map.empty)
+    // the fold's range covers one ts column only if every ranged entry
+    // named the same one
+    val tsCol = range.flatMap(_ => nonEmpty.map(_.tsCol).distinct match {
+      case Seq(c) => c
+      case _ => None
+    })
     // new manifest generation: graduated segments verbatim + the new fold
     val lines = retained.map(LakeSink.entryJson) :+
       LakeSink.entryJson(Committed(gen, rows, range, folded, stats,
-        Some(LakeSink.schemaFingerprint(data.schema))))
+        Some(LakeSink.schemaFingerprint(data.schema)), tsCol, idCol))
     val tmp = Paths.get(path, "_manifest.tmp")
     Files.write(tmp, lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
     // archive the generation being replaced as a time-travel snapshot
@@ -523,42 +541,6 @@ class LakeSink(val path: String) extends Serializable {
     * would win and evolved columns would silently vanish. */
   def read(spark: SparkSession): DataFrame = readEntries(spark, committed())
 
-  /** Committed entries that may hold rows inside `box` (inclusive ranges
-    * per zone-stat column). Conservative: zero-row segments are never
-    * candidates; entries without stats for a boxed column always are. */
-  def pruneEntries(box: Map[String, (Long, Long)]): Seq[Committed] =
-    committed().filter(e => e.rows != 0 && e.mayContain(box))
-
-  /** Read only the segments whose zone stats may intersect `box` — the
-    * whole-segment analogue of [[LayoutOps.readPruned]]'s file skipping.
-    * Callers still apply the exact (null-rejecting) row predicate; this
-    * only subtracts certainly-empty segments from the scan plan. */
-  def readPruned(spark: SparkSession, box: Map[String, (Long, Long)]): DataFrame = {
-    val entries = committed() // parse the manifest ONCE per pruned read
-    val keep = entries.filter(e => e.rows != 0 && e.mayContain(box))
-    // inside surviving segments, prune at FILE granularity where a zone map
-    // exists (Z-ordered compaction folds write one) — the fold's many small
-    // source commits keep their pruning resolution through the rewrite
-    val zbox = box.map { case (c, (lo, hi)) =>
-      c -> graft.operators.LayoutOps.ColRange(lo, hi) }
-    val paths = keep.map(_.batch).sorted.flatMap { b =>
-      val dir = s"$path/batch=$b"
-      if (Files.exists(Paths.get(dir, "_zstats.json")))
-        // zone maps store segment-relative names — resolve against THIS
-        // lake's dir so a relocated/copied lake reads its own files
-        graft.operators.LayoutOps.readZoneMap(dir).surviving(zbox)
-          .map(f => s"$dir/$f")
-      else Seq(dir)
-    }
-    // all pruned but commits exist → keep the table schema (callers filter
-    // the result; a schema-less emptyDataFrame would break them). `entries
-    // .nonEmpty`, not rows != 0: zero-row commits still wrote a
-    // schema-bearing empty parquet segment
-    if (paths.isEmpty && entries.nonEmpty) readEntries(spark, entries).limit(0)
-    else if (paths.isEmpty) spark.emptyDataFrame
-    else scan(spark, keep, paths, paths)
-  }
-
   /** One committed segment only — for GENERATION-SNAPSHOT readers (tables
     * where each commit is a full table and only the newest is current):
     * they must not pay a read of the whole history just to filter it back
@@ -572,34 +554,27 @@ class LakeSink(val path: String) extends Serializable {
     readEntries(spark, e)
   }
 
-  /** Scan of `entries`' segments. Zero-row segments hold only a schema, so
-    * they are left out of the scan (one is kept when every entry is empty,
-    * as the schema-bearing segment); old-format entries (rows = -1) stay
-    * in. The `mergeSchema` fallback reads every segment, so a column only
-    * an empty segment added still appears. */
+  /** Scan of `entries`' segments: a `HadoopFsRelation` over a
+    * [[LakeFileIndex]] of their data files, which drops the segments a
+    * query's filters cannot match. Zero-row segments hold only a schema and
+    * are not listed; old-format entries (rows = -1) are. The schema comes
+    * from the manifest: one footer when every entry carries the same
+    * fingerprint, `mergeSchema` inference over every segment otherwise (so
+    * a column only an empty segment added still appears). */
   private def readEntries(spark: SparkSession, entries: Seq[Committed]): DataFrame =
     if (entries.isEmpty) spark.emptyDataFrame
     else {
-      def dirs(es: Seq[Committed]) = es.map(_.batch).sorted.map(b => s"$path/batch=$b")
-      val live = entries.filter(_.rows != 0)
-      scan(spark, entries, dirs(if (live.nonEmpty) live else entries.take(1)), dirs(entries))
+      val footer = entries.map(_.schema).distinct match {
+        case Seq(Some(_)) => footerSchema(entries)
+        case _ => None
+      }
+      val schema = footer.getOrElse(spark.read.option("mergeSchema", "true")
+        .parquet(entries.map(_.batch).sorted.map(b => s"$path/batch=$b"): _*).schema)
+      spark.baseRelationToDataFrame(HadoopFsRelation(
+        LakeFileIndex(path, entries.filter(_.rows != 0)), new StructType(),
+        org.apache.spark.sql.graftbridge.Bridge.asNullable(schema), None,
+        new ParquetFileFormat, Map.empty)(spark))
     }
-
-  /** Parquet scan of `paths` (segment dirs or files of `entries`) with the
-    * schema resolved from the manifest: one footer when every entry
-    * carries the same fingerprint, `mergeSchema` inference over
-    * `mergePaths` otherwise. */
-  private def scan(spark: SparkSession, entries: Seq[Committed],
-                   paths: Seq[String], mergePaths: Seq[String]): DataFrame = {
-    val footer = entries.map(_.schema).distinct match {
-      case Seq(Some(_)) => footerSchema(entries)
-      case _ => None
-    }
-    footer match {
-      case Some(s) => spark.read.schema(s).parquet(paths: _*)
-      case None => spark.read.option("mergeSchema", "true").parquet(mergePaths: _*)
-    }
-  }
 
   /** The Spark schema recorded in the footer of ONE data file of the
     * given segments ([[LakeSink.readFooter]], no Spark job). None when no
@@ -651,11 +626,16 @@ object LakeSink {
   /** One committed-batch manifest entry. `folded` holds the inclusive
     * ranges of streaming batch ids a compacted segment absorbed (empty for
     * ordinary commits); `schema` is the segment's [[schemaFingerprint]]
-    * (None in manifests written before fingerprints existed). */
+    * (None in manifests written before fingerprints existed); `tsCol` is
+    * the column `range` covers and `idCol` the column the segment's bloom
+    * holds (None in manifests written before they were recorded, and then
+    * neither is used for pruning). */
   final case class Committed(batch: Long, rows: Long, range: Option[(Long, Long)],
                              folded: Seq[(Long, Long)] = Seq.empty,
                              stats: Map[String, (Long, Long)] = Map.empty,
-                             schema: Option[String] = None) {
+                             schema: Option[String] = None,
+                             tsCol: Option[String] = None,
+                             idCol: Option[String] = None) {
     /** Streaming-id RANGES this entry accounts for (entry id itself if it
       * IS a streaming batch, plus folded ranges). */
     def streamIdRanges: Seq[(Long, Long)] =
@@ -663,10 +643,11 @@ object LakeSink {
 
     /** Can this segment contain a row inside `box`? Absent stats for a
       * boxed column → candidate (old-format entries, un-statted sinks) —
-      * pruning must only ever SUBTRACT certainly-empty segments. */
+      * pruning must only ever SUBTRACT certainly-empty segments. An empty
+      * range (lo > hi) holds no row. */
     def mayContain(box: Map[String, (Long, Long)]): Boolean =
       box.forall { case (c, (lo, hi)) =>
-        stats.get(c).forall { case (mn, mx) => mn <= hi && mx >= lo } }
+        lo <= hi && stats.get(c).forall { case (mn, mx) => mn <= hi && mx >= lo } }
   }
 
   /** One manifest line for an entry (the inverse of [[Committed.parse]]). */
@@ -679,11 +660,19 @@ object LakeSink {
     val statsJson =
       if (e.stats.isEmpty) ""
       else e.stats.toSeq.sortBy(_._1).map { case (c, (lo, hi)) =>
-        val esc = c.replace("\\", "\\\\").replace("\"", "\\\"")
-        s""""$esc": [$lo,$hi]""" }.mkString(""", "stats": {""", ",", "}")
-    val schemaJson = e.schema.map(f => s""", "schema": "$f"""").getOrElse("")
-    s"""{"batch": ${e.batch}, "rows": ${e.rows}$rangeJson$foldedJson$statsJson$schemaJson}"""
+        s"""${quote(c)}: [$lo,$hi]""" }.mkString(""", "stats": {""", ",", "}")
+    def str(k: String, v: Option[String]) = v.map(x => s""", "$k": ${quote(x)}""").getOrElse("")
+    s"""{"batch": ${e.batch}, "rows": ${e.rows}$rangeJson$foldedJson$statsJson""" +
+      str("schema", e.schema) + str("ts_col", e.tsCol) + str("id_col", e.idCol) + "}"
   }
+
+  /** A JSON string literal. */
+  private def quote(s: String): String =
+    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+
+  /** The bloom file of segment `batch` of the lake at `lake`. */
+  private[streaming] def bloomFile(lake: String, batch: Long): java.nio.file.Path =
+    Paths.get(lake, "_bloom", s"batch-$batch.bin")
 
   /** Footer key under which Spark's parquet writer stores the row schema
     * JSON. */
@@ -774,7 +763,7 @@ object LakeSink {
     val perPart = written.groupBy("_part_id").agg(aggCols.head, aggCols.tail: _*).collect()
     // all-null columns record no stat (entry stays a read candidate);
     // stats over the non-null values are sound for the null-rejecting
-    // range predicates readPruned serves
+    // comparisons LakeFileIndex prunes by
     def span(lo: String, hi: String): Option[(Long, Long)] = {
       val mins = perPart.flatMap(r => Option(r.getAs[java.lang.Long](lo)).map(_.toLong))
       val maxs = perPart.flatMap(r => Option(r.getAs[java.lang.Long](hi)).map(_.toLong))
@@ -906,9 +895,10 @@ object LakeSink {
             val a = o.get(c); b += c -> ((a.get(0).asLong, a.get(1).asLong)) }
           b.result()
         }
+      def str(k: String) = if (n.has(k)) Some(n.get(k).asText) else None
       Committed(n.get("batch").asLong,
         if (n.has("rows")) n.get("rows").asLong else -1L, range, folded, stats,
-        if (n.has("schema")) Some(n.get("schema").asText) else None)
+        str("schema"), str("ts_col"), str("id_col"))
     }
   }
 }

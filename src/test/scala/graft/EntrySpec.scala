@@ -16,4 +16,17 @@ class EntrySpec extends SparkSuite {
     val unchecked = SparkEntry.queries.keySet.diff(SparkEntry.oracleSql.keySet)
     assert(unchecked.isEmpty, s"query without oracle: $unchecked")
   }
+
+  test("two concurrent builds of an index-building ANN query each read their own index") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    // builds an IVF index, appends to it twice, then scans it
+    val q = SparkEntry.queries("q_ann_ivf_incremental")
+    def run() = q(spark, sf()).collect().map(_.toString).sorted.toSeq
+    val solo = run()
+    assert(solo.size === 50) // 10 queries x top-5
+    val both = Seq.fill(2)(Future(run()))
+    both.foreach(f => assert(Await.result(f, 10.minutes) === solo))
+  }
 }

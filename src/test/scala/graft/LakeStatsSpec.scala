@@ -4,17 +4,42 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 import graft.streaming.LakeSink
 
-class LakeStatsSpec extends SparkSuite {
+class LakeStatsSpec extends SparkSuite with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def freshLake(): (String, LakeSink) = {
     val dir = Files.createTempDirectory("graft-lakestats").toString
     (dir, new LakeSink(dir))
   }
+
+  /** The files (`batch=N/name`) the scan of `df` read, once `df` has run:
+    * the file splits of the executed plan's parquet scans. */
+  private def scanned(df: DataFrame): Seq[String] = {
+    df.collect()
+    collect(df.queryExecution.executedPlan) { case s: FileSourceScanExec => s }
+      .flatMap(_.inputRDD.partitions.toSeq.collect { case p: FilePartition => p.files.toSeq })
+      .flatten.map { f =>
+        val p = f.toPath
+        s"${p.getParent.getName}/${p.getName}"
+      }.distinct.sorted
+  }
+
+  /** The segment ids the scan of `df` read. */
+  private def segments(df: DataFrame): Set[Long] =
+    scanned(df).map(_.takeWhile(_ != '/').stripPrefix("batch=").toLong).toSet
+
+  /** Rows and `event_id` sum of `pred` over `df`. */
+  private def exact(df: DataFrame, pred: org.apache.spark.sql.Column) =
+    df.filter(pred).agg(count(lit(1)), coalesce(sum("event_id"), lit(0L)))
+      .as[(Long, Long)].head()
 
   private def batch(ids: Range, uLo: Long, uHi: Long) = {
     val span = math.max(1L, uHi - uLo)
@@ -31,16 +56,11 @@ class LakeStatsSpec extends SparkSuite {
       assert(sink.addBatchStats(2L, batch(200 until 300, 9000L, 9500L), Seq("user_id")))
       val es = sink.committed()
       assert(es.forall(_.stats.contains("user_id")))
-      // a box inside segment 1's range only
-      val box = Map("user_id" -> ((5200L, 5800L)))
-      val kept = sink.pruneEntries(box)
-      assert(kept.map(_.batch) === Seq(1L))
+      // a range inside segment 1's stats only
+      val box = col("user_id").between(5200L, 5800L)
+      assert(segments(sink.read(spark).filter(box)) === Set(1L))
       // correctness: pruned+exact == full+exact
-      val exact = (d: org.apache.spark.sql.DataFrame) =>
-        d.filter(col("user_id").between(5200L, 5800L))
-          .agg(count(lit(1)), coalesce(sum("event_id"), lit(0L)))
-          .as[(Long, Long)].head()
-      assert(exact(sink.readPruned(spark, box)) === exact(sink.read(spark)))
+      assert(exact(sink.read(spark), box) === exact(mergeRead(dir, Seq(0L, 1L, 2L)), box))
     } finally graft.operators.LayoutOps.deleteTree(Paths.get(dir))
   }
 
@@ -57,15 +77,13 @@ class LakeStatsSpec extends SparkSuite {
       batch(50 until 60, 77777L, 77800L).withColumn("_batch_id", lit(7L))
         .withColumn("_part_id", lit(0))
         .write.mode("overwrite").parquet(s"$dir/batch=7")
-      val boxMiss = Map("user_id" -> ((900000L, 900001L)))
+      val boxMiss = sink.read(spark).filter(col("user_id").between(900000L, 900001L))
       // old-format entry survives pruning (no stats → candidate)
-      assert(sink.pruneEntries(boxMiss).map(_.batch) === Seq(7L))
-      val df = sink.readPruned(spark, boxMiss)
-        .filter(col("user_id").between(900000L, 900001L))
-      assert(df.count() === 0L)
+      assert(segments(boxMiss) === Set(7L))
+      assert(boxMiss.count() === 0L)
+      assert(boxMiss.columns.contains("user_id"))
       // a box that hits batch 0 AND keeps the un-statted candidate
-      val boxHit = Map("user_id" -> ((0L, 50L)))
-      assert(sink.pruneEntries(boxHit).map(_.batch).toSet === Set(0L, 7L))
+      assert(segments(sink.read(spark).filter(col("user_id").between(0L, 50L))) === Set(0L, 7L))
     } finally graft.operators.LayoutOps.deleteTree(Paths.get(dir))
   }
 
@@ -76,9 +94,10 @@ class LakeStatsSpec extends SparkSuite {
       // supported — it gets an empty bloom); the lake has NO data-bearing
       // segment, yet a pruned read must still resolve caller predicates
       assert(sink.addBatchStats(0L, batch(0 until 0, 0L, 1L), Seq("user_id")))
-      val df = sink.readPruned(spark, Map("user_id" -> ((5L, 9L))))
+      val df = sink.read(spark).filter(col("user_id").between(5L, 9L))
       assert(df.columns.contains("user_id"), s"schema lost: ${df.columns.toSeq}")
-      assert(df.filter(col("user_id").between(5L, 9L)).count() === 0L)
+      assert(df.count() === 0L)
+      assert(scanned(df).isEmpty)
     } finally graft.operators.LayoutOps.deleteTree(Paths.get(dir))
   }
 
@@ -107,10 +126,10 @@ class LakeStatsSpec extends SparkSuite {
       val s = fold.head.stats("user_id")
       assert(s._1 >= 0L && s._1 < 100L && s._2 >= 200L && s._2 < 300L)
       // pruning still correct through the fold
-      assert(sink.pruneEntries(Map("user_id" -> ((150L, 160L)))).size === 1)
-      assert(sink.readPruned(spark, Map("user_id" -> ((0L, 99L))))
-        .filter(col("user_id") <= 99L).count() ===
-        sink.read(spark).filter(col("user_id") <= 99L).count())
+      assert(segments(sink.read(spark).filter(col("user_id").between(150L, 160L))) ===
+        Set(fold.head.batch))
+      assert(sink.read(spark).filter(col("user_id").between(0L, 99L)).count() ===
+        mergeRead(dir, Seq(fold.head.batch)).filter(col("user_id").between(0L, 99L)).count())
 
       // second lake: one statted + one UN-statted commit → fold must DROP
       // the column (a kept union would under-cover the un-statted rows)
@@ -121,7 +140,8 @@ class LakeStatsSpec extends SparkSuite {
         sink2.compactInPlace(spark)
         assert(sink2.committed().head.stats.isEmpty)
         // and the fold is therefore always a candidate
-        assert(sink2.pruneEntries(Map("user_id" -> ((900000L, 900001L)))).size === 1)
+        assert(segments(sink2.read(spark).filter(col("user_id").between(900000L, 900001L))) ===
+          Set(sink2.committed().head.batch))
       } finally graft.operators.LayoutOps.deleteTree(Paths.get(dir2))
     } finally graft.operators.LayoutOps.deleteTree(Paths.get(dir))
   }
@@ -154,11 +174,9 @@ class LakeStatsSpec extends SparkSuite {
       feed((100L until 150L).map(i => (i, 90000L + i % 100L)))
       q.stop()
       assert(sink.committed().count(_.stats.contains("user_id")) === 3)
-      val box = Map("user_id" -> ((5000L, 5099L)))
-      assert(sink.pruneEntries(box).size === 1)
-      val got = sink.readPruned(spark, box)
-        .filter(col("user_id").between(5000L, 5099L))
-        .select("event_id").as[Long].collect().sorted
+      val pruned = sink.read(spark).filter(col("user_id").between(5000L, 5099L))
+      assert(segments(pruned).size === 1)
+      val got = pruned.select("event_id").as[Long].collect().sorted
       assert(got === (50L until 100L).toArray)
     } finally graft.operators.LayoutOps.deleteTree(Paths.get(dir))
   }
@@ -171,7 +189,8 @@ class LakeStatsSpec extends SparkSuite {
       (0 until 4).foreach { i =>
         sink.addBatchStats(i.toLong,
           batch(i * 100 until (i + 1) * 100, 0L, 100000L), Seq("user_id")) }
-      assert(sink.pruneEntries(Map("user_id" -> ((40000L, 41000L)))).size === 4)
+      val box = col("user_id").between(40000L, 41000L)
+      assert(segments(sink.read(spark).filter(box)) === Set(0L, 1L, 2L, 3L))
       sink.compactInPlace(spark, zorderCols = Seq("user_id", "event_id"),
         zorderFiles = 8)
       val fold = sink.committed()
@@ -183,17 +202,15 @@ class LakeStatsSpec extends SparkSuite {
       assert(zm.files.map(_._2).sum === 400L)
       // a narrow box keeps strictly fewer FILES than the fold holds —
       // the resolution folding destroyed at segment level is back
-      val box = Map("user_id" -> graft.operators.LayoutOps.ColRange(40000L, 41000L))
-      assert(zm.surviving(box).size < zm.filesTotal)
+      val zbox = Map("user_id" -> graft.operators.LayoutOps.ColRange(40000L, 41000L))
+      val kept = zm.surviving(zbox)
+      assert(kept.size < zm.filesTotal)
+      assert(scanned(sink.read(spark).filter(box)) ===
+        kept.map(f => s"batch=${fold.head.batch}/$f").sorted)
       // and the pruned read loses nothing vs the full read
-      val exact = (d: org.apache.spark.sql.DataFrame) =>
-        d.filter(col("user_id").between(40000L, 41000L))
-          .agg(count(lit(1)), coalesce(sum("event_id"), lit(0L)))
-          .as[(Long, Long)].head()
-      assert(exact(sink.readPruned(spark, Map("user_id" -> ((40000L, 41000L))))) ===
-        exact(sink.read(spark)))
+      assert(exact(sink.read(spark), box) === exact(mergeRead(dir, Seq(fold.head.batch)), box))
       // wide box: everything still readable through the zone-mapped fold
-      assert(sink.readPruned(spark, Map("user_id" -> ((0L, 100000L)))).count() === 400L)
+      assert(sink.read(spark).filter(col("user_id").between(0L, 100000L)).count() === 400L)
     } finally graft.operators.LayoutOps.deleteTree(Paths.get(dir))
   }
 
@@ -211,13 +228,13 @@ class LakeStatsSpec extends SparkSuite {
       graft.operators.LayoutOps.deleteTree(Paths.get(moved))
       Files.move(Paths.get(dir), Paths.get(moved))
       val sink2 = new LakeSink(moved)
-      val box = Map("user_id" -> ((40000L, 41000L)))
-      val got = sink2.readPruned(spark, box)
-        .filter(col("user_id").between(40000L, 41000L)).count()
-      val want = sink2.read(spark)
-        .filter(col("user_id").between(40000L, 41000L)).count()
-      assert(got === want)
-      assert(sink2.readPruned(spark, Map("user_id" -> ((0L, 100000L)))).count() === 300L)
+      val box = col("user_id").between(40000L, 41000L)
+      val pruned = sink2.read(spark).filter(box)
+      val fold = sink2.committed().head.batch
+      assert(pruned.inputFiles.forall(_.contains(moved)))
+      assert(scanned(pruned).size < graft.operators.LayoutOps.readZoneMap(s"$moved/batch=$fold").filesTotal)
+      assert(pruned.count() === mergeRead(moved, Seq(fold)).filter(box).count())
+      assert(sink2.read(spark).filter(col("user_id").between(0L, 100000L)).count() === 300L)
     } finally {
       graft.operators.LayoutOps.deleteTree(Paths.get(dir))
       graft.operators.LayoutOps.deleteTree(Paths.get(moved))
@@ -235,13 +252,14 @@ class LakeStatsSpec extends SparkSuite {
         zorderCols = Seq("user_id", "event_id"), zorderFiles = 4)
       val es = sink.committed()
       assert(es.size === 2) // graduated + fold
-      val all = sink.readPruned(spark, Map("user_id" -> ((0L, 100000L))))
+      val all = sink.read(spark).filter(col("user_id").between(0L, 100000L))
       assert(all.count() === 400L)
+      assert(segments(all) === es.map(_.batch).toSet)
       // box hitting only the graduated segment: the fold's files all prune
-      val g = sink.readPruned(spark, Map("user_id" -> ((50000L, 51000L))))
-        .filter(col("user_id").between(50000L, 51000L))
-      assert(g.count() ===
-        sink.read(spark).filter(col("user_id").between(50000L, 51000L)).count())
+      val box = col("user_id").between(50000L, 51000L)
+      val g = sink.read(spark).filter(box)
+      assert(segments(g) === Set(2L))
+      assert(g.count() === mergeRead(dir, es.map(_.batch)).filter(box).count())
     } finally graft.operators.LayoutOps.deleteTree(Paths.get(dir))
   }
 
@@ -250,6 +268,10 @@ class LakeStatsSpec extends SparkSuite {
       Map("user_id" -> ((1L, 99L)), "we\"ird" -> ((-5L, 5L))))
     val line = LakeSink.entryJson(e)
     assert(LakeSink.Committed.parse(line) === e)
+    // the pruning columns round-trip too, and are absent when unset
+    val cols = e.copy(tsCol = Some("ts"), idCol = Some("i\\d"))
+    assert(LakeSink.Committed.parse(LakeSink.entryJson(cols)) === cols)
+    assert(!line.contains("ts_col") && !line.contains("id_col"))
   }
 
   test("schema fingerprint: erases nullability, tells column sets apart, round-trips the manifest") {
@@ -273,7 +295,7 @@ class LakeStatsSpec extends SparkSuite {
   private def mergeRead(dir: String, batches: Seq[Long]) =
     spark.read.option("mergeSchema", "true").parquet(batches.map(b => s"$dir/batch=$b"): _*)
 
-  test("uniform-schema lake: read, readGeneration and readPruned plan without a Spark job") {
+  test("uniform-schema lake: plain and filtered reads plan without a Spark job") {
     val (dir, sink) = freshLake()
     try {
       sink.addBatchStats(0L, batch(0 until 100, 0L, 1000L), Seq("user_id"))
@@ -281,11 +303,14 @@ class LakeStatsSpec extends SparkSuite {
       sink.addBatchStats(2L, batch(0 until 0, 0L, 1L), Seq("user_id")) // zero-row commit
       val fps = sink.committed().map(_.schema)
       assert(fps.forall(_.isDefined) && fps.distinct.size == 1, fps)
-      val box = Map("user_id" -> ((5200L, 5800L)))
+      val box = col("user_id").between(5200L, 5800L)
       val reads = Seq[(String, () => org.apache.spark.sql.DataFrame)](
         "read" -> (() => sink.read(spark)),
         "readGeneration" -> (() => sink.readGeneration(spark, 1L)),
-        "readPruned" -> (() => sink.readPruned(spark, box)))
+        "filtered read" -> (() => sink.read(spark).filter(box)),
+        "filtered readGeneration" -> (() => sink.readGeneration(spark, 0L).filter(box)),
+        "keyset read" -> (() => sink.read(spark).filter(col("user_id") < 5300L ||
+          (col("user_id") === 5300L && col("event_id") < 150L))))
       reads.foreach { case (name, r) =>
         val jobs = jobsIn(r().filter(col("user_id") > 0L).queryExecution.executedPlan)
         assert(jobs === 0L, s"$name scheduled $jobs jobs before execution")
@@ -294,8 +319,8 @@ class LakeStatsSpec extends SparkSuite {
       val want = mergeRead(dir, Seq(0L, 1L, 2L))
       assert(sink.read(spark).schema === want.schema)
       assert(rows(sink.read(spark)) === rows(want))
-      assert(rows(sink.readPruned(spark, box)) ===
-        rows(want.filter(col("_batch_id") === 1L)))
+      assert(rows(sink.read(spark).filter(box)) === rows(want.filter(box)))
+      assert(segments(sink.read(spark).filter(box)) === Set(1L))
     } finally graft.operators.LayoutOps.deleteTree(Paths.get(dir))
   }
 
@@ -356,7 +381,7 @@ class LakeStatsSpec extends SparkSuite {
     val entry = LakeSink.Committed(b, rows,
       ts.flatMap(c => span(unix_micros(col(c).cast("timestamp")))), Seq.empty,
       zcols.flatMap(c => span(col(c).cast("long")).map(c -> _)).toMap,
-      Some(LakeSink.schemaFingerprint(seg.schema)))
+      Some(LakeSink.schemaFingerprint(seg.schema)), ts, idCol)
     val metrics = parts.map { case (p, n) => s"""{"part": $p, "rows": $n}""" }
       .mkString(s"""{"batch": $b, "partitions": [""", ",", "]}")
     val bloom = idCol.map { c =>
@@ -554,5 +579,141 @@ class LakeStatsSpec extends SparkSuite {
       assert(jobsIn(sink.addBatch(0L, df)) === 1L)
       assert(sink.committed().map(_.rows) === Seq(300L))
     } finally graft.operators.LayoutOps.deleteTree(Paths.get(dir))
+  }
+
+  /** Statements `ids` on day `day` of 2024-02 (UTC), a minute apart, with
+    * string ids `s-<n>`. */
+  private def dayStmts(ids: Range, day: Int) =
+    ids.map(i => (i.toLong, s"s-$i", i % 17L)).toDF("event_id", "id", "user_id")
+      .withColumn("ts", timestamp_seconds(lit(1706659200L + day * 86400L) + col("event_id") * 60L))
+
+  /** Three merged commits, one a day (Feb 1-3), ids s-0 … s-299. */
+  private def dayLake(): (String, LakeSink) = {
+    val (dir, sink) = freshLake()
+    (0 until 3).foreach(d => assert(sink.addBatchMerged(d.toLong,
+      dayStmts(d * 100 until (d + 1) * 100, d + 1), "id")))
+    (dir, sink)
+  }
+
+  private def ts(s: String) = lit(s).cast("timestamp")
+
+  /** The ids `pred` keeps, through the lake and through a plain read. */
+  private def idsBoth(dir: String, sink: LakeSink, pred: org.apache.spark.sql.Column) = {
+    def ids(df: DataFrame) = df.filter(pred).select("id").as[String].collect().sorted.toSeq
+    val got = ids(sink.read(spark))
+    assert(got === ids(mergeRead(dir, sink.committed().map(_.batch))))
+    got
+  }
+
+  test("filtered reads drop segments by event-time range and id bloom, keeping every row") {
+    val (dir, sink) = dayLake()
+    try {
+      assert(sink.committed().map(e => (e.tsCol, e.idCol)) === Seq.fill(3)((Some("ts"), Some("id"))))
+      val day2 = col("ts") >= ts("2024-02-02 00:00:00") && col("ts") < ts("2024-02-03 00:00:00")
+      assert(segments(sink.read(spark).filter(day2)) === Set(1L))
+      assert(idsBoth(dir, sink, day2).size === 100)
+      // the keyset disjunction of a descending page: ts < c OR (ts = c AND id < i)
+      val c = ts("2024-02-02 02:30:00") // s-150
+      val keyset = col("ts") < c || (col("ts") === c && col("id") < "s-150")
+      assert(segments(sink.read(spark).filter(keyset)) === Set(0L, 1L))
+      assert(idsBoth(dir, sink, keyset).size === 150)
+      // id = v and id IN (…) through the string blooms
+      assert(segments(sink.read(spark).filter(col("id") === "s-250")) === Set(2L))
+      assert(idsBoth(dir, sink, col("id") === "s-250") === Seq("s-250"))
+      val in = col("id").isin("s-5", "s-250", "nope")
+      assert(segments(sink.read(spark).filter(in)) === Set(0L, 2L))
+      assert(idsBoth(dir, sink, in) === Seq("s-250", "s-5"))
+      // an IN list long enough to plan as InSet
+      val many = col("id").isin((250 until 270).map(i => s"s-$i"): _*)
+      assert(segments(sink.read(spark).filter(many)) === Set(2L))
+      assert(idsBoth(dir, sink, many).size === 20)
+      // a contradiction reads nothing
+      val never = col("ts") > ts("2024-02-03 00:00:00") && col("ts") < ts("2024-02-01 12:00:00")
+      assert(scanned(sink.read(spark).filter(never)).isEmpty)
+      // no id matches anywhere: nothing is read, the schema stays
+      val none = sink.read(spark).filter(col("id") === "nope" && col("ts") > ts("2024-02-01 00:00:00"))
+      assert(scanned(none).isEmpty && none.count() === 0L && none.columns.contains("id"))
+    } finally graft.operators.LayoutOps.deleteTree(Paths.get(dir))
+  }
+
+  test("a compacted fold's integral-id bloom prunes event_id IN (…); an entry without one is kept") {
+    val (dir, sink) = freshLake()
+    try {
+      sink.addBatch(0L, dayStmts(0 until 100, 1))
+      sink.addBatch(1L, dayStmts(100 until 200, 2))
+      sink.compactInPlace(spark, idCol = Some("event_id"))
+      sink.addBatch(2L, dayStmts(200 until 300, 3)) // no bloom, no id_col
+      val fold = sink.committed().head
+      assert(fold.batch < 0 && fold.idCol === Some("event_id") && sink.committed()(1).idCol.isEmpty)
+      val late = col("event_id").isin(250L, 260L)
+      assert(segments(sink.read(spark).filter(late)) === Set(2L))
+      assert(idsBoth(dir, sink, late) === Seq("s-250", "s-260"))
+      assert(segments(sink.read(spark).filter(col("event_id") === 5L)) === Set(fold.batch, 2L))
+      assert(idsBoth(dir, sink, col("event_id") === 5L) === Seq("s-5"))
+    } finally graft.operators.LayoutOps.deleteTree(Paths.get(dir))
+  }
+
+  test("filtered reads keep what they cannot judge: old-format entries, timestamp_ntz, non-literal and null comparisons") {
+    val (dir, sink) = dayLake()
+    try {
+      val all = Set(0L, 1L, 2L)
+      val day2 = col("ts") >= ts("2024-02-02 00:00:00") && col("ts") < ts("2024-02-03 00:00:00")
+      // a ts compared with a non-literal, and a function of ts
+      val nonLit = col("ts") > timestamp_seconds(col("user_id"))
+      assert(segments(sink.read(spark).filter(nonLit)) === all)
+      assert(idsBoth(dir, sink, nonLit).size === 300)
+      val fn = unix_micros(col("ts")) < 1706832000000000L // before Feb 2
+      assert(segments(sink.read(spark).filter(fn)) === all)
+      assert(idsBoth(dir, sink, fn).size === 100)
+      // an Or with a side that bounds neither ts nor id
+      val either = col("ts") < ts("2024-02-02 00:00:00") || col("id") === "s-250"
+      assert(segments(sink.read(spark).filter(either)) === all)
+      assert(idsBoth(dir, sink, either).size === 101)
+      // null literals, straight to the index (the optimizer folds them
+      // out of a DataFrame filter before any scan is planned)
+      import org.apache.spark.sql.catalyst.expressions.{EqualTo, GreaterThan, In, Literal}
+      val read = sink.read(spark)
+      val plan = read.queryExecution.analyzed
+      val index = plan.collectFirst { case l: LogicalRelation => l.relation }
+        .collect { case r: HadoopFsRelation => r.location }.get
+      def attr(n: String) = plan.output.find(_.name == n).get
+      def files(f: org.apache.spark.sql.catalyst.expressions.Expression) =
+        index.listFiles(Nil, Seq(f)).flatMap(_.files).size
+      val total = files(Literal(true))
+      assert(total === read.inputFiles.length && total >= 3)
+      assert(files(GreaterThan(attr("ts"), Literal(null, org.apache.spark.sql.types.TimestampType))) === total)
+      assert(files(EqualTo(attr("id"), Literal(null, org.apache.spark.sql.types.StringType))) === total)
+      assert(files(In(attr("id"), Seq(Literal("s-5"), Literal(null, org.apache.spark.sql.types.StringType)))) === total)
+      assert(files(EqualTo(attr("id"), Literal("s-250"))) < total) // the same index does prune
+      // old format: entries without the column fields are never range- or
+      // bloom-pruned, though they still carry a range and a bloom …
+      val m = Paths.get(dir, "_manifest.jsonl")
+      def rewrite(f: LakeSink.Committed => LakeSink.Committed): Unit =
+        Files.write(m, sink.committed().map(e => LakeSink.entryJson(f(e)))
+          .mkString("", "\n", "\n").getBytes)
+      rewrite(_.copy(tsCol = None, idCol = None))
+      assert(sink.committed().forall(e => e.range.isDefined && e.tsCol.isEmpty))
+      assert(segments(sink.read(spark).filter(day2)) === all)
+      assert(segments(sink.read(spark).filter(col("id") === "s-250")) === all)
+      // … nor when they carry no stats, range or bloom either
+      rewrite(e => LakeSink.Committed(e.batch, e.rows, None, schema = e.schema))
+      graft.operators.LayoutOps.deleteTree(Paths.get(dir, "_bloom"))
+      assert(segments(sink.read(spark).filter(day2 && col("id") === "s-150")) === all)
+      assert(idsBoth(dir, sink, day2 && col("id") === "s-150") === Seq("s-150"))
+    } finally graft.operators.LayoutOps.deleteTree(Paths.get(dir))
+    // timestamp_ntz ts: the manifest range is unix_micros(ts.cast("timestamp")),
+    // which is not the column's value, so it is never range-pruned
+    val (dir2, sink2) = freshLake()
+    try {
+      sink2.addBatchStats(0L, batch(0 until 50, 0L, 100L), Seq("user_id"))
+      sink2.addBatchStats(1L, batch(50 until 100, 0L, 100L), Seq("user_id"))
+      assert(sink2.committed().forall(e => e.range.isDefined && e.tsCol === Some("ts")))
+      val late = col("ts") > lit("2030-01-01 00:00:00").cast("timestamp_ntz")
+      assert(segments(sink2.read(spark).filter(late)) === Set(0L, 1L))
+      assert(sink2.read(spark).filter(late).count() === 0L)
+      val early = col("ts") < lit("2024-01-02 00:00:00").cast("timestamp_ntz")
+      assert(sink2.read(spark).filter(early).count() ===
+        mergeRead(dir2, Seq(0L, 1L)).filter(early).count())
+    } finally graft.operators.LayoutOps.deleteTree(Paths.get(dir2))
   }
 }

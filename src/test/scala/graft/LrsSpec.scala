@@ -12,7 +12,8 @@ import graft.operators.{Lrs, Store}
   * 254-279, ascending 339, by id 368, by agent 407, by verb 451, by
   * activity 482, since exclusive 516-543, until inclusive 546-573,
   * pagination 576-717, no-match 718). */
-class LrsSpec extends SparkSuite {
+class LrsSpec extends SparkSuite
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   // two statements 1h apart + more, mirroring the reference fixtures
@@ -163,5 +164,68 @@ class LrsSpec extends SparkSuite {
 
   test("no-match returns empty, not error") {
     assert(Lrs.statements(store, Lrs.Query(verb = Some("v://nope"))).count() === 0)
+  }
+
+  test("related_activities: array_contains keeps the rows of the exists form; the lake scan reads only list ids, vectorized") {
+    def withCa(id: String, obj: String, ca: String) =
+      mkStmt(id, "2024-02-01T10:00:00+00:00", Played, "act://unused", "zed",
+        if (ca.isEmpty) "" else s""", "context": {"contextActivities": $ca}""")
+        .replace(""""object": {"id": "act://unused", "objectType": "Activity"}""", s""""object": $obj""")
+    def id(i: Int) = f"00000000-0000-0000-0000-1000000000$i%02d"
+    val act = (a: String) => s"""{"id": "$a", "objectType": "Activity"}"""
+    val stmts = Seq(
+      withCa(id(1), act("act://a"), ""), // no context at all
+      withCa(id(2), act("act://b"), """{"parent": null, "grouping": null}"""), // null lists
+      withCa(id(3), act("act://b"), """{"parent": [null, {"id": "act://p"}], "other": [null]}"""), // null elements
+      withCa(id(4), act("act://c"), """{"grouping": [{"objectType": "Activity"}, {"id": "act://g"}]}"""), // null ids
+      withCa(id(5), act("act://c"), """{"category": [{"objectType": "Activity"}], "other": [{"id": "act://a"}]}"""),
+      withCa(id(6), """{"objectType": "SubStatement", "actor": {"mbox": "mailto:s@x"}, "verb": {"id": "v://x"}, "object": {"id": "act://p"}}""",
+        """{"parent": [{"id": "act://g"}]}"""), // SubStatement
+      withCa(id(7), """{"objectType": "Agent", "mbox": "mailto:agent@x"}""", """{"other": [null, {"id": "act://b"}]}"""), // Agent object
+      withCa(id(8), """{"objectType": "Agent", "mbox": "mailto:agent@x"}""", ""),
+      withCa(id(9), """{"objectType": "SubStatement", "actor": {"mbox": "mailto:s@x"}, "verb": {"id": "v://x"}, "object": {"objectType": "Agent", "mbox": "mailto:t@x"}}""",
+        """{"parent": [], "grouping": [null]}"""))
+    val rows = Store.project(stmts.toDF("xapi").withColumn("source", lit("t")), "xapi")
+    val lake = java.nio.file.Files.createTempDirectory("graft-lrs-related").toString
+    try {
+      val sink = new graft.streaming.LakeSink(lake)
+      sink.addBatch(0L, rows)
+      // the predicate before array_contains, kept here as the reference
+      def existsForm(a: String) = {
+        val st = col("stmt")
+        val ca = st.getField("context").getField("contextActivities")
+        val inList = Seq("parent", "grouping", "category", "other").map { f =>
+          exists(coalesce(ca.getField(f), array()), x => x.getField("id") === a)
+        }.reduce(_ || _)
+        val obj = st.getField("object")
+        obj.getField("id") === a || inList ||
+          (obj.getField("objectType") === "SubStatement" && obj.getField("object").getField("id") === a)
+      }
+      val want = Map("act://a" -> Set(1, 5), "act://b" -> Set(2, 3, 7), "act://p" -> Set(3, 6),
+        "act://g" -> Set(4, 6), "act://c" -> Set(4, 5), "act://none" -> Set.empty[Int])
+      want.foreach { case (a, expected) =>
+        val q = Lrs.Query(activity = Some(a), relatedActivities = true)
+        val ref = sink.read(spark).filter(existsForm(a)).select("event_id").as[String].collect().toSet
+        assert(ref === expected.map(id), a)
+        assert(ids(Lrs.statements(sink.read(spark), q)).toSet === ref, a)
+        assert(ids(Lrs.statements(rows, q)).toSet === ref, a)
+      }
+      // the GET's scan: vectorized, reading `id` alone under each list
+      val page = Lrs.statements(sink.read(spark), Lrs.Query(activity = Some("act://g"), relatedActivities = true))
+        .select("ts", "event_id", "event")
+      page.collect()
+      val scans = collect(page.queryExecution.executedPlan) {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
+      assert(scans.size === 1)
+      assert(scans.head.metadata("Batched") === "true", scans.head.metadata)
+      import org.apache.spark.sql.types.{ArrayType, StructType}
+      def struct(t: StructType, f: String) = t(f).dataType.asInstanceOf[StructType]
+      val ca = struct(struct(struct(scans.head.requiredSchema, "stmt"), "context"), "contextActivities")
+      assert(ca.fieldNames.toSeq === Seq("parent", "grouping", "category", "other"))
+      ca.fields.foreach { f =>
+        assert(f.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType].fieldNames.toSeq ===
+          Seq("id"), scans.head.metadata("ReadSchema"))
+      }
+    } finally graft.operators.LayoutOps.deleteTree(java.nio.file.Paths.get(lake))
   }
 }
