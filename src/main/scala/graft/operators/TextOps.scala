@@ -170,12 +170,16 @@ object TextOps {
     * ([[graft.streaming.IncrementalDedup]]): two band layouts that drift
     * apart would silently split the candidate space. */
   def bandBuckets(docsWithShingles: DataFrame): DataFrame =
-    // one native pass per signature; each key is bit-identical to
-    // xxhash64(concat_ws("_", b, slice(sig, b*Rows+1, Rows))), so band
-    // state written by either form probes correctly under the other
-    docsWithShingles.select(col("doc_id"), posexplode(
-        graft.functions.Signatures.bandKeysCol(minhashSig(col("sh")), Bands, Rows)))
+    docsWithShingles.select(col("doc_id"), posexplode(bandKeys(col("sh"))))
       .toDF("doc_id", "band", "bkey")
+
+  /** Every band key of a shingle set as `array<bigint>`, band b at index
+    * b — [[bandBuckets]] is its `posexplode`. One native pass per
+    * signature; each key is bit-identical to
+    * xxhash64(concat_ws("_", b, slice(sig, b*Rows+1, Rows))), so band state
+    * written by either form probes correctly under the other. */
+  def bandKeys(sh: Column): Column =
+    graft.functions.Signatures.bandKeysCol(minhashSig(sh), Bands, Rows)
 
   /** LSH band + verify over any `(doc_id, sh: array<string>)` frame — shared
     * by the text path above and the token-table path

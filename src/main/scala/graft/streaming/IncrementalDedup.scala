@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{CorpusOps, TextOps}
@@ -12,13 +12,16 @@ import graft.operators.{CorpusOps, TextOps}
   * per batch — a non-starter when the corpus is 100 TB and the batch is
   * 1 GB).
   *
-  * Per microbatch of new documents this maintains three state tables and
-  * touches ONLY batch-proportional data:
+  * State is two tables: `docs` `(doc_id, sh, bk)` — each document's
+  * shingle set and its LSH band keys ([[TextOps.bandKeys]], the same single
+  * banding definition as the batch path's [[TextOps.bandBuckets]]), band b
+  * at index b — and `labels` `(doc_id, rep)`. Per microbatch of new
+  * documents the engine touches ONLY batch-proportional data:
   *
-  *  1. candidate pairs: the batch's LSH band buckets ([[TextOps.bandBuckets]]
-  *     — the same single banding definition as the batch path) self-joined
-  *     (new↔new) and equi-joined against the persistent band index
-  *     (new↔existing). Band equi-joins, never a scan of old documents.
+  *  1. candidate pairs: the batch's band buckets (`posexplode(bk)`)
+  *     self-joined (new↔new) and equi-joined against the stored docs' band
+  *     buckets (new↔existing). Band equi-joins, never a scan of old
+  *     documents' text.
   *  2. exact-Jaccard verification of candidates only (shingle sets fetched
   *     by id equi-join — AQE broadcasts the candidate side), scored by the
   *     native one-pass set-Jaccard kernel
@@ -40,12 +43,12 @@ import graft.operators.{CorpusOps, TextOps}
   * tier's exact dedup / `dropDuplicatesWithinWatermark` gate does this).
   *
   * This class is the one engine: its `addBatch(batchId, batch)` runs the
-  * phases, and reads and writes the three tables through a
+  * phases, and reads and writes the two tables through a
   * [[IncrementalDedup.State]] backend. The public constructor here keeps
   * state in the session ([[IncrementalDedup.SessionState]]: checkpointed
   * deltas — fastest; dies with the driver, and replay-gating belongs to
   * the caller). [[DurableIncrementalDedup]] runs the same engine over
-  * [[IncrementalDedup.LakeState]] — three [[LakeSink]]s with crash-atomic
+  * [[IncrementalDedup.LakeState]] — two [[LakeSink]]s with crash-atomic
   * manifest commits, idempotent batch replay, and a driver restart that
   * rebuilds from the lake with label parity (StreamingSpec kill/restart
   * test).
@@ -77,30 +80,28 @@ class IncrementalDedup private[streaming] (
 
   /** Ingest one microbatch `(doc_id, text)`; returns audit stats. Call from
     * `foreachBatch`. Session state has no replay gate: replaying a batch
-    * would double-insert band rows, so gate on batchId like [[LakeSink]]
+    * would double-insert its docs, so gate on batchId like [[LakeSink]]
     * does — or use [[DurableIncrementalDedup]], whose state gates
     * internally. */
   def addBatch(batch: DataFrame): BatchStats = addBatch(0L, batch)
 
-  /** The engine: shingle → band → candidate+verify → label merge → commit
-    * labels → commit bands → commit shingles, each phase's jobs labelled
-    * `<state.prefix><phase>`. `batchId` matters only to a state with replay
-    * gates. */
+  /** The engine: docs pass → candidate+verify → label merge → commit
+    * labels → commit docs, each phase's jobs labelled `<state.prefix><phase>`;
+    * the docs pass and the docs commit run as `shingle batch` and `commit
+    * shingles`, the phase names perfbench's census reads. `batchId` matters
+    * only to a state with replay gates. */
   private[streaming] def addBatch(batchId: Long, batch: DataFrame): BatchStats = {
     if (state.completed(batchId)) return BatchStats(0L, 0L, 0L, 0L, 0L, 0)
     def phase[T](name: String)(body: => T): T =
       labeled(batch, state.prefix + name)(body)
-    // LAZY checkpoint (the no-arg localCheckpoint() is eager): the count
-    // is the one job, and it materializes the checkpoint blocks as it goes
-    val (newShingles, nNew) = phase("shingle batch") {
-      val df = shinglesOf(batch, k).localCheckpoint(false)
-      (df, df.count()) }
-    // EAGER on purpose: the candidate self-join reads this table on three
-    // legs — a lazy checkpoint would recompute the signature pass per leg
-    // inside the candidate+verify job (measured a wash at best), while the
-    // eager job computes it exactly once
-    val newBands = phase("band batch") {
-      TextOps.bandBuckets(newShingles).localCheckpoint(true) }
+    // LAZY checkpoint (the no-arg localCheckpoint() is eager): the tally is
+    // the one job that computes shingles and band keys and stores the
+    // checkpoint blocks as it goes. The candidate self-join reads the
+    // batch's bands on three legs; each is a posexplode of `bk` off those
+    // blocks, so the signature pass runs once
+    val (docs, nNew) = phase("shingle batch") {
+      val df = docsOf(batch, k).localCheckpoint(false)
+      (df, tally(df, lit(true))._1) }
 
     var stats = BatchStats(nNew, 0L, 0L, 0L, 0L, 0)
     // batch-scoped checkpoints (scored candidates, contraction graph,
@@ -111,18 +112,15 @@ class IncrementalDedup private[streaming] (
     if (!state.labelsCommitted(batchId)) {
       // candidates + verification materialize as ONE checkpoint of the
       // candidate-sized scored frame (jaccard-threshold flag kept, not yet
-      // filtered) — the separate candidate checkpoint bought only the
-      // nCands stat, which the scored frame still carries; one fewer
-      // materialized frame ≈ 3-4 fewer scheduled jobs per microbatch. Both
-      // stats come from ONE aggregate (count + conditional count) over the
-      // lazily checkpointed frame; the aggregate's job also stores the
-      // checkpoint blocks, so no separate job materializes the frame.
-      val allSh = state.shingles.fold(newShingles)(_.union(newShingles))
+      // filtered), and both stats come from the one tally job that stores
+      // its blocks
+      val stored = state.docs
+      val allSh = stored.fold(docs)(_.union(docs)).select("doc_id", "sh")
       val (scored, nCands, nVerified) = phase("candidate+verify") {
-        val df = scoredPairs(candidatePairs(newBands, state.bands), allSh,
-          threshold).localCheckpoint(false)
-        val s = df.agg(count(lit(1)), count(when(col("ok"), true))).head()
-        (df, s.getLong(0), s.getLong(1)) }
+        val df = scoredPairs(candidatePairs(bandsOf(docs), stored.map(bandsOf)),
+          allSh, threshold).localCheckpoint(false)
+        val (n, ok) = tally(df, coalesce(col("ok"), lit(false)))
+        (df, n, ok) }
       scratch += scored
       stats = stats.copy(nCandidatePairs = nCands, nVerifiedPairs = nVerified)
       if (nVerified > 0) {
@@ -136,9 +134,10 @@ class IncrementalDedup private[streaming] (
         }
       }
     }
-    // deltas last: on lake state the shingle commit marks the batch complete
-    phase("commit bands")(state.commitBands(batchId, newBands, nNew))
-    phase("commit shingles")(state.commitShingles(batchId, newShingles, nNew))
+    // the docs delta last: on lake state its commit marks the batch complete.
+    // Verification read the same checkpoint, so the engine (not the commit)
+    // releases it, once, unless the state kept it as a delta
+    if (!phase("commit shingles")(state.commitDocs(batchId, docs, nNew))) scratch += docs
     scratch.foreach(release)
     stats
   }
@@ -164,12 +163,33 @@ object IncrementalDedup {
   /** Dead checkpointed generation → free its executor-storage blocks NOW.
     * `df.unpersist()` alone does not release localCheckpoint RDD blocks
     * (they wait for ContextCleaner GC); the bridge unpersists the
-    * underlying checkpoint RDD itself (review r4 ADVICE). */
+    * underlying checkpoint RDD itself (review r4 ADVICE). It releases EVERY
+    * checkpoint under `df`'s plan, so release a frame only when each of
+    * them is dead. */
   private[graft] def release(df: DataFrame): Unit =
     org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpointQuietly(df)
 
-  /** Where the engine's three tables live. Commits take ownership of the
-    * checkpointed frame they are handed. */
+  /** Rows of `df`, and rows where `flag` holds, in ONE job — over a lazy
+    * checkpoint, the job that stores its blocks. A `count()` or a global
+    * aggregate is two jobs under AQE: its exchange runs as a job of its
+    * own. */
+  private def tally(df: DataFrame, flag: Column): (Long, Long) = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    df.select(flag).as[Boolean].mapPartitions { it =>
+      var n = 0L
+      var t = 0L
+      it.foreach { b => n += 1; if (b) t += 1 }
+      Iterator(n -> t)
+    }.collect().foldLeft((0L, 0L)) { case ((n, t), (a, b)) => (n + a, t + b) }
+  }
+
+  /** Where the engine's two tables live.
+    *
+    * Ownership: a commit never releases what it is handed. The engine's
+    * docs checkpoint is read by verification and by the docs commit, so the
+    * engine releases it after the commit — unless `commitDocs` returns true:
+    * the state kept that frame as a delta and now owns its blocks. */
   private[streaming] sealed trait State {
     /** Job-description prefix of every phase run over this state. */
     def prefix: String
@@ -178,32 +198,30 @@ object IncrementalDedup {
     /** The batch's label generation committed earlier: skip its recompute. */
     def labelsCommitted(batchId: Long): Boolean
     def ingested: Boolean
-    def bands: Option[DataFrame]    // (doc_id, band, bkey)
-    def shingles: Option[DataFrame] // (doc_id, sh)
-    def labels: Option[DataFrame]   // (doc_id, rep)
+    def docs: Option[DataFrame]   // (doc_id, sh, bk)
+    def labels: Option[DataFrame] // (doc_id, rep)
     def commitLabels(batchId: Long, next: DataFrame): Unit
-    def commitBands(batchId: Long, delta: DataFrame, rows: Long): Unit
-    def commitShingles(batchId: Long, delta: DataFrame, rows: Long): Unit
+    /** Commit the batch's docs delta; true when the state kept `delta`
+      * itself (see the ownership rule above). */
+    def commitDocs(batchId: Long, delta: DataFrame, rows: Long): Boolean
   }
 
-  /** Session-local state, no replay gates. Band index and shingle store are
-    * APPEND-ONLY vectors of per-batch checkpointed deltas, and a read is
-    * their union — each leaf is already materialized, so appending a batch
-    * costs O(batch), never a rewrite of the accumulated corpus state. The
-    * label table is the one state that mutates in place (reps re-point on
+  /** Session-local state, no replay gates. The docs table is an APPEND-ONLY
+    * vector of per-batch checkpointed deltas, and a read is their union —
+    * each leaf is already materialized, so appending a batch costs
+    * O(batch), never a rewrite of the accumulated corpus state. The label
+    * table is the one state that mutates in place (reps re-point on
     * merges); it is label-sized, rewritten only on batches that produce
     * pairs, and the replaced generation is released. */
   private[streaming] final class SessionState extends State {
-    private var bandDeltas = Vector.empty[DataFrame]
-    private var shingleDeltas = Vector.empty[DataFrame]
+    private var docDeltas = Vector.empty[DataFrame]
     private var current: Option[DataFrame] = None
     var ingested = false
 
     val prefix = "dedup: "
     def completed(batchId: Long): Boolean = false
     def labelsCommitted(batchId: Long): Boolean = false
-    def bands: Option[DataFrame] = bandDeltas.reduceOption(_ union _)
-    def shingles: Option[DataFrame] = shingleDeltas.reduceOption(_ union _)
+    def docs: Option[DataFrame] = docDeltas.reduceOption(_ union _)
     def labels: Option[DataFrame] = current
 
     def commitLabels(batchId: Long, next: DataFrame): Unit = {
@@ -212,46 +230,52 @@ object IncrementalDedup {
       // the replaced generation's checkpoint blocks are dead — drop them
       prev.foreach(release)
     }
-    def commitBands(batchId: Long, delta: DataFrame, rows: Long): Unit =
-      bandDeltas = appended(bandDeltas, delta, rows)
-    def commitShingles(batchId: Long, delta: DataFrame, rows: Long): Unit = {
-      shingleDeltas = appended(shingleDeltas, delta, rows)
-      ingested = true
-    }
 
-    /** Append a delta; an empty one (idle stream tick) is released instead,
-      * or every empty batch would leak its checkpoint for the session
-      * lifetime. Past 64 leaves, fold the vector into one checkpointed frame
-      * and free the old blocks — amortized O(corpus/64) per batch, plan
-      * width ≤ 64. (Lake state doesn't need this: there the "union" is a
-      * file listing and compaction is the sink's tiered background job.) */
-    private def appended(deltas: Vector[DataFrame], df: DataFrame,
-                         rows: Long): Vector[DataFrame] =
-      if (rows == 0) { release(df); deltas }
-      else if (deltas.size + 1 < 64) deltas :+ df
+    /** Keep a delta; an empty one (idle stream tick) is not kept, or every
+      * empty batch would hold its checkpoint for the session lifetime. Past
+      * 64 leaves, fold the vector into one checkpointed frame and free the
+      * kept blocks — amortized O(corpus/64) per batch, plan width ≤ 64.
+      * (Lake state doesn't need this: there the "union" is a file listing
+      * and compaction is the sink's tiered background job.) */
+    def commitDocs(batchId: Long, delta: DataFrame, rows: Long): Boolean = {
+      ingested = true
+      if (rows == 0) false
+      else if (docDeltas.size + 1 < 64) { docDeltas :+= delta; true }
       else {
-        val folded = (deltas :+ df).reduce(_ union _).localCheckpoint(true)
-        (deltas :+ df).foreach(release)
-        Vector(folded)
+        val folded = (docDeltas :+ delta).reduce(_ union _).localCheckpoint(true)
+        docDeltas.foreach(release)
+        docDeltas = Vector(folded)
+        false
       }
+    }
   }
 
-  /** Lake state: each table is a [[LakeSink]] under `lakePath`, band and
-    * shingle deltas as append-only batch commits, the label table as one
-    * full generation per label-changing batch. Owns the replay gates of
-    * [[DurableIncrementalDedup]]'s protocol. */
+  /** Lake state: each table is a [[LakeSink]] under `lakePath` — `docs`
+    * deltas as append-only batch commits, the label table as one full
+    * generation per label-changing batch. Owns the replay gates of
+    * [[DurableIncrementalDedup]]'s protocol. A lake in the older
+    * three-table layout (`bands/`, `shingles/`, `labels/`) fails at once:
+    * read as this layout it would look like an empty docs table, and the
+    * next batch would silently miss every stored near-dup. */
   private[streaming] final class LakeState(spark: SparkSession, lakePath: String)
       extends State {
-    private val bandSink = new LakeSink(s"$lakePath/bands")
-    private val shingleSink = new LakeSink(s"$lakePath/shingles")
+    private def has(table: String) = java.nio.file.Files.exists(
+      java.nio.file.Paths.get(lakePath, table))
+    if (!has("docs") && (has("bands") || has("shingles")))
+      throw new IllegalStateException(s"$lakePath holds near-dup state in the " +
+        "old three-table layout (bands/, shingles/, labels/) with no docs/ " +
+        "table; this engine keeps two tables (docs/, labels/) and cannot read " +
+        "it. Rebuild the state by replaying the corpus into a new lake path.")
+    private val docSink = new LakeSink(s"$lakePath/docs")
     private val labelSink = new LakeSink(s"$lakePath/labels")
 
     val prefix = "durdedup: "
-    def completed(batchId: Long): Boolean = shingleSink.accountsFor(batchId)
+    def completed(batchId: Long): Boolean = docSink.accountsFor(batchId)
     def labelsCommitted(batchId: Long): Boolean = labelSink.accountsFor(batchId)
-    def ingested: Boolean = shingleSink.committed().nonEmpty
-    def bands: Option[DataFrame] = read(bandSink)
-    def shingles: Option[DataFrame] = read(shingleSink)
+    def ingested: Boolean = docSink.committed().nonEmpty
+    def docs: Option[DataFrame] =
+      if (docSink.committed().exists(_.rows > 0)) Some(strip(docSink.read(spark)))
+      else None
 
     /** Newest committed label generation, read from its ONE segment dir —
       * never the whole history filtered back down (each label-changing
@@ -273,36 +297,39 @@ object IncrementalDedup {
     // is atomic, so a crash mid-write never becomes "current"
     def commitLabels(batchId: Long, next: DataFrame): Unit =
       labelSink.addBatch(batchId, next)
-    def commitBands(batchId: Long, delta: DataFrame, rows: Long): Unit = {
-      bandSink.addBatch(batchId, delta); release(delta)
-    }
-    def commitShingles(batchId: Long, delta: DataFrame, rows: Long): Unit = {
-      shingleSink.addBatch(batchId, delta); release(delta)
+    def commitDocs(batchId: Long, delta: DataFrame, rows: Long): Boolean = {
+      docSink.addBatch(batchId, delta); false
     }
 
     private def strip(df: DataFrame): DataFrame = df.drop("_batch_id", "_part_id")
-    private def read(sink: LakeSink): Option[DataFrame] =
-      if (sink.committed().exists(_.rows > 0)) Some(strip(sink.read(spark)))
-      else None
   }
 
-  private[streaming] def shinglesOf(batch: DataFrame, k: Int): DataFrame =
+  /** The batch's `(doc_id, sh, bk)` rows: shingle set and band keys in one
+    * pass. */
+  private[streaming] def docsOf(batch: DataFrame, k: Int): DataFrame =
     // fan the batch out before shingling: a batch carved from a one-file
     // scan (the replay drivers) or a few-file trigger plans as 1-4 tasks,
     // serializing the per-row shingle+minhash work; no-op when the batch
     // already has session-parallelism partitions (Par.fanOut)
     graft.operators.Par.fanOut(batch, col("doc_id"))
       .select(col("doc_id"), TextOps.shingleArr(col("text"), k).as("sh"))
+      .select(col("doc_id"), col("sh"), TextOps.bandKeys(col("sh")).as("bk"))
+
+  /** Band buckets `(doc_id, band, bkey)` of a docs table. */
+  private def bandsOf(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), posexplode(col("bk"))).toDF("doc_id", "band", "bkey")
 
   /** Candidates: new↔new (band self-join, i<j) plus new↔existing (band
     * index equi-join) — never a scan of old documents. The new↔old side
-    * drops self-pairs (`o.doc_id =!= n.doc_id` — harmless in normal
-    * operation where old and new ids are disjoint, load-bearing on durable
-    * replay where the crashed batch's own bands are already in the index)
-    * and is normalized to (least, greatest) so a replay-induced reversed
-    * pair lands on the same row the self-join emitted and `distinct()`
-    * genuinely absorbs it — keeping the nCandidatePairs/nVerifiedPairs
-    * audit stats exact under redelivery, not just the labels (r5 ADVICE). */
+    * drops self-pairs (`o.doc_id =!= n.doc_id`) and is normalized to
+    * (least, greatest), so a pair it shares with the self-join lands on the
+    * same row and `distinct()` absorbs it. Old and new ids are disjoint
+    * when upstream feeds each doc once, and the durable protocol's docs
+    * commit marks a batch complete, so a replay never finds its own docs
+    * in the index; the guard keeps the audit stats exact for a caller that
+    * re-feeds a doc anyway. No repartition before `distinct()`: each task
+    * of the verify joins would rebuild the broadcast shingle relation
+    * (measured slower). */
   private[streaming] def candidatePairs(newBands: DataFrame,
                                         bandsState: Option[DataFrame]): DataFrame = {
     val newNew = newBands.as("x").join(newBands.as("y"),
@@ -356,7 +383,8 @@ object IncrementalDedup {
     // existing rep. Every rep has its own label row, so the flag is a
     // function of the node: deduplicating on the edge alone loses nothing
     // (and keeps a plain edge distinct's partitioning, hence the committed
-    // label files), and nTouchedReps comes from the collected edges
+    // label files), and nTouchedReps and the fresh label rows come from
+    // the collected edges
     val collapsed = labelsState.fold(verified.select(col("id_a"), col("id_b"),
         lit(false).as("is_rep_a"), lit(false).as("is_rep_b"))) { lbl =>
       verified
@@ -368,28 +396,31 @@ object IncrementalDedup {
           coalesce(col("rep_b"), col("id_b")).as("id_b"),
           col("rep_a").isNotNull.as("is_rep_a"), col("rep_b").isNotNull.as("is_rep_b"))
     }.filter(col("id_a") =!= col("id_b")).dropDuplicates("id_a", "id_b")
-      .localCheckpoint(false) // lazy: the count below materializes it
+      .localCheckpoint(false) // lazy: the bounded collect below materializes it
     // the contraction graph is batch-sized BY CONSTRUCTION (endpoints are
     // batch docs ∪ touched reps — the property StreamingSpec asserts), so
     // its node count and components come from ONE bounded collect + driver
     // union-find instead of a distinct-count job plus the CC job chain
-    // (~8 scheduled jobs per microbatch on sub-second data). Graphs past
-    // the same bound the CC hybrid uses fall back to the distributed loop.
+    // (~8 scheduled jobs per microbatch on sub-second data). The collect
+    // also decides the path: more than the bound's rows, and the graph
+    // goes to the same distributed loop the CC hybrid uses.
     // 2^18 edges ≈ 4 MB collected, ≤ ~0.5M-node LocalRelation — small
     // enough to ride plans as a broadcast; past it, the distributed loop
-    val localLimit = 1L << 18
-    val nEdges = collapsed.count()
+    val localLimit = 1 << 18
+    val head = collapsed.limit(localLimit + 1).collect()
     val longIds = Seq("id_a", "id_b").forall(
       collapsed.schema(_).dataType == org.apache.spark.sql.types.LongType)
-    if (nEdges == 0) { release(collapsed); None }
-    else if (nEdges <= localLimit && longIds) {
+    if (head.isEmpty) { release(collapsed); None }
+    else if (head.length <= localLimit && longIds) {
       val spark = collapsed.sparkSession
       import spark.implicits._
-      val rows = collapsed.collect()
-      val edges = rows.map(r => (r.getLong(0), r.getLong(1)))
-      val nTouched = rows.iterator
-        .flatMap(r => Iterator(r.getLong(0) -> r.getBoolean(2), r.getLong(1) -> r.getBoolean(3)))
-        .collect { case (v, true) => v }.toSet.size.toLong
+      val edges = head.map(r => (r.getLong(0), r.getLong(1)))
+      // node → collapsed from a label row, i.e. an existing rep (which has
+      // its own row); a node without the flag has no label row
+      val isRep = new java.util.HashMap[Long, Boolean](edges.length * 2)
+      head.foreach { r =>
+        isRep.put(r.getLong(0), r.getBoolean(2)); isRep.put(r.getLong(1), r.getBoolean(3))
+      }
       val parent = new java.util.HashMap[Long, Long](edges.length * 2)
       def find(x: Long): Long = {
         var r = x
@@ -406,37 +437,40 @@ object IncrementalDedup {
       }
       val nodes = edges.iterator.flatMap { case (a, b) => Iterator(a, b) }
         .toArray.distinct
-      // LocalRelation — joins against it broadcast; nothing to release
+      // LocalRelations — joins against them broadcast; nothing to release
       val comp = nodes.map(v => (v, find(v))).toSeq.toDF("node", "new_rep")
-      val nextLabels = patchLabels(comp, labelsState)
+      val fresh = nodes.filterNot(isRep.get).map(v => (v, find(v))).toSeq
+        .toDF("doc_id", "rep")
+      val nextLabels = patchLabels(comp, labelsState, Some(fresh))
       Some(LabelMerge(nextLabels, comp, Seq(collapsed), nodes.length.toLong,
-        nTouched, 0))
+        nodes.count(isRep.get).toLong, 0))
     } else {
       val edges = collapsed.select("id_a", "id_b")
       val nNodes = edges.select(explode(array(col("id_a"), col("id_b"))))
         .distinct().count()
       val (comp0, rounds) = CorpusOps.connectedComponentsWithRounds(edges)
       val comp = comp0.toDF("node", "new_rep").localCheckpoint(true)
-      Some(LabelMerge(patchLabels(comp, labelsState), comp,
+      Some(LabelMerge(patchLabels(comp, labelsState, None), comp,
         Seq(collapsed, comp), nNodes, touchedReps(comp, labelsState), rounds))
     }
   }
 
   /** Patch the label table: rows of touched clusters re-point at the merged
-    * rep; contraction nodes without a label row get fresh rows. */
-  private def patchLabels(comp: DataFrame,
-                          labelsState: Option[DataFrame]): DataFrame =
+    * rep; contraction nodes without a label row get fresh rows — `fresh`
+    * when the caller knows them (the local path), else found by an anti
+    * join against the label table. */
+  private def patchLabels(comp: DataFrame, labelsState: Option[DataFrame],
+                          fresh: Option[DataFrame]): DataFrame =
     labelsState match {
       case Some(lbl) =>
         val updated = lbl
           .join(comp.withColumnRenamed("node", "rep"), Seq("rep"), "left")
           .select(col("doc_id"),
             coalesce(col("new_rep"), col("rep")).as("rep"))
-        val fresh = comp
+        updated.union(fresh.getOrElse(comp
           .join(lbl.select("doc_id"), col("node") === col("doc_id"),
             "left_anti")
-          .select(col("node").as("doc_id"), col("new_rep").as("rep"))
-        updated.union(fresh)
+          .select(col("node").as("doc_id"), col("new_rep").as("rep"))))
       case None =>
         comp.select(col("node").as("doc_id"), col("new_rep").as("rep"))
     }
@@ -485,37 +519,35 @@ object IncrementalDedup {
 }
 
 /** Restart-durable incremental near-dup maintenance: the
-  * [[IncrementalDedup]] engine over [[IncrementalDedup.LakeState]], every
-  * state table written through [[LakeSink]] — band/shingle deltas as
-  * append-only batch commits, the label table as one full generation per
-  * label-changing batch. A driver restart loses NOTHING: a new instance
-  * over the same `lakePath` reads the committed manifests and continues
-  * (StreamingSpec asserts label parity between an interrupted and an
-  * uninterrupted run).
+  * [[IncrementalDedup]] engine over [[IncrementalDedup.LakeState]], both
+  * state tables written through [[LakeSink]] — `docs` deltas
+  * `(doc_id, sh, bk)` as append-only batch commits, the label table as one
+  * full generation per label-changing batch. A driver restart loses
+  * NOTHING: a new instance over the same `lakePath` reads the committed
+  * manifests and continues (StreamingSpec asserts label parity between an
+  * interrupted and an uninterrupted run). A lake in the older three-table
+  * layout (`bands/`, `shingles/`) fails at construction.
   *
   * Replay protocol (crash anywhere, re-deliver the batch):
-  * commit ORDER is labels → bands → shingles, and the SHINGLE commit is the
-  * batch's completion marker —
-  *  - shingles committed → the whole batch landed → replay is a no-op;
-  *  - labels committed but bands/shingles not → the label recompute is
-  *    skipped (its gen is the marker) and the deterministic band/shingle
-  *    deltas are recomputed from the batch and committed (LakeSink's own
-  *    accountsFor gate makes each idempotent);
-  *  - crash before the labels commit → full recompute. The recompute is
-  *    consistent even when the crashed batch's bands ARE already committed
-  *    (possible only for batches that changed no labels): the new↔old join
-  *    then re-yields the batch's own pairs, but self-pairs are filtered at
-  *    the join and cross-pairs are normalized to (least, greatest) before
-  *    `distinct()`, so they collapse onto the new↔new self-join's rows —
-  *    labels AND audit stats match the uncrashed run exactly.
+  * commit ORDER is labels → docs, and the DOCS commit is the batch's
+  * completion marker —
+  *  - docs committed → the whole batch landed → replay is a no-op;
+  *  - labels committed but docs not → the label recompute is skipped (its
+  *    gen is the marker) and the deterministic docs delta is recomputed
+  *    from the batch and committed (LakeSink's own accountsFor gate makes
+  *    it idempotent);
+  *  - crash before the labels commit (or a batch that changed no labels,
+  *    before its docs commit) → full recompute against the state of the
+  *    batches before it, so labels AND audit stats match the uncrashed run
+  *    exactly.
   *
-  * Read amplification note: each batch reads the band index and shingle
-  * store from parquet instead of session-cached frames — the price of
-  * restart durability without an index service. Both reads are equi-join
-  * probes (band keys, candidate ids), so at cluster scale they are
-  * column-pruned scans that AQE keeps on the small side of each join; the
-  * in-memory class remains the right choice for single-session audits
-  * (`q_dup_clusters_incremental` default). */
+  * Read amplification note: each batch reads the docs table from parquet
+  * instead of session-cached frames — the price of restart durability
+  * without an index service. Both reads are equi-join probes (band keys
+  * from the `bk` column, shingle sets from `sh` by candidate id), so at
+  * cluster scale they are column-pruned scans that AQE keeps on the small
+  * side of each join; the in-memory class remains the right choice for
+  * single-session audits (`q_dup_clusters_incremental` default). */
 class DurableIncrementalDedup(spark: SparkSession, lakePath: String,
                               threshold: Double = 0.5, k: Int = 3) {
 

@@ -80,7 +80,8 @@ import org.apache.spark.util.sketch.BloomFilter
   * still applies the exact predicate. The table schema comes from the
   * manifest (the Iceberg table-metadata rule): when every entry read
   * carries the SAME fingerprint, from one segment's parquet footer on the
-  * driver — no schema-inference Spark job. Otherwise (an entry without a
+  * driver — no schema-inference Spark job — decoded once per fingerprint
+  * and instance. Otherwise (an entry without a
   * fingerprint, a column added mid-stream, a footer without Spark row
   * metadata) it is inferred with `mergeSchema` over every segment.
   */
@@ -565,7 +566,11 @@ class LakeSink(val path: String) extends Serializable {
     if (entries.isEmpty) spark.emptyDataFrame
     else {
       val footer = entries.map(_.schema).distinct match {
-        case Seq(Some(_)) => footerSchema(entries)
+        case Seq(Some(fp)) => Option(schemaByFingerprint.get(fp)).orElse {
+          val s = footerSchema(entries)
+          s.foreach(schemaByFingerprint.put(fp, _))
+          s
+        }
         case _ => None
       }
       val schema = footer.getOrElse(spark.read.option("mergeSchema", "true")
@@ -575,6 +580,12 @@ class LakeSink(val path: String) extends Serializable {
         org.apache.spark.sql.graftbridge.Bridge.asNullable(schema), None,
         new ParquetFileFormat, Map.empty)(spark))
     }
+
+  /** Footer schemas resolved so far, by manifest fingerprint: one footer
+    * decode and one schema-JSON parse per fingerprint and instance, not
+    * per read. Not serialized — a deserialized copy resolves its own. */
+  @transient private lazy val schemaByFingerprint =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
   /** The Spark schema recorded in the footer of ONE data file of the
     * given segments ([[LakeSink.readFooter]], no Spark job). None when no

@@ -324,6 +324,31 @@ class LakeStatsSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     } finally graft.operators.LayoutOps.deleteTree(Paths.get(dir))
   }
 
+  test("schema resolves once per fingerprint: a second read of an unchanged manifest decodes no footer") {
+    val (dir, sink) = freshLake()
+    try {
+      sink.addBatchStats(0L, batch(0 until 100, 0L, 1000L), Seq("user_id"))
+      sink.addBatchStats(1L, batch(100 until 200, 5000L, 6000L), Seq("user_id"))
+      val want = sink.read(spark).schema
+      // break every footer's magic: a read that decoded one would find no
+      // schema there and fall back to mergeSchema inference, a Spark job
+      val files = Seq(0L, 1L).flatMap(b => scala.util.Using.resource(
+        Files.list(Paths.get(dir, s"batch=$b")))(_.iterator().asScala
+          .filter(f => f.getFileName.toString.matches("part-.*\\.parquet")).toList))
+      assert(files.nonEmpty)
+      val kept = files.map(f => f -> Files.readAllBytes(f))
+      kept.foreach { case (f, bytes) =>
+        Files.write(f, bytes.dropRight(4) ++ "XXXX".getBytes, StandardOpenOption.TRUNCATE_EXISTING)
+      }
+      try {
+        assert(jobsIn(assert(sink.read(spark).schema === want)) === 0L)
+        // a fresh instance has resolved nothing: it decodes, fails, infers
+        assert(jobsIn(scala.util.Try(new LakeSink(dir).read(spark))) >= 1L)
+      } finally kept.foreach { case (f, bytes) => Files.write(f, bytes) }
+      assert(rows(sink.read(spark)) === rows(mergeRead(dir, Seq(0L, 1L))))
+    } finally graft.operators.LayoutOps.deleteTree(Paths.get(dir))
+  }
+
   test("manifest without schema fingerprints reads today's rows through mergeSchema") {
     val (dir, sink) = freshLake()
     try {

@@ -8,21 +8,26 @@ trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSuite.session
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 
-  /** Spark jobs `body` schedules. Listener delivery is asynchronous, so
-    * the bus is drained before the count starts and before it is read. */
-  def jobsIn(body: => Any): Long = {
+  /** Spark jobs `body` schedules. */
+  def jobsIn(body: => Any): Long = jobsByDescription(body).values.sum
+
+  /** Spark jobs `body` schedules, per job description (`""` for a job
+    * without one). Listener delivery is asynchronous, so the bus is
+    * drained before the count starts and before it is read. */
+  def jobsByDescription(body: => Any): Map[String, Long] = {
     val sc = spark.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicLong(0)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
+        seen.add(Option(j.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse("")); ()
       }
     }
     org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc)
     sc.addSparkListener(listener)
     try { body; org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc) }
     finally sc.removeSparkListener(listener)
-    n.get()
+    seen.toArray(Array.empty[String]).groupBy(identity).map { case (d, js) => d -> js.length.toLong }
   }
 }
 

@@ -13,12 +13,20 @@ import graft.streaming.{LakeSink, Sessionize, StreamPipeline}
 /** Streaming semantics (SURVEY.md §2.10 / north rule): watermarked dedup,
   * stateful sessionization, windowed counts, stream-stream join,
   * exactly-once sink, checkpoint resume. */
-class StreamingSpec extends SparkSuite {
+class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
   import spark.implicits._
   implicit lazy val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+  // every directory tmp() made, deleted when the suite ends
+  private val made = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
+  private def tmp(prefix: String): String = {
+    val d = Files.createTempDirectory(prefix)
+    made.add(d)
+    d.toString
+  }
+  override def afterAll(): Unit =
+    try made.forEach(graft.operators.LayoutOps.deleteTree(_))
+    finally super.afterAll()
 
   private def inputRows(from: Long, until: Long): Seq[InputRow] =
     (from until until).map { i =>
@@ -1070,8 +1078,8 @@ class StreamingSpec extends SparkSuite {
     val founding = Seq(0L -> dedupDoc(), 1L -> dedupDoc(25 -> "a1x"), 4L -> saltedDoc("s0w"))
     // changes labels: 6 joins cluster 0, 7 pairs the singleton 4
     val merging = Seq(6L -> dedupDoc(21 -> "a2x"), 7L -> saltedDoc("s0w", 25 -> "d0x"))
-    // no verified pair, but a candidate (jaccard 0.400): on replay its bands
-    // are already in the index, so the new↔old join re-yields the pair
+    // no verified pair, but a candidate (jaccard 0.400): a replay's stats
+    // carry a nonzero candidate count to compare
     val pairless = Seq(20L -> saltedDoc("pw"),
       21L -> saltedDoc("pw", 3 -> "q3", 7 -> "q7", 11 -> "q11", 15 -> "q15"))
     val later = Seq(22L -> saltedDoc("pw", 25 -> "px")) // near-dup of 20
@@ -1095,22 +1103,40 @@ class StreamingSpec extends SparkSuite {
     open(lake).addBatch(0L, founding.toDF("doc_id", "text"))
     open(lake).addBatch(1L, merging.toDF("doc_id", "text"))
     val afterMerge = labelsOf(lake)
-    // (a) labels committed, bands and shingles not: the label recompute is
-    // skipped and only the deltas land
-    dropLastCommit(s"$lake/shingles"); dropLastCommit(s"$lake/bands")
+    // (a) labels committed, docs not: the label recompute is skipped and
+    // only the docs delta lands
+    dropLastCommit(s"$lake/docs")
     val a = open(lake).addBatch(1L, merging.toDF("doc_id", "text"))
     assert(a.nVerifiedPairs === 0L && a.nNewDocs === want(1).nNewDocs)
     assert(labelsOf(lake) === afterMerge)
 
-    // (b) bands committed, shingles not: full recompute with the batch's own
-    // bands already in the index — stats exactly as uncrashed
+    // (b) docs commit lost on a pairless batch, which commits no label
+    // generation: replay recomputes, with stats exactly as uncrashed
     open(lake).addBatch(2L, pairless.toDF("doc_id", "text"))
-    dropLastCommit(s"$lake/shingles")
+    dropLastCommit(s"$lake/docs")
     assert(open(lake).addBatch(2L, pairless.toDF("doc_id", "text")) === want(2))
 
     // the replayed state serves the next batch like the uncrashed one
     assert(open(lake).addBatch(3L, later.toDF("doc_id", "text")) === want(3))
     assert(labelsOf(lake) === labelsOf(ref))
+  }
+
+  test("durable incremental dedup fails at once on a lake in the old three-table layout") {
+    import graft.streaming.DurableIncrementalDedup
+    val old = tmp("oldlayout")
+    new LakeSink(s"$old/bands").addBatch(0L, Seq((0L, 0, 7L)).toDF("doc_id", "band", "bkey"))
+    new LakeSink(s"$old/shingles").addBatch(0L,
+      Seq((0L, Seq("a b c"))).toDF("doc_id", "sh"))
+    val e = intercept[IllegalStateException](new DurableIncrementalDedup(spark, old))
+    assert(e.getMessage.contains("old three-table layout (bands/, shingles/, labels/)"),
+      e.getMessage)
+    assert(!Files.exists(java.nio.file.Paths.get(old, "docs")), "opening wrote a docs table")
+    // a lake in the current layout reopens
+    val lake = tmp("newlayout")
+    new DurableIncrementalDedup(spark, lake).addBatch(0L,
+      Seq(1L -> saltedDoc("aw"), 2L -> saltedDoc("aw", 25 -> "zz")).toDF("doc_id", "text"))
+    assert(new DurableIncrementalDedup(spark, lake).labels.as[(Long, Long)].collect().toSet ===
+      Set(1L -> 1L, 2L -> 1L))
   }
 
   test("incremental dedup job census: pinned per-batch job counts, in-memory and durable") {
@@ -1130,20 +1156,34 @@ class StreamingSpec extends SparkSuite {
 
     val mem = new IncrementalDedup(threshold = 0.5)
     val memStats = scala.collection.mutable.ArrayBuffer.empty[IncrementalDedup.BatchStats]
-    val memJobs = batches.map(b => jobsIn { memStats += mem.addBatch(b.toDF("doc_id", "text")) })
+    val memJobs = batches.map(b =>
+      jobsByDescription { memStats += mem.addBatch(b.toDF("doc_id", "text")) })
     val dur = new DurableIncrementalDedup(spark, tmp("censuslake"), threshold = 0.5)
     val durStats = scala.collection.mutable.ArrayBuffer.empty[IncrementalDedup.BatchStats]
     val durJobs = batches.zipWithIndex.map { case (b, i) =>
-      jobsIn { durStats += dur.addBatch(i.toLong, b.toDF("doc_id", "text")) } }
+      jobsByDescription { durStats += dur.addBatch(i.toLong, b.toDF("doc_id", "text")) } }
     // the fixture exercises what the counts cover: merges into existing
     // clusters on both later batches, on the local union-find path
     assert(memStats.map(_.nTouchedReps) === Seq(0L, 1L, 2L))
     assert(durStats === memStats)
-    assert(memJobs === Seq(13L, 16L, 17L), "in-memory jobs per batch")
-    // each LakeSink commit is its write alone: bands 1 and shingles 1 per
-    // batch, labels 1 on batch 0 and 3 on the merging batches (under AQE
-    // the label frame's two shuffle stages run as jobs of that write)
-    assert(durJobs === Seq(15L, 18L, 19L), "durable jobs per batch")
+    assert(memJobs.map(_.values.sum) === Seq(8L, 10L, 11L), "in-memory jobs per batch")
+    // each LakeSink commit is its write alone: docs 1 per batch; labels 1
+    // on batch 0 and 2 on the merging batches, whose label frame joins the
+    // contraction's components (under AQE that stage runs as a job of the
+    // write)
+    assert(durJobs.map(_.values.sum) === Seq(9L, 11L, 12L), "durable jobs per batch")
+    // per phase, so a regression names its phase: the docs pass is one
+    // tally job (two when Par.fanOut repartitions batch 2's single row);
+    // candidate+verify is its AQE stages plus the tally; label merge is
+    // its AQE stages plus the one bounded collect
+    def phases(prefix: String, sv: Long, lm: Long, cl: Long) =
+      Map(s"${prefix}shingle batch" -> sv, s"${prefix}candidate+verify" -> 4L,
+        s"${prefix}label merge" -> lm, s"${prefix}commit labels" -> cl)
+    val memWant = Seq(phases("dedup: ", 1L, 2L, 1L), phases("dedup: ", 1L, 3L, 2L),
+      phases("dedup: ", 2L, 3L, 2L))
+    assert(memJobs === memWant, "in-memory jobs per phase")
+    assert(durJobs === memWant.map(_.map { case (p, n) => p.replace("dedup: ", "durdedup: ") -> n } +
+      ("durdedup: commit shingles" -> 1L)), "durable jobs per phase")
   }
 
   test("incremental dedup: touched-rep count from the collapsed edges equals the label join") {
