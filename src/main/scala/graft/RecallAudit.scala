@@ -18,8 +18,6 @@ import graft.operators.EmbeddingOps
   */
 object RecallAudit {
 
-  final case class Row(config: String, detail: String, recalls: Seq[(String, Double)])
-
   private def pairs(df: DataFrame): Set[(Long, Long)] =
     df.select(col("qid"), col("nid"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -57,60 +57,8 @@ case class BloomMightContainAny(child: Expression, filters: Array[Array[Byte]])
     copy(child = c)
 }
 
-/** `bloom_any_element(arr)` — true iff ANY element of the string array
-  * might be in the (single) bloom filter. The array-side twin of
-  * [[BloomMightContainAny]]: the in-stream decontamination gate probes
-  * every shingle of a row against an eval-set bloom — as a native loop, not
-  * an interpreted `exists()` higher-order lambda (the [[Signatures]]
-  * per-element-interpretation trap). Short-circuits on the first hit. */
-case class BloomAnyElement(child: Expression, filter: Array[Byte])
-    extends UnaryExpression {
-  import org.apache.spark.sql.catalyst.util.ArrayData
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "bloom_any_element"
-
-  @transient private lazy val bf: BloomFilter =
-    BloomFilter.readFrom(new ByteArrayInputStream(filter))
-
-  def anyMight(arr: ArrayData): Boolean = {
-    val n = arr.numElements()
-    var i = 0
-    while (i < n) {
-      if (!arr.isNullAt(i) &&
-          bf.mightContainBinary(arr.getUTF8String(i).getBytes)) return true
-      i += 1
-    }
-    false
-  }
-
-  override protected def nullSafeEval(v: Any): Any =
-    anyMight(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloomAny", this, classOf[BloomAnyElement].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.anyMight($c)")
-  }
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
 object BloomProbe {
   def mightContainAny(id: Column, filters: Array[Array[Byte]]): Column =
     ExpressionUtils.column(
       BloomMightContainAny(ExpressionUtils.expression(id), filters))
-
-  def anyElement(arr: Column, filter: Array[Byte]): Column =
-    ExpressionUtils.column(
-      BloomAnyElement(ExpressionUtils.expression(arr), filter))
-
-  /** Build + serialize a bloom over a string set (driver-side; the eval
-    * set is benchmark-sized). */
-  def build(items: Seq[String], fpp: Double = 0.001): Array[Byte] = {
-    val bf = BloomFilter.create(math.max(items.length.toLong, 1L), fpp)
-    items.foreach(bf.putString)
-    val bos = new java.io.ByteArrayOutputStream()
-    bf.writeTo(bos)
-    bos.toByteArray
-  }
 }

@@ -61,8 +61,8 @@ object EdxRowValidate {
     StructField("user_id", StringType, nullable = true),
     StructField("course_id", StringType, nullable = true),
     // payload fields the convert stage consumes, extracted from the SAME
-    // parsed node the payload validation walked — convert's former
-    // from_json(event, videoPayload/enrollmentPayload) re-parses are gone
+    // parsed node the payload validation walked — convert does not re-parse
+    // the payload
     StructField("event_video_id", StringType, nullable = true),
     StructField("event_current_time", DoubleType, nullable = true),
     StructField("event_old_time", DoubleType, nullable = true),

@@ -530,26 +530,16 @@ object EdxModels {
   private val SessionRe = Pattern.compile("^([a-f0-9]{32})?$")
   private val PageUrlRe = Pattern.compile(HttpRe)
 
-  /** Full per-model check: envelope page/session/name/context.mode rules +
-    * the exact payload rule. `model` comes from the Catalyst selector
-    * ([[graft.operators.Validate.selectModel]]); unknown models are the
-    * selector's concern and return false here defensively. */
-  def valid(model: String, source: String, ctx: Ctx): Boolean = {
-    if (model == null || source == null) return false
-    val rule = rules.getOrElse((source, model), null)
-    if (rule == null) return false
-    validRule(rule, source, ctx,
-      if (needsNode(rule)) parse(ctx.event) else null)
-  }
-
   /** Does this rule's payload check need the parsed event node? */
   private def needsNode(rule: Rule): Boolean = rule.payload match {
     case JsonObj(_) | JsonArr(_) => true
     case _ => false
   }
 
-  /** [[valid]] with the payload node parsed by the CALLER — the verdict
-    * path parses it once and shares it with the convert-field extraction. */
+  /** Full per-model check: envelope page/session/name/context.mode rules +
+    * the exact payload rule, with the payload node parsed by the CALLER —
+    * the verdict path parses it once and shares it with the convert-field
+    * extraction. */
   private def validRule(rule: Rule, source: String, ctx: Ctx,
                         node: JsonNode): Boolean = {
     // envelope constraints

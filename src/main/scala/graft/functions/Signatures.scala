@@ -72,26 +72,6 @@ object Signatures {
     new GenericArrayData(sig)
   }
 
-  /** One-pass 64-bit SimHash over the (already distinct) token array. */
-  def simhash(arr: ArrayData): Long = {
-    val counts = new Array[Int](64)
-    val n = arr.numElements()
-    var i = 0
-    while (i < n) {
-      val h = fnv64(arr.getUTF8String(i))
-      var j = 0
-      while (j < 64) {
-        if (((h >>> j) & 1L) == 1L) counts(j) += 1 else counts(j) -= 1
-        j += 1
-      }
-      i += 1
-    }
-    var out = 0L
-    var j = 0
-    while (j < 64) { if (counts(j) > 0) out |= (1L << j); j += 1 }
-    out
-  }
-
   private val md5Digest = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
@@ -103,8 +83,7 @@ object Signatures {
     * a function DuckDB evaluates identically (`('0x' || substr(md5(s),1,16))
     * ::UBIGINT`), so the whole signature is independently recomputable by
     * the SQL oracle; bits 0..62 keep the signature inside a signed int64 on
-    * both engines. Use [[simhash]] (FNV) when oracle recomputability is not
-    * needed — it is ~3× cheaper per feature. */
+    * both engines. */
   def simhashMd5(arr: ArrayData): Long = {
     val md = md5Digest.get()
     val counts = new Array[Int](63)
@@ -177,30 +156,6 @@ object Signatures {
     var i = 0
     while (i < all.length) { out(i) = UTF8String.fromString(all(i)); i += 1 }
     new GenericArrayData(out)
-  }
-
-  /** One-pass `array(n_valid, n_distinct, top_count)` over an int token
-    * array — the per-row repetition statistics a streaming quality gate
-    * needs without the O(n²) interpreted higher-order-function shape.
-    * NULL slots are excluded from ALL THREE numbers: getInt on a null
-    * element reads 0 (fabricating token id 0), and counting nulls in the
-    * denominator alone would fabricate phantom duplicates instead. */
-  def tokenStats(arr: ArrayData): ArrayData = {
-    val n = arr.numElements()
-    val counts = new java.util.HashMap[Int, Int](Math.max(16, n * 2))
-    var top = 0
-    var valid = 0L
-    var i = 0
-    while (i < n) {
-      if (!arr.isNullAt(i)) {
-        val t = arr.getInt(i)
-        val c = counts.merge(t, 1, (a, b) => a + b)
-        if (c > top) top = c
-        valid += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(Array[Any](valid, counts.size.toLong, top.toLong))
   }
 
   /** `|set(a) ∩ set(b)| / |set(a) ∪ set(b)|` rounded HALF_UP to 6 places
@@ -321,14 +276,6 @@ object Signatures {
 
   def shinglesAllCol(text: Column, k: Int): Column =
     ExpressionUtils.column(ShinglesAllExpr(ExpressionUtils.expression(text), k))
-
-  /** `array(n_valid, n_distinct, top_count)` of an `array<int>` token
-    * column (null slots excluded from all three). */
-  def tokenStatsCol(tokens: Column): Column =
-    ExpressionUtils.column(TokenStatsExpr(ExpressionUtils.expression(tokens)))
-
-  def simhash64(words: Column): Column =
-    ExpressionUtils.column(SimHash64Expr(ExpressionUtils.expression(words)))
 
   /** Signed feature-hash ("hashing trick") embedding of a token array into
     * `dim` integer counts, one md5 per token, one pass. The bucket is the
@@ -457,17 +404,6 @@ case class ShinglesAllExpr(child: Expression, k: Int) extends UnaryExpression {
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-case class TokenStatsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "token_stats"
-  override protected def nullSafeEval(v: Any): Any =
-    Signatures.tokenStats(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Signatures.tokenStats($c)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
 case class SimHashMd5Expr(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
@@ -476,17 +412,6 @@ case class SimHashMd5Expr(child: Expression) extends UnaryExpression {
     Signatures.simhashMd5(v.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c => s"graft.functions.Signatures.simhashMd5($c)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-case class SimHash64Expr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "simhash64"
-  override protected def nullSafeEval(v: Any): Any =
-    Signatures.simhash(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Signatures.simhash($c)")
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 

@@ -154,7 +154,7 @@ object Schemas {
   // Envelope: src/ralph/models/edx/base.py:105-169. `event` is either a JSON
   // object or a JSON-encoded string (possibly truncated at 512 chars for
   // server events, server.py:44-57) → modelled as StringType; family-level
-  // parse happens in Validate with a per-family payload schema.
+  // payload rules run in `graft.functions.EdxModels`.
   val edxContext: StructType = StructType(Seq(
     StructField("course_id", StringType),
     StructField("org_id", StringType),
@@ -181,125 +181,6 @@ object Schemas {
     StructField("name", StringType),
     StructField("session", StringType),
     StructField("event", StringType)))
-
-  /** Payload schema for video family `event` (JSON string field):
-    * src/ralph/models/edx/video/statements.py:40-129. */
-  val videoPayload: StructType = StructType(Seq(
-    StructField("id", StringType),
-    StructField("code", StringType),
-    StructField("currentTime", DoubleType),
-    StructField("old_time", DoubleType),
-    StructField("new_time", DoubleType),
-    StructField("type", StringType),
-    StructField("duration", DoubleType)))
-
-  /** Payload for navigational seq_* events
-    * (src/ralph/models/edx/navigational/statements.py:39-113). */
-  val seqPayload: StructType = StructType(Seq(
-    StructField("id", StringType),
-    StructField("old", IntegerType),
-    StructField("new", IntegerType)))
-
-  /** Payload for common server `event` (a JSON string of the GET/POST dicts,
-    * truncated at 512 chars in the wild → invalid JSON → rejected, matching
-    * pydantic `Json[ServerEventField]` failure — edx/server.py:25-65). */
-  val serverPayload: StructType = StructType(Seq(
-    StructField("GET", MapType(StringType, StringType)),
-    StructField("POST", MapType(StringType, StringType))))
-
-  /** Payload for enrollment events
-    * (src/ralph/models/edx/enrollment/statements.py). */
-  val enrollmentPayload: StructType = StructType(Seq(
-    StructField("course_id", StringType),
-    StructField("mode", StringType),
-    StructField("user_id", StringType)))
-
-  /** Payload for server problem events (problem_interaction/fields/
-    * events.py:156-225): problem_check, problem_check_fail, showanswer. */
-  val problemPayload: StructType = StructType(Seq(
-    StructField("attempts", IntegerType),
-    StructField("grade", IntegerType),
-    StructField("max_grade", IntegerType),
-    StructField("problem_id", StringType),
-    StructField("success", StringType),
-    StructField("failure", StringType)))
-
-  /** Payload for textbook.pdf.* events (textbook_interaction/fields/
-    * events.py:17-130): name echoes the event_type; page int. */
-  val textbookPayload: StructType = StructType(Seq(
-    StructField("name", StringType),
-    StructField("page", IntegerType),
-    StructField("chapter", StringType),
-    StructField("direction", StringType),
-    StructField("amount", StringType),
-    StructField("query", StringType)))
-
-  /** Payload for transcript/speed video-extras (video/fields/
-    * events.py:85-113). */
-  val videoExtraPayload: StructType = StructType(Seq(
-    StructField("id", StringType),
-    StructField("code", StringType),
-    StructField("current_time", DoubleType),
-    StructField("old_speed", StringType),
-    StructField("new_speed", StringType)))
-
-  /** Superset payload for the third-tier families (bookmark, poll, survey,
-    * drag_and_drop, cohort, teams, certificate, peer_instruction —
-    * src/ralph/models/edx/{bookmark,poll,survey,drag_and_drop,cohort,
-    * teams_related,certificate,peer_instruction}/fields/events.py). */
-  val miscPayload: StructType = StructType(Seq(
-    StructField("bookmark_id", StringType),
-    StructField("component_usage_id", StringType),
-    StructField("bookmarks_count", IntegerType),
-    StructField("list_type", StringType),
-    StructField("url_name", StringType),
-    StructField("choice", StringType),
-    StructField("content", StringType),
-    StructField("manually", BooleanType),
-    StructField("item_id", IntegerType),
-    StructField("is_correct", BooleanType),
-    StructField("cohort_id", IntegerType),
-    StructField("name", StringType),
-    StructField("user_id", StringType),
-    StructField("team_id", StringType),
-    StructField("enrollment_mode", StringType),
-    StructField("answer", IntegerType),
-    // notes (notes/fields/events.py:17-74)
-    StructField("note_id", StringType),
-    StructField("number_of_results", IntegerType),
-    StructField("view", StringType),
-    // open response assessment (open_response_assessment/fields/events.py)
-    StructField("submission_uuid", StringType),
-    StructField("attempt_number", IntegerType),
-    StructField("score_type", StringType),
-    StructField("scorer_id", StringType),
-    // problem rescore (problem_interaction/fields/events.py:225-242)
-    StructField("new_score", IntegerType),
-    StructField("new_total", IntegerType),
-    StructField("problem_id", StringType),
-    StructField("success", StringType),
-    // hints (problem_interaction/fields/events.py:98-153)
-    StructField("hint_index", IntegerType),
-    StructField("hint_len", IntegerType),
-    StructField("module_id", StringType),
-    StructField("trigger_type", StringType),
-    // failure literal for reset/save problem fails
-    StructField("failure", StringType),
-    // certificate generation + done.toggled + book
-    StructField("course_id", StringType),
-    StructField("done", BooleanType),
-    StructField("chapter", StringType),
-    StructField("type", StringType),
-    // ORA upload (open_response_assessment/fields/events.py:260-268)
-    StructField("fileName", StringType),
-    StructField("fileSize", LongType),
-    StructField("fileType", StringType),
-    StructField("tool_name", StringType),
-    // library content (content_library_interaction/fields/events.py)
-    StructField("added", ArrayType(StructType(Seq(
-      StructField("usage_key", StringType))))),
-    StructField("removed", ArrayType(StructType(Seq(
-      StructField("usage_key", StringType)))))))
 
   /** The pre-tokenized input table (BASELINE.json input_hint). */
   val inputTable: StructType = StructType(Seq(

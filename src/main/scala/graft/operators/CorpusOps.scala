@@ -214,35 +214,9 @@ object CorpusOps {
           1, 16).as("user_pseudo"),
         col("event_type"))
 
-  /** Regex PII redaction over a free-text column: emails, IPv4 addresses
-    * and long digit runs (phone-ish) are replaced with typed placeholders,
-    * and the redaction count per row is reported. Codegen-friendly chained
-    * `regexp_replace` — no UDF. (The oracle-gated per-type variant with
-    * planted positives is [[TextOps.piiRedact]] / `q_pii_redact`; this one
-    * is the generic any-DataFrame engine op, `\b`-anchored so it can use
-    * Java-only word boundaries the cross-engine oracle dialect can't.) */
+  /** The email pattern of [[TextOps.piiRedact]] (`q_pii_redact`), kept in
+    * the RE2∩Java-regex dialect the DuckDB oracle shares. */
   val EmailRx = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-  val Ipv4Rx = "\\b(?:\\d{1,3}\\.){3}\\d{1,3}\\b"
-  val LongNumRx = "\\b\\d{7,}\\b"
-
-  def redactPii(df: DataFrame, textCol: String): DataFrame = {
-    val c = col(textCol)
-    // count matches on the SOURCE column: splitting the redacted text on
-    // the placeholder literals over-counts when the input already contains
-    // "<EMAIL>"/"<IP>"/"<NUM>" verbatim (ADVICE r2). The replace chain is
-    // sequential, so an IP inside an email or digits inside an IP are
-    // counted once by their outermost (first-applied) pattern — count each
-    // pattern on the previous stage's output, and build `redacted` from
-    // the SAME staged expressions so the two can never drift apart.
-    val afterEmail = regexp_replace(c, EmailRx, "<EMAIL>")
-    val afterIp = regexp_replace(afterEmail, Ipv4Rx, "<IP>")
-    val redacted = regexp_replace(afterIp, LongNumRx, "<NUM>")
-    val n = regexp_count(c, lit(EmailRx)) +
-      regexp_count(afterEmail, lit(Ipv4Rx)) +
-      regexp_count(afterIp, lit(LongNumRx))
-    df.withColumn("redacted", redacted)
-      .withColumn("n_redactions", n.cast("long"))
-  }
 
   // ---- Benchmark decontamination -----------------------------------------
 
@@ -341,21 +315,13 @@ object CorpusOps {
   def spanDedup(spark: SparkSession, dir: String, w: Int = 8): DataFrame =
     spanDedupOn(documents(spark, dir), w)
 
-  /** Token-sequence variant over the north-rule input shape: the token
-    * stream is rendered as a space-joined word stream and audited by the
-    * SAME hashed-window machinery — payload-agnostic, no de-tokenization
-    * (the [[tokenNearDupPairs]] pattern). */
-  def tokenSpanDedup(seqs: DataFrame, w: Int = 8): DataFrame =
-    spanDedupOn(seqs.select(col("doc_id"),
-      array_join(col("tokens"), " ").as("text")), w)
-
-  /** Span audit over any `(doc_id, text)` frame — shared by the documents
-    * path and the token-table path. The expensive subtree (explode every
-    * w-window of every document + md5) is evaluated ONCE: the shared flag
-    * is a window min≠max over the hash ("appears in ≥2 distinct docs",
-    * without countDistinct's distinct expansion and without a join back),
-    * so the whole audit is exactly two shuffles — by window hash, then by
-    * doc_id. */
+  /** Span audit over any `(doc_id, text)` frame (the documents path, or
+    * a token table rendered as a space-joined word stream). The expensive
+    * subtree (explode every w-window of every document + md5) is evaluated
+    * ONCE: the shared flag is a window min≠max over the hash ("appears in
+    * ≥2 distinct docs", without countDistinct's distinct expansion and
+    * without a join back), so the whole audit is exactly two shuffles — by
+    * window hash, then by doc_id. */
   def spanDedupOn(docs: DataFrame, w: Int = 8): DataFrame = {
     val sh = docs
       .select(col("doc_id"), explode(TextOps.shingleArr(col("text"), w)).as("s"))
@@ -407,50 +373,6 @@ object CorpusOps {
         (conv(substring(h, 17, 8), 16, 10).cast("long") % nShards).as("shard"))
       .withColumn("pos", row_number().over(win).cast("long"))
       .select("epoch", "shard", "doc_id", "pos")
-  }
-
-  /** Streaming-safe decontamination gate over token-sequence rows: flags
-    * rows sharing any k-token shingle with a STATIC benchmark shingle set.
-    * The set is eval-set-sized (thousands of shingles vs a trillion-token
-    * stream) and rides in the plan as a literal — one stateless per-row
-    * membership check, no join, no watermark, no state; the ingest-time
-    * sibling of the batch [[contamination]] audit. At eval sets too big
-    * for a plan literal, swap the literal for a bloom filter built in
-    * batch (`Column.mightContain`) — same stateless shape. */
-  def decontamGateTokens(seqs: DataFrame, benchShingles: Seq[String],
-                         k: Int = 3): DataFrame =
-    seqs.withColumn("contaminated",
-      // null tokens → no shingles → not flagged here (the quality gate
-      // already rejects degenerate rows; coalesce keeps the flag non-null)
-      coalesce(
-        arrays_overlap(
-          TextOps.shingleArr(array_join(col("tokens"), " "), k),
-          typedlit(benchShingles)).cast("long"),
-        lit(0L)))
-
-  /** Bloom-backed in-stream decontamination gate — the larger-eval-set
-    * variant of [[decontamGateTokens]]: when the benchmark shingle set is
-    * too big to ride the plan as an array literal, the gate probes a
-    * serialized bloom filter through one native short-circuiting array
-    * pass ([[graft.functions.BloomAnyElement]]). Still stateless and
-    * shuffle-free. The filter itself rides the plan as a byte constant —
-    * compact up to ~10⁶–10⁷ shingles (a 10⁷-item fpp-0.001 filter is
-    * ~18 MB); beyond that, build it from a DataFrame aggregate and ship it
-    * as a broadcast variable rather than a plan literal (torrent broadcast,
-    * no driver-held Seq). Semantics: a conservative SUPERSET of the exact
-    * gate —
-    * false positives flag ~fpp extra clean rows (the standard
-    * drop-slightly-more trade; CorpusOpsSpec pins superset + FP-rate
-    * bounds), never the reverse: a contaminated row cannot slip through. */
-  def decontamGateTokensBloom(seqs: DataFrame, benchShingles: Seq[String],
-                              k: Int = 3, fpp: Double = 0.001): DataFrame = {
-    val bloom = graft.functions.BloomProbe.build(benchShingles, fpp)
-    seqs.withColumn("contaminated",
-      coalesce(
-        graft.functions.BloomProbe.anyElement(
-          TextOps.shingleArr(array_join(col("tokens"), " "), k), bloom)
-          .cast("long"),
-        lit(0L)))
   }
 
   /** DSIR-style importance resampling (Xie et al., "Data Selection for
@@ -552,140 +474,6 @@ object CorpusOps {
     df.filter(bucket < steps)
   }
 
-  // ---- Token-table variants (north-rule input shape) ---------------------
-  // The streaming engine's input is the pre-tokenized sequence table
-  // (doc_id:string, tokens:array<int>, n_tok:int, source:string). The ops
-  // below run the same corpus-prep semantics directly on that shape, so a
-  // training pipeline never has to de-tokenize to prepare its data.
-
-  /** Exact dedup over token sequences: hash the rendered sequence with
-    * SHA-256 (a 64-bit hash is NOT collision-safe at 10^12 rows — expected
-    * birthday collisions would silently delete non-duplicates; 256 bits
-    * are, the same reasoning as [[TextOps.dedupExact]]), shuffle 32-byte
-    * digests, keep the smallest doc_id per identical sequence. */
-  def dedupExactTokens(seqs: DataFrame): DataFrame =
-    seqs.select(col("doc_id"),
-        sha2(concat_ws(",", col("tokens").cast("array<string>")), 256).as("h"))
-      .groupBy("h")
-      .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_copies"))
-      .select("keep_id", "n_copies")
-
-  /** Bucketed concat-and-chunk packing over the token table — identical
-    * layout contract to [[packSequences]], keyed by the string doc_id and
-    * using the table's own n_tok. PRECONDITION: doc_id is unique (packing
-    * runs after dedup in a real pipeline); duplicate ids make the window
-    * order, and therefore the layout, ill-defined. */
-  def packTokenSequences(seqs: DataFrame, capacity: Int = 2048,
-                         nBuckets: Int = 32): DataFrame = {
-    val win = Window.partitionBy("bucket").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    seqs.select(col("doc_id"),
-        pmod(xxhash64(col("doc_id")), lit(nBuckets)).as("bucket"),
-        col("n_tok").cast("long").as("n_tok"))
-      .withColumn("cum", sum("n_tok").over(win))
-      .select(col("doc_id"), col("bucket"), col("n_tok"),
-        (col("cum") - col("n_tok")).as("start_off"),
-        floor((col("cum") - col("n_tok")) / lit(capacity)).as("start_chunk"),
-        floor((col("cum") - 1) / lit(capacity)).as("end_chunk"))
-  }
-
-  /** Materialise the packed layout into actual fixed-capacity training
-    * chunks: each document's tokens are split across the chunks its
-    * [start_chunk, end_chunk] span covers (a GPT-style loader row). One
-    * flatMap emits (bucket, chunk, start_off, piece) fragments, then a
-    * groupBy(bucket, chunk) reassembles each chunk with an ORDERED
-    * collect (sort_array on the offset key — collect_list alone has no
-    * order guarantee) and flattens. Every chunk except each bucket's last
-    * is exactly `capacity` tokens (spec-asserted); fragments shuffle once,
-    * keyed by (bucket, chunk). Same unique-doc_id precondition as
-    * [[packTokenSequences]] — the layout join would multiply duplicates. */
-  def materializeChunks(seqs: DataFrame, capacity: Int = 2048,
-                        nBuckets: Int = 32): DataFrame = {
-    import seqs.sparkSession.implicits._
-    val layout = packTokenSequences(seqs, capacity, nBuckets)
-      .join(seqs.select("doc_id", "tokens"), Seq("doc_id"))
-      .select("bucket", "doc_id", "tokens", "start_off", "start_chunk", "end_chunk")
-      .as[(Long, String, Array[Int], Long, Long, Long)]
-    val fragments = layout.flatMap { case (bucket, _, toks, off, sc, ec) =>
-      (sc to ec).map { c =>
-        val fromGlobal = math.max(off, c * capacity)
-        val untilGlobal = math.min(off + toks.length, (c + 1) * capacity)
-        (bucket, c, fromGlobal,
-          toks.slice((fromGlobal - off).toInt, (untilGlobal - off).toInt))
-      }
-    }.toDF("bucket", "chunk", "frag_off", "piece")
-    fragments
-      .groupBy("bucket", "chunk")
-      .agg(flatten(transform(
-        sort_array(collect_list(struct(col("frag_off"), col("piece")))),
-        s => s.getField("piece"))).as("tokens"))
-      .withColumn("n_tok", size(col("tokens")).cast("long"))
-  }
-
-  /** Corpus token-frequency top-k (the unigram statistics a tokenizer/mix
-    * audit needs): explode + combine-heavy count, shuffle carries
-    * (token, count) pairs. */
-  def tokenHistogram(seqs: DataFrame, k: Int = 50): DataFrame =
-    seqs.select(explode(col("tokens")).as("token"))
-      .groupBy("token")
-      .agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("token"))
-      .limit(k)
-
-  /** Near-dup pairs over token sequences: the token stream is rendered as a
-    * space-joined word stream and fed through the SAME MinHash+LSH+verify
-    * path as text ([[TextOps.minhashLshPairs]] machinery) — payload-agnostic
-    * dedup, no de-tokenization. */
-  def tokenNearDupPairs(seqs: DataFrame, threshold: Double = 0.5,
-                        k: Int = 3): DataFrame =
-    TextOps.minhashLshPairsOn(
-      seqs.select(col("doc_id"),
-        TextOps.shingleArr(array_join(col("tokens"), " "), k).as("sh")),
-      threshold)
-
-  /** North-rule capstone over the pre-tokenized input table: the
-    * end-to-end corpus-prep pass a training pipeline runs on the streaming
-    * engine's landed token rows —
-    *
-    *   stateless quality gate → benchmark decontamination → exact content
-    *   dedup → near-dup survivor dedup (LSH + connected components, most
-    *   tokens survives) → bucketed fixed-capacity packing —
-    *
-    * all without de-tokenizing. Every stage is one of the operators above
-    * composed lazily; the only driver loop is component convergence. The
-    * wide edges are the dedup digest groupBy (32-byte keys), the LSH band
-    * joins, the (node, label) component rounds and the per-bucket packing
-    * window — sequences themselves move only into their final pack slot. */
-  def tokenTrainingMix(seqs: DataFrame, benchShingles: Seq[String] = Nil,
-                       capacity: Int = 256, nBuckets: Int = 32,
-                       threshold: Double = 0.5): DataFrame = {
-    val gated = qualityGateTokens(seqs).filter(col("gate_keep") === 1)
-      .drop("gate_score", "gate_keep")
-    val clean =
-      if (benchShingles.isEmpty) gated
-      else decontamGateTokens(gated, benchShingles)
-        .filter(col("contaminated") === 0).drop("contaminated")
-    // ONE definition of the content key: reuse the standalone op
-    val keepExact = dedupExactTokens(clean).select(col("keep_id").as("doc_id"))
-    // persisted for the duration: the eager component loop below plus the
-    // losers join and the pack input all read this subtree — without the
-    // persist the gate/decontam/digest pass re-executes per consumer. Like
-    // connectedComponents' own label cache, it stays registered in the
-    // returned plan (Spark evicts LRU; callers may unpersist after
-    // materializing).
-    val exact = clean.join(keepExact, Seq("doc_id"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val comp = connectedComponents(
-      tokenNearDupPairs(exact, threshold).select("id_a", "id_b"))
-    val survWin = Window.partitionBy("rep")
-      .orderBy(col("n_tok").desc, col("doc_id").asc)
-    val losers = comp.join(exact.select("doc_id", "n_tok"), Seq("doc_id"))
-      .withColumn("rn", row_number().over(survWin))
-      .filter(col("rn") > 1).select("doc_id")
-    packTokenSequences(exact.join(losers, Seq("doc_id"), "left_anti"),
-      capacity, nBuckets)
-  }
-
   // ---- Corpus-LM quality scoring -----------------------------------------
 
   /** Unigram log-probability score per document (the CCNet-style LM-quality
@@ -726,18 +514,8 @@ object CorpusOps {
     * the only broadcast. Documents themselves never shuffle — only
     * (doc_id, bigram) pairs. */
   def bigramLogProb(spark: SparkSession, dir: String,
-                    lambda: Double = 0.75): DataFrame =
-    bigramLogProbOn(documents(spark, dir), lambda)
-
-  /** Token-sequence variant over the north-rule input shape (the
-    * [[tokenNearDupPairs]] render trick): LM statistics directly on token
-    * ids, no de-tokenization. */
-  def tokenBigramLogProb(seqs: DataFrame, lambda: Double = 0.75): DataFrame =
-    bigramLogProbOn(seqs.select(col("doc_id"),
-      array_join(col("tokens"), " ").as("text")), lambda)
-
-  /** Interpolated bigram scoring over any `(doc_id, text)` frame. */
-  def bigramLogProbOn(docs: DataFrame, lambda: Double = 0.75): DataFrame = {
+                    lambda: Double = 0.75): DataFrame = {
+    val docs = documents(spark, dir)
     val uni = docs.select(explode(words(col("text"))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("cu"))
     val total = uni.agg(sum("cu").cast("double").as("total"))
@@ -756,17 +534,15 @@ object CorpusOps {
       .agg(count(lit(1)).as("n_bigrams"), round(avg(log(p)), 6).as("avg_logp"))
   }
 
-  /** The fixed linear head both quality filters share — ONE definition, so
-    * the stream gate ([[qualityGateTokens]]) and the batch scorer
-    * ([[qualityScore]]) can never drift apart. Frozen stand-ins for a
+  /** The fixed linear head of [[qualityScore]]: frozen stand-ins for a
     * trained classifier; the DuckDB oracle quotes the same values. */
   object QualityHead {
     val Intercept = 1.5
-    val StopW = 2.0    // stopword ratio (batch only — needs the stop list)
-    val WlenW = 0.3    // mean word length (batch only)
-    val DupW = 3.0     // duplicate-token ratio (negative contribution)
-    val TopW = 5.0     // top-token fraction (negative contribution)
-    val LogpW = 0.5    // unigram log-prob (batch only — corpus statistics)
+    val StopW = 2.0    // stopword ratio
+    val WlenW = 0.3    // mean word length
+    val DupW = 3.0     // duplicate-word ratio (negative contribution)
+    val TopW = 5.0     // top-word fraction (negative contribution)
+    val LogpW = 0.5    // unigram log-prob
     val LenW = 0.2     // log-length
   }
 
@@ -804,40 +580,6 @@ object CorpusOps {
       .select(col("doc_id"),
         round(lit(1.0) / (lit(1.0) + exp(-z)), 6).as("score"),
         (z >= 0).cast("long").as("keep"))
-  }
-
-  /** Streaming-safe quality gate over token-sequence rows (the north-rule
-    * input shape): the per-row features of [[qualityScore]] that need NO
-    * corpus statistics — duplicate-token ratio, top-token fraction,
-    * log-length — scored by the same fixed linear head. One narrow
-    * projection: stateless, shuffle-free, codegen — composable into a
-    * `readStream → gate → sink` pipeline as the ingest-time filter, while
-    * the corpus-statistics variant ([[qualityScore]]'s LM features) runs in
-    * batch over the landed lake. */
-  def qualityGateTokens(seqs: DataFrame): DataFrame = {
-    // one-pass native stats (array(n_valid, n_distinct, top_count)) — the
-    // higher-order-function equivalent is O(n²) AND interpreted per element
-    val st = graft.functions.Signatures.tokenStatsCol(col("tokens"))
-    // n counts NON-NULL slots (from the same one-pass stats expression) —
-    // size(tokens) would count null slots in the denominator and fabricate
-    // phantom duplicates for rows with missing token ids
-    val n = element_at(st, 1).cast("double")
-    val dupRatio = lit(1.0) - element_at(st, 2).cast("double") / n
-    val topFrac = element_at(st, 3).cast("double") / n
-    val z = lit(QualityHead.Intercept) -
-      lit(QualityHead.DupW) * dupRatio -
-      lit(QualityHead.TopW) * topFrac +
-      lit(QualityHead.LenW) * log(n)
-    // a NULL or EMPTY sequence nulls z (size(NULL) is NULL; 0/0 is NULL in
-    // non-ANSI mode); the most degenerate input must land in the reject
-    // class, not fall through both filter branches
-    val degenerate = n.isNull || n === 0
-    seqs
-      .withColumn("gate_score",
-        when(degenerate, lit(0.0))
-          .otherwise(round(lit(1.0) / (lit(1.0) + exp(-z)), 6)))
-      .withColumn("gate_keep",
-        when(degenerate, lit(0L)).otherwise((z >= 0).cast("long")))
   }
 
   // ---- Cross-modality composition ----------------------------------------
@@ -932,8 +674,8 @@ object CorpusOps {
         least(col("id_a"), col("id_b")).as("v"))
       .filter(col("u") =!= col("v")).distinct().localCheckpoint(true)
     var oldCount = edges.count()
-    // long ids only: non-integral id domains (e.g. string doc keys in the
-    // token-table path) keep the type-generic distributed loop
+    // long ids only: non-integral id domains (e.g. string doc keys) keep
+    // the type-generic distributed loop
     val integralIds = edges.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType)
     if (oldCount <= localEdgeLimit && integralIds) {
@@ -1314,23 +1056,14 @@ object CorpusOps {
     * (`percentile` sorts within the group — exact, and the same linear
     * interpolation DuckDB's `quantile_cont` uses, so the oracle recomputes
     * it bit-for-bit). Exact per-group sort state is fine for audit
-    * cardinalities (groups = sources); for per-key quantiles over billions
-    * of keys use [[qualityQuantilesApprox]]. */
+    * cardinalities (groups = sources); per-key quantiles over billions of
+    * keys would need a bounded sketch (`approx_percentile`) instead. */
   def qualityQuantiles(spark: SparkSession, dir: String): DataFrame =
     documents(spark, dir)
       .groupBy("source")
       .agg(round(expr("percentile(n_chars, 0.5)"), 6).as("p50"),
         round(expr("percentile(n_chars, 0.9)"), 6).as("p90"),
         max("n_chars").as("mx"))
-
-  /** The scale path: t-digest style bounded-memory sketch
-    * (`approx_percentile`) — mergeable partial state, O(1/accuracy) per
-    * group regardless of group size. */
-  def qualityQuantilesApprox(spark: SparkSession, dir: String,
-                             accuracy: Int = 10000): DataFrame =
-    documents(spark, dir)
-      .groupBy("source")
-      .agg(expr(s"approx_percentile(n_chars, array(0.5, 0.9), $accuracy)").as("pcts"))
 
   // ---- End-to-end training-mix builder -----------------------------------
 
@@ -1570,8 +1303,7 @@ object CorpusOps {
     * deviation) of n_chars per source, flagging docs beyond
     * `nMads × MAD` — the length filter that, unlike mean/stddev, a single
     * pathological document cannot drag. Exact grouped percentiles (sorted
-    * within group — audit cardinality; the t-digest path in
-    * [[qualityQuantilesApprox]] is the billions-of-keys variant), two
+    * within group — audit cardinality, as in [[qualityQuantiles]]), two
     * passes: median, then median of deviations, then a per-row filter.
     * Every shuffle is keyed on source. */
   def lengthOutliers(spark: SparkSession, dir: String,

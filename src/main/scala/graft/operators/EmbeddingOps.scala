@@ -452,12 +452,9 @@ object EmbeddingOps {
     (probes, probes.map(_._3).distinct)
   }
 
-  def buildIvfIndex(spark: SparkSession, dir: String, indexPath: String,
-                    nCells: Int = 16): Unit =
-    buildIvfIndexOn(spark, embeddings(spark, dir), indexPath, nCells)
-
-  /** Build over an explicit vector frame (the streaming tier trains on the
-    * history prefix, then [[appendToIvfIndex]] absorbs later batches).
+  /** Build a persisted IVF index over a vector frame (the streaming tier
+    * trains on the history prefix, then [[appendToIvfIndex]] absorbs later
+    * batches).
     * `overwrite` is STATIC partition overwrite — the whole vectors dir is
     * replaced, so a rebuild atomically clears every earlier append. */
   def buildIvfIndexOn(spark: SparkSession, vectors: DataFrame,

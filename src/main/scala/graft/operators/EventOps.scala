@@ -85,12 +85,6 @@ object EventOps {
     events(spark, dir).groupBy("event_type")
       .agg(count(lit(1)).as("n"), countDistinct("user_id").as("n_users"))
 
-  /** A4 approximate variant: HLL sketch for 10^12-scale cardinalities where
-    * exactness is not required (SURVEY.md §2.8 — `approx_count_distinct`). */
-  def approxDistinctUsers(spark: SparkSession, dir: String, rsd: Double = 0.02): DataFrame =
-    events(spark, dir).groupBy("event_type")
-      .agg(count(lit(1)).as("n"), approx_count_distinct(col("user_id"), rsd).as("n_users_approx"))
-
   /** A1: tumbling per-verb counts (1 hour). Uses the native `window()`
     * expression — identical alignment to the streaming job's windows. */
   def tumblingCounts(spark: SparkSession, dir: String): DataFrame =

@@ -16,7 +16,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   *
   * Execution shape is the one a 100 TB media pipeline needs: the payload
   * travels as an opaque binary column, the decode runs partition-batched
-  * ([[decodeMeta]] is a `mapPartitions`-style Dataset map — one JVM-local
+  * ([[mp4MetaQuery]] is a `mapPartitions`-style Dataset map — one JVM-local
   * pass, no shuffle, no UDF registry), and malformed payloads degrade to
   * `valid=false` rows instead of failing the task — at a trillion rows
   * there is ALWAYS a corrupt file, and a retry loop that dies on it costs
@@ -159,13 +159,6 @@ object MediaOps {
     } else invalid("unknown")
   }
 
-  /** Partition-batched decode over `(doc_id, payload)` — binary transport
-    * in, typed metadata out, one narrow pass. */
-  def decodeMeta(bin: Dataset[(Long, Array[Byte])]): DataFrame = {
-    import bin.sparkSession.implicits._
-    bin.mapPartitions(_.map { case (id, bytes) => sniff(id, bytes) }).toDF()
-  }
-
   // ---- MP4 / ISO-BMFF container metadata (box walk, codec-free) ----------
 
   final case class Mp4Meta(
@@ -283,13 +276,6 @@ object MediaOps {
       Mp4Meta(id, durTs * 1000L / timescale, timescale.toInt, nTracks,
         nSamples, w, h, n, valid = true)
     else invalid
-  }
-
-  /** Partition-batched MP4 metadata decode — same execution shape as
-    * [[decodeMeta]]. */
-  def decodeMp4Meta(bin: Dataset[(Long, Array[Byte])]): DataFrame = {
-    import bin.sparkSession.implicits._
-    bin.mapPartitions(_.map { case (id, bytes) => sniffMp4(id, bytes) }).toDF()
   }
 
   // ---- MP4 sample-byte extraction (stsz + stsc + stco/co64, codec-free) --
@@ -821,29 +807,6 @@ object MediaOps {
         y += 1
       }
       out
-    }
-
-  /** Per-channel mean over a 24-bpp BMP's pixels — the feature-extract
-    * stage (mean colour is the canonical cheap image feature), again pure
-    * byte math. Returns (meanB, meanG, meanR). */
-  def bmpChannelMeans(bytes: Array[Byte]): Option[(Double, Double, Double)] =
-    bmpGeometry(bytes).map { case (w, h, off, rowSize) =>
-      val ah = math.abs(h)
-      var sb = 0L; var sg = 0L; var sr = 0L
-      var y = 0
-      while (y < ah) {
-        var x = 0
-        val base = off + y * rowSize
-        while (x < w) {
-          sb += bytes(base + x * 3) & 0xFF
-          sg += bytes(base + x * 3 + 1) & 0xFF
-          sr += bytes(base + x * 3 + 2) & 0xFF
-          x += 1
-        }
-        y += 1
-      }
-      val n = w.toDouble * ah
-      (sb / n, sg / n, sr / n)
     }
 
   /** Distributed thumbnailing: binary in → resized binary + geometry out,

@@ -182,8 +182,7 @@ object TextOps {
     graft.functions.Signatures.bandKeysCol(minhashSig(sh), Bands, Rows)
 
   /** LSH band + verify over any `(doc_id, sh: array<string>)` frame — shared
-    * by the text path above and the token-table path
-    * ([[CorpusOps.tokenNearDupPairs]]). */
+    * by the text path above and [[CorpusOps.trainingMix]]. */
   def minhashLshPairsOn(docsWithShingles: DataFrame, threshold: Double): DataFrame = {
     // materialize (doc_id, sh) ONCE and the banded table ONCE: the band
     // self-join otherwise re-evaluates scan→shingle→minhash on BOTH sides
@@ -267,10 +266,6 @@ object TextOps {
       lit(0L), (acc, x) => pmod(acc * lit(mult) + x, lit(P31)))
     shiftleft(fold(31L), 31) + fold(37L)
   }
-
-  def fingerprint(spark: SparkSession, dir: String): DataFrame =
-    documents(spark, dir).select(col("doc_id"),
-      fingerprintCol(col("text")).as("fingerprint"))
 
   /** Fingerprint integrity summary — the oracle-checkable invariant:
     * identical texts map to ONE fingerprint (the function is pure) and
@@ -514,15 +509,14 @@ object TextOps {
 
   /** `q_pii_redact`: PII detection + redaction — the scrub every released
     * training corpus runs (emails, phone numbers, IPs → typed
-    * placeholders). The generic any-DataFrame engine op is
-    * [[CorpusOps.redactPii]]; this is the oracle-gated variant with
-    * per-type counts. Patterns stay in the RE2∩Java-regex common dialect
-    * (character classes, bounded repetition, non-capturing groups — no
-    * lookaround), so the DuckDB oracle applies the IDENTICAL patterns and
-    * the redacted text is md5-gated bit-for-bit. The synthetic corpus has
-    * no PII, so positives are PLANTED deterministically (email per doc +
-    * a second one on every 3rd, one phone, one IP — the closed form the
-    * oracle rebuilds), same pattern as the frame-dedup planted duplicates.
+    * placeholders), with per-type counts. Patterns stay in the
+    * RE2∩Java-regex common dialect (character classes, bounded repetition,
+    * non-capturing groups — no lookaround), so the DuckDB oracle applies
+    * the IDENTICAL patterns and the redacted text is md5-gated bit-for-bit.
+    * The synthetic corpus has no PII, so positives are PLANTED
+    * deterministically (email per doc + a second one on every 3rd, one
+    * phone, one IP — the closed form the oracle rebuilds), same pattern as
+    * the frame-dedup planted duplicates.
     *
     * Shape at scale: one narrow codegen projection per document — counts
     * via `regexp_extract_all` + size, redaction via chained

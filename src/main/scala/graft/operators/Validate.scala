@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.TokenCodec
@@ -15,14 +15,14 @@ import graft.model.Schemas
   * edx/server.py:60-62); the first model that parses wins; rows with no
   * match are UnknownEvent; invalid JSON is skipped and counted.
   *
-  * Spark design: selection is a Catalyst `InSet` dispatch (Catalyst's
-  * common-subexpression elimination + short-circuit codegen reproduce the
-  * reference's most-common-rule factoring, SURVEY.md §4); the per-model
-  * payload check is ONE native expression ([[graft.functions.EdxModelValid]]
-  * over the [[graft.functions.EdxModels]] registry — all 105 catalog
-  * families, exact) whose generated code is a single static call, so the
-  * whole validate stage stays inside whole-stage codegen. The stage is a
-  * pure projection: no shuffle, fully pushdown-friendly.
+  * Spark design: selection and the per-model payload check are ONE native
+  * expression, [[graft.functions.EdxRowValidate]] over the
+  * [[graft.functions.EdxModels]] registry (all 105 catalog families,
+  * exact): the selector is a lookup of `(event_source, event_type)` in that
+  * registry, inside the same Jackson parse. Its generated code is a single
+  * static call, so the whole validate stage stays inside whole-stage
+  * codegen. The stage is a pure projection: no shuffle, fully
+  * pushdown-friendly.
   */
 object Validate {
 
@@ -32,16 +32,6 @@ object Validate {
   val StatusInvalidJson = "invalid_json"
   val StatusUnknown = "unknown"
   val StatusInvalidModel = "invalid_model"
-
-  /** Selector: model name per row, null = no match (UnknownEvent).
-    * Keys mirror each family's `__selector__`
-    * (edx/navigational/statements.py:32, video/statements.py, enrollment,
-    * server.py:60-62). */
-  def selectModel(src: Column, typ: Column, ctxPath: Column): Column =
-    when(src === "server" && typ === ctxPath, lit("server"))
-      .when(src === "server" && typ.isin(ModelCatalog.serverTypes: _*), typ)
-      .when(src === "browser" && typ.isin(ModelCatalog.browserTypes: _*), typ)
-      .otherwise(lit(null))
 
   /** Full validation: input table (doc_id, tokens, n_tok, source) →
     * columns (doc_id, source, raw, event, model, ts, status).
@@ -75,9 +65,6 @@ object Validate {
 
   /** Valid rows only (ignore_errors=true path, validator.py:33-46). */
   def valid(input: DataFrame): DataFrame = apply(input).filter(col("status") === StatusOk)
-
-  /** Side output: rejected rows with their reason (error routing V3). */
-  def rejected(input: DataFrame): DataFrame = apply(input).filter(col("status") =!= StatusOk)
 
   /** Attach per-(micro)batch counters, reference validator's total/invalid
     * (validator.py:47) via `observe` — readable from QueryProgress. */

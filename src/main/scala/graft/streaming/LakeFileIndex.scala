@@ -10,7 +10,6 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
 
-import graft.operators.LayoutOps
 import graft.streaming.LakeSink.Committed
 
 /** The files of one [[LakeSink]] read, as the scan of a `HadoopFsRelation`
@@ -33,9 +32,7 @@ import graft.streaming.LakeSink.Committed
   *    `unix_micros(ts.cast("timestamp"))`, which is the column's value only
   *    for a `TimestampType` column, so no other type is range-pruned;
   *  - zone stats: the same intervals over integral columns, against the
-  *    entry's `stats` ([[Committed.mayContain]]), and inside a kept segment
-  *    against its `_zstats.json` file zone map (Z-ordered compaction folds
-  *    write one);
+  *    entry's `stats` ([[Committed.mayContain]]);
   *  - id bloom: `id_col = v` or `id_col IN (…)` keeps the segment only if
   *    its `_bloom/batch-N.bin` might contain a value, probed as
   *    `stat.bloomFilter` built it (`mightContainString` for a string
@@ -70,22 +67,7 @@ private[streaming] final case class LakeFileIndex(lake: String, entries: Seq[Com
       val box = e.stats.keys.flatMap(c => interval(c, LakeFileIndex.integral).map(c -> _)).toMap
       val inBloom = e.idCol.forall(c => filters.flatMap(LakeFileIndex.values(_, c))
         .forall(vs => LakeFileIndex.mightContainAny(LakeSink.bloomFile(lake, e.batch), vs)))
-      if (!(inRange && e.mayContain(box) && inBloom)) Seq.empty
-      else {
-        val zmap = LakeFileIndex.segmentDir(lake, e.batch).resolve("_zstats.json")
-        if (!Files.exists(zmap)) files
-        else {
-          val zm = LayoutOps.readZoneMap(zmap.getParent.toString)
-          val zbox = zm.cols.flatMap(c => interval(c, LakeFileIndex.integral)
-            .map { case (lo, hi) => c -> LayoutOps.ColRange(lo, hi) }).toMap
-          val listed = zm.files.map(_._1).toSet
-          val surviving = zm.surviving(zbox).toSet
-          files.filter { f =>
-            val n = f.getPath.getName
-            !listed.contains(n) || surviving.contains(n)
-          }
-        }
-      }
+      if (inRange && e.mayContain(box) && inBloom) files else Seq.empty
     }
     Seq(PartitionDirectory(InternalRow.empty, kept.map(FileStatusWithMetadata(_))))
   }

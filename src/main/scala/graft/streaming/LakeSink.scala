@@ -76,12 +76,11 @@ import org.apache.spark.util.sketch.BloomFilter
   * (no `InMemoryFileIndex` listing, no `DataSource` resolution), zero-row
   * segments left out. Per query, the index drops the segments the filters
   * cannot match by the entries' event-time range, zone stats and id
-  * bloom, and the files of a Z-ordered fold by its zone map; the scan
-  * still applies the exact predicate. The table schema comes from the
-  * manifest (the Iceberg table-metadata rule): when every entry read
-  * carries the SAME fingerprint, from one segment's parquet footer on the
-  * driver — no schema-inference Spark job — decoded once per fingerprint
-  * and instance. Otherwise (an entry without a
+  * bloom; the scan still applies the exact predicate. The table schema
+  * comes from the manifest (the Iceberg table-metadata rule): when every
+  * entry read carries the SAME fingerprint, from one segment's parquet
+  * footer on the driver — no schema-inference Spark job — decoded once per
+  * fingerprint and instance. Otherwise (an entry without a
   * fingerprint, a column added mid-stream, a footer without Spark row
   * metadata) it is inferred with `mergeSchema` over every segment.
   */
@@ -309,23 +308,9 @@ class LakeSink(val path: String) extends Serializable {
     * lineage, which keeps pointing at the ORIGINATING microbatch), so
     * `read()` before and after compaction returns identical rows —
     * asserted in StreamingSpec. Safe to run between microbatches of a live
-    * query (single-writer model: the caller owns the sink).
-    *
-    * `zorderCols` (exactly 2, integral, null-free — [[graft.operators
-    * .LayoutOps.zorderWrite]]'s contract) turns the fold into an OPTIMIZE
-    * ZORDER: compaction is the one moment the lake rewrites data anyway, so
-    * re-clustering it is free shuffle-wise (the fold's write becomes one
-    * range shuffle on the Morton key instead of a plain write). The fold
-    * dir then carries a FILE-level `_zstats.json` zone map — reads
-    * ([[LakeFileIndex]]) prune inside compacted folds at file granularity,
-    * recovering the segment-level pruning resolution that folding many
-    * small commits into one manifest entry would otherwise destroy.
-    * Fold-entry stats for the Z-columns come from the zone map's exact
-    * global bounds. */
+    * query (single-writer model: the caller owns the sink). */
   def compactInPlace(spark: SparkSession, idCol: Option[String] = None,
-                     maxFoldRows: Long = Long.MaxValue,
-                     zorderCols: Seq[String] = Seq.empty,
-                     zorderFiles: Int = 32): Unit = {
+                     maxFoldRows: Long = Long.MaxValue): Unit = {
     val entries = committed()
     // TIERED fold (size-tiered LSM shape): only segments under the
     // threshold are rewritten; a segment that has grown past `maxFoldRows`
@@ -346,14 +331,7 @@ class LakeSink(val path: String) extends Serializable {
     // the original dirs get deleted (unrecoverable)
     val data = readEntries(spark, foldable)
     val dir = s"$path/batch=$gen"
-    // emptiness from the manifest, not a Spark job: only an old-format
-    // entry (rows = -1, count unknown) forces the isEmpty scan
-    val hasRows = foldable.exists(_.rows > 0) ||
-      (foldable.exists(_.rows < 0) && !data.isEmpty)
-    val zoneMap =
-      if (zorderCols.nonEmpty && hasRows)
-        Some(graft.operators.LayoutOps.zorderWrite(data, zorderCols, dir, zorderFiles))
-      else { data.write.mode("overwrite").parquet(dir); None }
+    data.write.mode("overwrite").parquet(dir)
     val compacted = spark.read.schema(data.schema).parquet(dir)
     // entry rows are authoritative for current-format manifests; an
     // old-format entry (rows = -1) forces a recount so the compacted entry
@@ -388,16 +366,12 @@ class LakeSink(val path: String) extends Serializable {
     // if EVERY non-empty folded entry carried one (else the union would
     // silently under-cover the un-statted rows and pruning would drop data)
     val nonEmpty = foldable.filter(_.rows != 0)
-    val unionStats = nonEmpty.flatMap(_.stats.keys).distinct
+    val stats = nonEmpty.flatMap(_.stats.keys).distinct
       .filter(c => nonEmpty.forall(_.stats.contains(c)))
       .map { c =>
         val rs = nonEmpty.map(_.stats(c))
         c -> ((rs.map(_._1).min, rs.map(_._2).max))
       }.toMap
-    // Z-column entry stats from the zone map's EXACT bounds (tighter than —
-    // and available without — the every-entry-statted union rule)
-    val stats = unionStats ++ zoneMap.map(_.bounds.map { case (c, r) =>
-      c -> ((r.min, r.max)) }).getOrElse(Map.empty)
     // the fold's range covers one ts column only if every ranged entry
     // named the same one
     val tsCol = range.flatMap(_ => nonEmpty.map(_.tsCol).distinct match {
@@ -464,7 +438,7 @@ class LakeSink(val path: String) extends Serializable {
         val name = p.getFileName.toString
         if (name.startsWith("batch=") &&
             idOf(name.stripPrefix("batch=")).exists(!live.contains(_))) {
-          deleteRecursive(p); reclaimed += name
+          graft.operators.LayoutOps.deleteTree(p); reclaimed += name
         }
       }
     } finally dirs.close()
@@ -484,14 +458,6 @@ class LakeSink(val path: String) extends Serializable {
     }
     (expired ++ reclaimed).toSeq.sorted
   }
-
-  private def deleteRecursive(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(Files.delete)
-      finally s.close()
-    }
 
   /** Compaction-export: fold all committed micro-batch dirs into a
     * partitioned store table OUTSIDE the sink (small-file problem at 10^12
@@ -516,8 +482,11 @@ class LakeSink(val path: String) extends Serializable {
   def metrics(): Seq[String] = {
     val dir = Paths.get(path, "_metrics")
     if (!Files.exists(dir)) Seq.empty
-    else Files.list(dir).iterator().asScala.toSeq.sortBy(_.toString)
-      .map(p => Files.readString(p).trim)
+    else {
+      val s = Files.list(dir)
+      try s.iterator().asScala.toSeq.sortBy(_.toString).map(p => Files.readString(p).trim)
+      finally s.close()
+    }
   }
 
   /** Atomic manifest append: copy-on-write + rename. Single-writer (one

@@ -29,9 +29,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * functions of `raw`).
   *
   * The session payload (count, bounds, verb histogram) is the custom state
-  * the reference never had (its only aggregates were counters); the plain
-  * count/bounds variant is also expressible with the built-in
-  * `session_window` — kept in [[StreamPipeline.sessionWindowCounts]].
+  * the reference never had (its only aggregates were counters).
   */
 object Sessionize {
 

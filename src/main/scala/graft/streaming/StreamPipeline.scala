@@ -59,17 +59,6 @@ object StreamPipeline {
   def deduped(statements: DataFrame): DataFrame =
     statements.dropDuplicatesWithinWatermark(Seq("id"))
 
-  /** Training-stream content dedup: drops rows whose PAYLOAD is
-    * byte-identical within the watermark, regardless of id — the streaming
-    * analogue of the corpus exact-dedup pass (re-sent events with fresh ids,
-    * mirrored sources). State is keyed by the 32-byte sha-256 digest, never
-    * the document, so RocksDB holds digests bounded by the watermark
-    * window. */
-  def dedupedByContent(statements: DataFrame, payloadCol: String = "xapi"): DataFrame =
-    statements.withColumn("_content_h", sha2(col(payloadCol), 256))
-      .dropDuplicatesWithinWatermark(Seq("_content_h"))
-      .drop("_content_h")
-
   /** A1/A2 counts. `saltBuckets > 1` shards hot (verb, source) keys into
     * salted sub-keys; merge with [[mergeSalted]] — two-stage aggregation
     * keeps any single state key's update rate bounded at 10^12 scale. */
@@ -94,16 +83,6 @@ object StreamPipeline {
                     slide: String = "1 minute"): DataFrame =
     statements.groupBy(window(col("ts"), width, slide), col("verb_id"), col("source"))
       .agg(count(lit(1)).as("n"))
-
-  /** Built-in session windows (plain payload) — the codegen'd sibling of
-    * [[Sessionize]]'s custom-state path. */
-  def sessionWindowCounts(statements: DataFrame, gap: String = "30 minutes"): DataFrame =
-    statements
-      .groupBy(session_window(col("ts"), gap), col("actor_key"), col("source"))
-      .agg(count(lit(1)).as("n_events"), countDistinct("verb_id").as("n_verbs"))
-      .select(col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("actor_key"), col("source"), col("n_events"), col("n_verbs"))
 
   /** Custom-state sessionization ([[Sessionize]]), one stateful operator
     * keyed by actor_key.

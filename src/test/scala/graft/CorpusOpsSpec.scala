@@ -32,22 +32,6 @@ class CorpusOpsSpec extends SparkSuite {
     }
   }
 
-  test("pii redaction replaces emails, ipv4 and long digit runs, and counts them") {
-    val df = Seq(
-      (1L, "contact bob.smith+x@example.org or 10.1.2.3 now"),
-      (2L, "call 5551234567 twice: 5551234567"),
-      (3L, "clean text, nothing to redact"),
-      (4L, "a@b.io b@c.io 1.2.3.4 12345678")
-    ).toDF("id", "body")
-    val out = CorpusOps.redactPii(df, "body")
-      .select("id", "redacted", "n_redactions")
-      .as[(Long, String, Long)].collect().sortBy(_._1)
-    assert(out(0)._2 === "contact <EMAIL> or <IP> now" && out(0)._3 === 2)
-    assert(out(1)._2 === "call <NUM> twice: <NUM>" && out(1)._3 === 2)
-    assert(out(2)._2 === "clean text, nothing to redact" && out(2)._3 === 0)
-    assert(out(3)._2 === "<EMAIL> <EMAIL> <IP> <NUM>" && out(3)._3 === 4)
-  }
-
   test("pseudonymization is stable per user and never exposes the raw id") {
     val out = CorpusOps.pseudonymize(spark, dir)
     val withRaw = spark.read.parquet(s"$dir/events.parquet")
@@ -84,37 +68,6 @@ class CorpusOpsSpec extends SparkSuite {
     val flagged = CorpusOps.contamination(spark, dir)
       .select("doc_id").as[Long].collect().toSet
     assert(dupIds.subsetOf(flagged))
-  }
-
-  test("bloom decontamination gate: superset of the exact gate, tiny FP rate, native plan") {
-    // the large-eval-set variant: an eval set too big for a plan literal
-    // rides as a serialized bloom. Conservative by construction — every
-    // exactly-contaminated row flagged, clean rows flagged at ~fpp.
-    // word tokens + 4-gram shingles — the q_decontam shape, where only the
-    // planted duplicates of bench docs overlap (so most rows are CLEAN and
-    // the FP rate is actually measurable; codepoint-level tokens would
-    // contaminate every row and make the test vacuous)
-    val docs = graft.operators.TextOps.documents(spark, dir).limit(400)
-    val seqs = docs.select(col("doc_id").cast("string").as("doc_id"),
-      split(col("text"), " ").as("tokens"))
-    val bench = docs.filter(col("doc_id") % 50 === 0)
-      .select(explode(graft.operators.TextOps.shingleArr(col("text"), 4)).as("s"))
-      .distinct().as[String].collect().toSeq
-    val exact = CorpusOps.decontamGateTokens(seqs, bench, k = 4)
-      .filter(col("contaminated") === 1).select("doc_id").as[String].collect().toSet
-    val bloomed = CorpusOps.decontamGateTokensBloom(seqs, bench, k = 4, fpp = 1e-5)
-      .filter(col("contaminated") === 1).select("doc_id").as[String].collect().toSet
-    assert(exact.subsetOf(bloomed), "bloom gate must never miss a contaminated row")
-    assert(exact.size < 200, "most rows must be clean or the FP test is vacuous")
-    assert(exact.nonEmpty, "planted bench duplicates must be flagged")
-    val fps = bloomed.size - exact.size
-    info(s"bloom gate: ${exact.size} exact + $fps false positives of 400 rows")
-    assert(fps <= 5, s"$fps false positives exceeds the fpp budget")
-    // native short-circuit array probe, not an interpreted exists() lambda
-    val plan = CorpusOps.decontamGateTokensBloom(seqs, bench, k = 4)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("bloom_any_element"), plan)
-    assert(!plan.contains("ScalaUDF") && !plan.toLowerCase.contains("lambdafunction"), plan)
   }
 
   test("importance resampling: deterministic A-Res draw, target-like docs upweighted") {
@@ -209,139 +162,6 @@ class CorpusOpsSpec extends SparkSuite {
       case _ =>
     }
     assert(out.forall(r => r._3 <= r._2)) // doc freq <= term freq
-  }
-
-  test("token-table exact dedup collapses identical sequences to min doc_id") {
-    val seqs = Seq(
-      ("d1", Array(1, 2, 3)), ("d2", Array(1, 2, 3)), // dup pair
-      ("d3", Array(1, 2, 4)), ("d4", Array(9))
-    ).toDF("doc_id", "tokens")
-    val out = CorpusOps.dedupExactTokens(seqs)
-      .as[(String, Long)].collect().toMap
-    assert(out === Map("d1" -> 2L, "d3" -> 1L, "d4" -> 1L))
-  }
-
-  test("token-table packing over the synthetic north-rule input is gap-free") {
-    val seqs = graft.sources.Synth.inputTable(spark, 500).dropDuplicates("doc_id")
-    val rows = CorpusOps.packTokenSequences(seqs, capacity = 2048)
-      .select("bucket", "doc_id", "n_tok", "start_off", "start_chunk", "end_chunk")
-      .as[(Long, String, Long, Long, Long, Long)].collect()
-    assert(rows.length.toLong === seqs.count())
-    rows.groupBy(_._1).foreach { case (_, docs) =>
-      val sorted = docs.sortBy(_._2)
-      sorted.sliding(2).foreach {
-        case Array(a, b) => assert(b._4 === a._4 + a._3)
-        case _ =>
-      }
-      sorted.foreach { case (_, _, n, off, sc, ec) =>
-        assert(sc === off / 2048 && ec === (off + n - 1) / 2048)
-      }
-    }
-    // total packed tokens equals the table's own n_tok sum
-    assert(rows.map(_._3).sum ===
-      seqs.agg(sum("n_tok")).as[Long].head())
-  }
-
-  test("materialized chunks: exact capacity except per-bucket tails, nothing lost, order kept") {
-    // packing runs AFTER dedup in a pipeline — the synthetic input plants
-    // duplicate doc_ids on purpose, so dedupe first (the op's precondition)
-    val seqs = graft.sources.Synth.inputTable(spark, 300).dropDuplicates("doc_id")
-    val cap = 512
-    val chunks = CorpusOps.materializeChunks(seqs, capacity = cap)
-      .select("bucket", "chunk", "tokens")
-      .as[(Long, Long, Array[Int])].collect()
-    // conservation: every token lands in exactly one chunk slot
-    val totalIn = seqs.agg(sum("n_tok")).as[Long].head()
-    assert(chunks.map(_._3.length.toLong).sum === totalIn)
-    // every chunk but each bucket's last is exactly `cap` tokens
-    chunks.groupBy(_._1).foreach { case (_, cs) =>
-      val sorted = cs.sortBy(_._2)
-      sorted.dropRight(1).foreach { case (b, c, toks) =>
-        assert(toks.length === cap, s"bucket $b chunk $c not full")
-      }
-      assert(sorted.last._3.length <= cap)
-      // chunk ids are contiguous from 0
-      assert(sorted.map(_._2).toSeq === (0L until sorted.length.toLong))
-    }
-    // order preserved: re-concatenating a bucket's chunks equals the
-    // bucket's docs concatenated in doc_id order
-    val byBucket = seqs
-      .select(col("doc_id"), pmod(xxhash64(col("doc_id")), lit(32)).as("bucket"),
-        col("tokens"))
-      .as[(String, Long, Array[Int])].collect()
-      .groupBy(_._2).map { case (b, rows) =>
-        b -> rows.sortBy(_._1).flatMap(_._3).toSeq
-      }
-    chunks.groupBy(_._1).foreach { case (b, cs) =>
-      val stream = cs.sortBy(_._2).flatMap(_._3).toSeq
-      assert(stream === byBucket(b), s"bucket $b stream mismatch")
-    }
-  }
-
-  test("token histogram mass equals total token count; ranks are ordered") {
-    val seqs = graft.sources.Synth.inputTable(spark, 200)
-    val hist = CorpusOps.tokenHistogram(seqs, k = 50).as[(Int, Long)].collect()
-    assert(hist.length === 50)
-    hist.sliding(2).foreach {
-      case Array(a, b) => assert(a._2 > b._2 || (a._2 === b._2 && a._1 < b._1))
-      case _ =>
-    }
-    val total = seqs.select(explode(col("tokens"))).count()
-    assert(hist.map(_._2).sum <= total)
-  }
-
-  test("token-table near-dup finds planted shared-prefix sequences") {
-    val base = (0 until 40).toArray
-    val seqs = Seq(
-      ("a", base), ("b", base.dropRight(1) :+ 999), // near-dup of a
-      ("c", (100 until 140).toArray)                // unrelated
-    ).toDF("doc_id", "tokens")
-    val pairs = CorpusOps.tokenNearDupPairs(seqs, threshold = 0.5)
-      .select("id_a", "id_b").as[(String, String)].collect().toSet
-    assert(pairs === Set(("a", "b")))
-  }
-
-  test("token-table span dedup flags the planted shared run, not the unrelated one") {
-    // a and b share a 30-token run; c is disjoint — with 8-token windows
-    // every window of the shared run appears in both docs
-    val shared = (0 until 30).toArray
-    val seqs = Seq(
-      ("a", shared ++ Array(500, 501, 502)),
-      ("b", Array(600, 601) ++ shared),
-      ("c", (100 until 140).toArray)
-    ).toDF("doc_id", "tokens")
-    val rows = CorpusOps.tokenSpanDedup(seqs)
-      .select("doc_id", "n_windows", "n_shared")
-      .as[(String, Long, Long)].collect().map(r => r._1 -> r).toMap
-    assert(rows("a")._3 === 23L) // 30-token run → 23 shared 8-windows
-    assert(rows("b")._3 === 23L)
-    assert(rows("c")._3 === 0L)
-    assert(rows("a")._2 === 26L && rows("b")._2 === 25L && rows("c")._2 === 33L)
-  }
-
-  test("token training mix: gate, decontam, exact+near dedup and packing compose") {
-    val shared = (0 until 40).toArray
-    val bench = (500 until 510).map(_.toString).sliding(3).map(_.mkString(" ")).toSeq
-    val seqs = Seq(
-      ("a", shared),                       // near-dup pair with b; tie → a survives
-      ("b", shared.dropRight(1) :+ 999),
-      ("c", (100 until 140).toArray),      // unique, kept
-      ("d", (100 until 140).toArray),      // exact dup of c → dropped
-      ("e", Array.fill(64)(7)),            // degenerate → quality-gated out
-      ("f", (498 until 520).toArray)       // overlaps the eval run → decontaminated
-    ).toDF("doc_id", "tokens")
-      .withColumn("n_tok", size(col("tokens")))
-      .withColumn("source", lit("s1"))
-    val out = CorpusOps.tokenTrainingMix(seqs, bench)
-      .select("doc_id", "bucket", "n_tok", "start_off")
-      .as[(String, Long, Long, Long)].collect()
-    assert(out.map(_._1).toSet === Set("a", "c"))
-    // layout stays gap-free within every bucket after all the filtering
-    out.groupBy(_._2).foreach { case (_, docs) =>
-      docs.sortBy(_._4).foldLeft(0L) { case (expected, (_, _, n, off)) =>
-        assert(off === expected); off + n
-      }
-    }
   }
 
   test("semantic dedup is the cosine-confirmed subset of the lexical pairs") {
@@ -591,48 +411,6 @@ class CorpusOpsSpec extends SparkSuite {
       "the fixed weights should split the corpus into both classes")
   }
 
-  test("token-table bigram LM equals the text-path score on the rendered stream") {
-    val seqs = Seq(
-      ("a", Array(1, 2, 1, 2, 3)),
-      ("b", Array(1, 2, 9)),
-      ("c", Array(7)) // single token: no bigrams, absent from output
-    ).toDF("doc_id", "tokens")
-    val got = CorpusOps.tokenBigramLogProb(seqs)
-      .select("doc_id", "n_bigrams", "avg_logp")
-      .as[(String, Long, Double)].collect().map(r => r._1 -> r).toMap
-    val text = CorpusOps.bigramLogProbOn(
-      seqs.select(col("doc_id"), array_join(col("tokens"), " ").as("text")))
-      .select("doc_id", "n_bigrams", "avg_logp")
-      .as[(String, Long, Double)].collect().map(r => r._1 -> r).toMap
-    assert(got === text)
-    assert(!got.contains("c") && got("a")._2 === 4L && got("b")._2 === 2L)
-    // shared frequent bigram (1 2) must score doc a above the rarer-path b
-    assert(got("a")._3 > got("b")._3)
-  }
-
-  test("token quality gate: degenerate sequences rejected, diverse kept, score exact") {
-    val seqs = Seq(
-      ("deg", Array.fill(64)(7)),               // one token repeated: top_frac 1
-      ("div", (0 until 64).toArray),            // all distinct
-      ("mix", (0 until 32).toArray ++ Array.fill(32)(5))
-    ).toDF("doc_id", "tokens")
-    val rows = CorpusOps.qualityGateTokens(seqs)
-      .select("doc_id", "gate_score", "gate_keep")
-      .as[(String, Double, Long)].collect().map(r => r._1 -> r).toMap
-    assert(rows("deg")._3 === 0L && rows("div")._3 === 1L)
-    // empty sequence: rejected with concrete 0s, never a NULL fall-through
-    val empty = CorpusOps.qualityGateTokens(
-      Seq(("e", Array.empty[Int])).toDF("doc_id", "tokens"))
-      .select("gate_score", "gate_keep").as[(Double, Long)].collect()
-    assert(empty.toSeq === Seq((0.0, 0L)))
-    // brute-force z for the diverse row: dup 0, top 1/64, n 64
-    val zDiv = 1.5 - 3.0 * 0.0 - 5.0 * (1.0 / 64) + 0.2 * math.log(64.0)
-    assert(math.abs(rows("div")._2 - 1.0 / (1.0 + math.exp(-zDiv))) < 2e-6)
-    // mix: 32 distinct of 64 (5 ∈ 0..31), top count 33 (token 5: 1 + 32)
-    val zMix = 1.5 - 3.0 * (1.0 - 32.0 / 64) - 5.0 * (33.0 / 64) + 0.2 * math.log(64.0)
-    assert((rows("mix")._3 == 1L) === (zMix >= 0))
-  }
-
   test("temperature mix flattens toward uniform: weights sum to 1, extremes compressed") {
     val rows = CorpusOps.temperatureMix(spark, dir, alpha = 0.5)
       .select("source", "nat_share", "temp_weight")
@@ -645,18 +423,6 @@ class CorpusOpsSpec extends SparkSuite {
     val byNat = rows.sortBy(_._2)
     assert(byNat.last._3 < byNat.last._2, "dominant source must shrink")
     assert(byNat.head._3 > byNat.head._2, "smallest source must grow")
-  }
-
-  test("approx quantile sketch tracks the exact per-source percentiles") {
-    val exact = CorpusOps.qualityQuantiles(spark, dir)
-      .select("source", "p50").as[(String, Double)].collect().toMap
-    val approx = CorpusOps.qualityQuantilesApprox(spark, dir)
-      .select(col("source"), col("pcts")(0).cast("double"))
-      .as[(String, Double)].collect().toMap
-    exact.foreach { case (src, p50) =>
-      assert(math.abs(approx(src) - p50) <= p50 * 0.05 + 5,
-        s"sketch far from exact for $src")
-    }
   }
 
   test("repetition signals: planted degenerate doc scores high, diverse doc low") {

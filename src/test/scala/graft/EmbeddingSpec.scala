@@ -122,8 +122,8 @@ class EmbeddingSpec extends SparkSuite {
   }
 
   test("persisted IVF index: full-probe equals brute force; probe scan is partition-pruned") {
-    val idx = java.nio.file.Files.createTempDirectory("ivfidx").toString
-    EmbeddingOps.buildIvfIndex(spark, dir, idx, nCells = 16)
+    val idx = tempDir("ivfidx")
+    EmbeddingOps.buildIvfIndexOn(spark, EmbeddingOps.embeddings(spark, dir), idx, nCells = 16)
     // codebook round-trips
     assert(EmbeddingOps.loadCodebook(spark, idx).length === 16)
     val queries = EmbeddingOps.embeddings(spark, dir)
@@ -146,7 +146,7 @@ class EmbeddingSpec extends SparkSuite {
 
   test("incremental IVF append: frozen centroids absorb batches, full-probe stays exact") {
     import org.apache.spark.sql.functions.col
-    val idx = java.nio.file.Files.createTempDirectory("ivfinc").toString
+    val idx = tempDir("ivfinc")
     val emb = EmbeddingOps.embeddings(spark, dir)
     EmbeddingOps.buildIvfIndexOn(spark, emb.filter(col("vec_id") % 3 === 0),
       idx, nCells = 16)
@@ -188,7 +188,7 @@ class EmbeddingSpec extends SparkSuite {
 
   test("IVF-PQ index: exact at full probe/re-rank; narrow probes partition-pruned with recall floor") {
     import org.apache.spark.sql.functions._
-    val idx = java.nio.file.Files.createTempDirectory("ivfpq").toString
+    val idx = tempDir("ivfpq")
     EmbeddingOps.buildIvfPqIndex(spark, dir, idx, nCells = 16, m = 8, kCodes = 64)
     val queries = EmbeddingOps.embeddings(spark, dir)
       .filter(col("vec_id") < 10)
@@ -319,7 +319,7 @@ class EmbeddingSpec extends SparkSuite {
 
   test("SQ8 binary index: 4x smaller codes, compressed scan + re-rank equals brute force") {
     for (d <- Seq(sf("sf0.001"), sf("sf0.01"), sf("sf0.1"))) {
-      val idx = java.nio.file.Files.createTempDirectory("sq8").toString
+      val idx = tempDir("sq8")
       EmbeddingOps.buildSq8Index(spark, d, idx)
       val stored = spark.read.parquet(idx)
       val dim = EmbeddingOps.embeddings(spark, d)

@@ -15,7 +15,7 @@ class FacadeSpec extends SparkSuite {
 
   test("read | extract gelf | validate | convert | write round-trips") {
     val g = Graft(spark)
-    val dir = Files.createTempDirectory("cli").toString
+    val dir = tempDir("cli")
     // GELF log lines wrapping edX events (parsers.py:28-61 shape)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val gelfLines = (0L until 60L).map { i =>
@@ -49,11 +49,11 @@ class FacadeSpec extends SparkSuite {
 
   test("readLdp reads a gz archive once") {
     val g = Graft(spark)
-    val dir = Files.createTempDirectory("graft-fldp").toString
+    val dir = tempDir("graft-fldp")
     val out = new java.util.zip.GZIPOutputStream(
       new java.io.FileOutputStream(s"$dir/archive-1.gz"))
     out.write("{\"id\": 1}\n{\"id\": 2}".getBytes("UTF-8")); out.close()
-    val hist = Files.createTempDirectory("graft-fldph").toString + "/history"
+    val hist = tempDir("graft-fldph") + "/history"
     assert(g.readLdp(dir, hist).as[String].collect().toSet ===
       Set("""{"id": 1}""", """{"id": 2}"""))
     assert(g.readLdp(dir, hist).count() === 0)
@@ -61,7 +61,7 @@ class FacadeSpec extends SparkSuite {
 
   test("zorderWrite | readPruned facade round-trip") {
     val g = Graft(spark)
-    val dir = Files.createTempDirectory("graft-fzo").toString
+    val dir = tempDir("graft-fzo")
     try {
       val df = (0L until 2000L).map(i => (i, i % 97L, (i * 31L) % 1009L))
         .toDF("id", "a", "b")

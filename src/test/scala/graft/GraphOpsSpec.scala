@@ -47,7 +47,7 @@ class GraphOpsSpec extends SparkSuite {
   test("pageRankQuery: empty documents table → empty result, not an NPE") {
     // the contiguity require reads min/max from a 1-row agg — on zero rows
     // those are null, so the guard must short-circuit before getLong
-    val dir = java.nio.file.Files.createTempDirectory("graft-prq").toString
+    val dir = tempDir("graft-prq")
     spark.range(0).select(col("id").as("doc_id"), col("id").cast("string").as("text"))
       .write.parquet(s"$dir/documents.parquet")
     val out = GraphOps.pageRankQuery(spark, dir)

@@ -16,7 +16,7 @@ class LakeStatsSpec extends SparkSuite with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def freshLake(): (String, LakeSink) = {
-    val dir = Files.createTempDirectory("graft-lakestats").toString
+    val dir = tempDir("graft-lakestats")
     (dir, new LakeSink(dir))
   }
 
@@ -160,7 +160,7 @@ class LakeStatsSpec extends SparkSuite with AdaptiveSparkPlanHelper {
       val q = mem.toDF().toDF("event_id", "user_id").writeStream
         .outputMode("append")
         .option("checkpointLocation",
-          Files.createTempDirectory("graft-lscp").toString)
+          tempDir("graft-lscp"))
         .trigger(Trigger.ProcessingTime(0))
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
           sink.addBatchStats(id, b, Seq("user_id"), tsCol = "none"); ()
@@ -178,88 +178,6 @@ class LakeStatsSpec extends SparkSuite with AdaptiveSparkPlanHelper {
       assert(segments(pruned).size === 1)
       val got = pruned.select("event_id").as[Long].collect().sorted
       assert(got === (50L until 100L).toArray)
-    } finally graft.operators.LayoutOps.deleteTree(Paths.get(dir))
-  }
-
-  test("OPTIMIZE ZORDER fold: file-level zone map inside the compacted segment") {
-    val (dir, sink) = freshLake()
-    try {
-      // 4 commits, each spanning the FULL user range (so segment-level
-      // stats alone cannot prune a narrow box at all)
-      (0 until 4).foreach { i =>
-        sink.addBatchStats(i.toLong,
-          batch(i * 100 until (i + 1) * 100, 0L, 100000L), Seq("user_id")) }
-      val box = col("user_id").between(40000L, 41000L)
-      assert(segments(sink.read(spark).filter(box)) === Set(0L, 1L, 2L, 3L))
-      sink.compactInPlace(spark, zorderCols = Seq("user_id", "event_id"),
-        zorderFiles = 8)
-      val fold = sink.committed()
-      assert(fold.size === 1 && fold.head.batch < 0)
-      // fold-entry stats for the Z-columns are the zone map's exact bounds
-      assert(fold.head.stats.contains("user_id") &&
-        fold.head.stats.contains("event_id"))
-      val zm = graft.operators.LayoutOps.readZoneMap(s"$dir/batch=${fold.head.batch}")
-      assert(zm.files.map(_._2).sum === 400L)
-      // a narrow box keeps strictly fewer FILES than the fold holds —
-      // the resolution folding destroyed at segment level is back
-      val zbox = Map("user_id" -> graft.operators.LayoutOps.ColRange(40000L, 41000L))
-      val kept = zm.surviving(zbox)
-      assert(kept.size < zm.filesTotal)
-      assert(scanned(sink.read(spark).filter(box)) ===
-        kept.map(f => s"batch=${fold.head.batch}/$f").sorted)
-      // and the pruned read loses nothing vs the full read
-      assert(exact(sink.read(spark), box) === exact(mergeRead(dir, Seq(fold.head.batch)), box))
-      // wide box: everything still readable through the zone-mapped fold
-      assert(sink.read(spark).filter(col("user_id").between(0L, 100000L)).count() === 400L)
-    } finally graft.operators.LayoutOps.deleteTree(Paths.get(dir))
-  }
-
-  test("relocated lake: zone-mapped fold resolves files against the NEW dir") {
-    val (dir, sink) = freshLake()
-    val moved = Files.createTempDirectory("graft-lakemoved").toString
-    try {
-      (0 until 3).foreach { i =>
-        sink.addBatchStats(i.toLong,
-          batch(i * 100 until (i + 1) * 100, 0L, 100000L), Seq("user_id")) }
-      sink.compactInPlace(spark, zorderCols = Seq("user_id", "event_id"),
-        zorderFiles = 4)
-      // MOVE the whole lake (zone maps must store segment-relative names,
-      // not write-time absolute URIs, for this to read the moved files)
-      graft.operators.LayoutOps.deleteTree(Paths.get(moved))
-      Files.move(Paths.get(dir), Paths.get(moved))
-      val sink2 = new LakeSink(moved)
-      val box = col("user_id").between(40000L, 41000L)
-      val pruned = sink2.read(spark).filter(box)
-      val fold = sink2.committed().head.batch
-      assert(pruned.inputFiles.forall(_.contains(moved)))
-      assert(scanned(pruned).size < graft.operators.LayoutOps.readZoneMap(s"$moved/batch=$fold").filesTotal)
-      assert(pruned.count() === mergeRead(moved, Seq(fold)).filter(box).count())
-      assert(sink2.read(spark).filter(col("user_id").between(0L, 100000L)).count() === 300L)
-    } finally {
-      graft.operators.LayoutOps.deleteTree(Paths.get(dir))
-      graft.operators.LayoutOps.deleteTree(Paths.get(moved))
-    }
-  }
-
-  test("zordered fold coexists with a graduated (plain) segment in one pruned read") {
-    val (dir, sink) = freshLake()
-    try {
-      sink.addBatchStats(0L, batch(0 until 50, 0L, 1000L), Seq("user_id"))
-      sink.addBatchStats(1L, batch(50 until 100, 0L, 1000L), Seq("user_id"))
-      // big segment graduates (never folded); the two small ones z-fold
-      sink.addBatchStats(2L, batch(100 until 400, 50000L, 51000L), Seq("user_id"))
-      sink.compactInPlace(spark, maxFoldRows = 200L,
-        zorderCols = Seq("user_id", "event_id"), zorderFiles = 4)
-      val es = sink.committed()
-      assert(es.size === 2) // graduated + fold
-      val all = sink.read(spark).filter(col("user_id").between(0L, 100000L))
-      assert(all.count() === 400L)
-      assert(segments(all) === es.map(_.batch).toSet)
-      // box hitting only the graduated segment: the fold's files all prune
-      val box = col("user_id").between(50000L, 51000L)
-      val g = sink.read(spark).filter(box)
-      assert(segments(g) === Set(2L))
-      assert(g.count() === mergeRead(dir, es.map(_.batch)).filter(box).count())
     } finally graft.operators.LayoutOps.deleteTree(Paths.get(dir))
   }
 

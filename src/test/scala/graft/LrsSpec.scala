@@ -186,7 +186,7 @@ class LrsSpec extends SparkSuite
       withCa(id(9), """{"objectType": "SubStatement", "actor": {"mbox": "mailto:s@x"}, "verb": {"id": "v://x"}, "object": {"objectType": "Agent", "mbox": "mailto:t@x"}}""",
         """{"parent": [], "grouping": [null]}"""))
     val rows = Store.project(stmts.toDF("xapi").withColumn("source", lit("t")), "xapi")
-    val lake = java.nio.file.Files.createTempDirectory("graft-lrs-related").toString
+    val lake = tempDir("graft-lrs-related")
     try {
       val sink = new graft.streaming.LakeSink(lake)
       sink.addBatch(0L, rows)

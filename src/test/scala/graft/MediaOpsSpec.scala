@@ -56,8 +56,9 @@ class MediaOpsSpec extends SparkSuite {
       5L -> "not a media file at all".getBytes,
       6L -> Array[Byte](0x42, 0x4D, 1, 2) // "BM" but truncated
     )
-    val out = MediaOps.decodeMeta(rows.toDS().repartition(3))
-      .as[MediaOps.MediaMeta].collect().map(m => m.doc_id -> m).toMap
+    val out = rows.toDS().repartition(3)
+      .map { case (id, bytes) => MediaOps.sniff(id, bytes) }
+      .collect().map(m => m.doc_id -> m).toMap
     assert(out(1L).kind === "bmp" && out(1L).width === 640 &&
       out(1L).height === 480 && out(1L).bits_per_sample === 24 && out(1L).valid)
     assert(out(2L).width === 16 && out(2L).height === 9 &&
@@ -103,13 +104,6 @@ class MediaOpsSpec extends SparkSuite {
     assert(MediaOps.resizeBmp("plain text".getBytes, 2, 2).isEmpty)
   }
 
-  test("BMP channel means are exact over planted pixels") {
-    val src = bmpWithPixels(2, 2, (x, y) => (10, 20, 30 + 2 * (x + y)))
-    val (mb, mg, mr) = MediaOps.bmpChannelMeans(src).get
-    assert(mb === 10.0 && mg === 20.0)
-    assert(mr === (30.0 + 32 + 32 + 34) / 4)
-  }
-
   test("distributed thumbnails: valid BMPs resized, others quarantined") {
     val rows: Seq[(Long, Array[Byte])] = Seq(
       1L -> bmpWithPixels(8, 8, (x, y) => (x, y, 0)),
@@ -145,7 +139,6 @@ class MediaOpsSpec extends SparkSuite {
       b.array()
     }
     assert(MediaOps.resizeBmp(evilBmp, 2, 2).isEmpty)
-    assert(MediaOps.bmpChannelMeans(evilBmp).isEmpty)
     val minHeightBmp = bmp(4, 4)
     java.nio.ByteBuffer.wrap(minHeightBmp).order(ByteOrder.LITTLE_ENDIAN)
       .putInt(22, Int.MinValue) // |h| overflows abs()
@@ -375,8 +368,9 @@ class MediaOpsSpec extends SparkSuite {
       2L -> "not video".getBytes,
       3L -> ftyp, // ftyp but no moov → quarantined mp4
       4L -> wav(8000, 1, 8, 4))
-    val out = MediaOps.decodeMp4Meta(rows.toDS().repartition(2))
-      .as[MediaOps.Mp4Meta].collect().map(m => m.doc_id -> m).toMap
+    val out = rows.toDS().repartition(2)
+      .map { case (id, bytes) => MediaOps.sniffMp4(id, bytes) }
+      .collect().map(m => m.doc_id -> m).toMap
     assert(out(1L).valid && out(1L).duration_ms === 2000L && out(1L).n_samples === 10L)
     assert(!out(2L).valid && !out(3L).valid && !out(4L).valid)
     assert(out.size === 4)

@@ -14,7 +14,7 @@ class PipelineSpec extends SparkSuite {
   import spark.implicits._
 
   lazy val storePath: String = {
-    val p = Files.createTempDirectory("store").toString
+    val p = tempDir("store")
     Store.write(Pipeline.run(Synth.inputTable(spark, 1500)), p, "overwrite")
     p
   }

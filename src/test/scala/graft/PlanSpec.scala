@@ -25,7 +25,7 @@ class PlanSpec extends SparkSuite {
   }
 
   test("lake-store query prunes partitions by date and pushes verb equality") {
-    val path = java.nio.file.Files.createTempDirectory("prune").toString
+    val path = tempDir("prune")
     Store.write(Pipeline.run(graft.sources.Synth.inputTable(spark, 500)), path, "overwrite")
     val store = Store.read(spark, path)
     val q = Lrs.statements(store, Lrs.Query(
@@ -41,7 +41,7 @@ class PlanSpec extends SparkSuite {
     // partition pruning gets the day; the in-file ts sort gets the hour —
     // row-group min/max stats only skip when rows are clustered by ts
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("sorted").toString
+    val path = tempDir("sorted")
     Store.write(Pipeline.run(graft.sources.Synth.inputTable(spark, 500)), path, "overwrite")
     val files = spark.read.parquet(path)
       .select(input_file_name().as("f")).distinct().as[String].collect()

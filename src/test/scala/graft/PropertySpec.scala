@@ -125,23 +125,6 @@ class PropertySpec extends SparkSuite {
     })
   }
 
-  test("tokenStats equals brute-force distinct/modal counts on arbitrary arrays") {
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    check(forAll(Gen.listOf(Gen.chooseNum(-5, 5))) { xs =>
-      val got = graft.functions.Signatures.tokenStats(
-        new GenericArrayData(xs.toArray))
-      val expDistinct = xs.distinct.size.toLong
-      val expTop = if (xs.isEmpty) 0L
-        else xs.groupBy(identity).map(_._2.length).max.toLong
-      got.getLong(0) == xs.length.toLong &&
-        got.getLong(1) == expDistinct && got.getLong(2) == expTop
-    })
-    // null slots are excluded from ALL THREE counts, never read as token 0
-    val withNulls = new GenericArrayData(Array[Any](null, null, 5, 5))
-    val st = graft.functions.Signatures.tokenStats(withNulls)
-    assert(st.getLong(0) === 2L && st.getLong(1) === 1L && st.getLong(2) === 2L)
-  }
-
   test("PQ encode/decode: codes in range, reconstruction is codewords, members lossless") {
     import org.apache.spark.sql.catalyst.util.GenericArrayData
     val books = Array.tabulate(4) { s =>

@@ -108,7 +108,7 @@ class QuantileSpec extends SparkSuite {
     val q = out.writeStream.outputMode("complete")
       .format("memory").queryName("qsk_stream")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("qsk_cp").toString)
+        tempDir("qsk_cp"))
       .start()
     val b1 = (1 to 100).map(i => ("a", i.toDouble))
     val b2 = (101 to 200).map(i => ("a", i.toDouble))

@@ -14,7 +14,7 @@ class SourcesSpec extends SparkSuite {
   import spark.implicits._
 
   test("FS JSONL round-trip preserves raw lines; CREATE fails if target exists") {
-    val dir = Files.createTempDirectory("jsonl").toString + "/out"
+    val dir = tempDir("jsonl") + "/out"
     val lines = Seq("""{"id": 1, "custom": {"x": [1,2]}}""", """{"id": 2}""")
     FsJsonl.write(lines.toDF("raw"), "raw", dir, FsJsonl.Create)
     val back = FsJsonl.read(spark, dir).as[String].collect().toSet
@@ -29,7 +29,7 @@ class SourcesSpec extends SparkSuite {
   }
 
   test("FS read skips invalid lines (ignore_errors) and honors max_statements (O4)") {
-    val dir = Files.createTempDirectory("jsonl2").toString + "/out"
+    val dir = tempDir("jsonl2") + "/out"
     FsJsonl.write(Seq("""{"a": 1}""", "not json", """{"b": 2}""", """{"c": 3}""")
       .toDF("raw"), "raw", dir, FsJsonl.Create)
     assert(FsJsonl.read(spark, dir).count() === 3)
@@ -49,7 +49,7 @@ class SourcesSpec extends SparkSuite {
   }
 
   test("history ledger: new containers = anti-join against processed set (S17)") {
-    val path = Files.createTempDirectory("hist").toString + "/history"
+    val path = tempDir("hist") + "/history"
     History.record(spark, path, Seq("f1", "f2"))
     val listing = Seq("f1", "f2", "f3").toDF("container")
     val fresh = History.onlyNew(listing, History.read(spark, path)).as[String].collect()
@@ -60,14 +60,14 @@ class SourcesSpec extends SparkSuite {
 
   test("LDP archive source (S11): gz archives read natively, history-gated") {
     import java.util.zip.GZIPOutputStream
-    val dir = Files.createTempDirectory("ldp").toString
+    val dir = tempDir("ldp")
     def gz(name: String, lines: Seq[String]): Unit = {
       val out = new GZIPOutputStream(new java.io.FileOutputStream(s"$dir/$name"))
       out.write(lines.mkString("\n").getBytes("UTF-8")); out.close()
     }
     gz("archive-1.gz", Seq("""{"id": 1}""", """{"id": 2}"""))
     gz("archive-2.gz", Seq("""{"id": 3}"""))
-    val hist = Files.createTempDirectory("ldph").toString + "/history"
+    val hist = tempDir("ldph") + "/history"
     // first consumption: both archives decoded end-to-end
     val first = graft.sources.Ldp.readNew(spark, dir, hist)
     assert(first.as[String].collect().toSet ===
@@ -82,13 +82,13 @@ class SourcesSpec extends SparkSuite {
 
   test("LDP maxStatements: a truncated archive is NOT marked consumed (no row loss)") {
     import java.util.zip.GZIPOutputStream
-    val dir = Files.createTempDirectory("ldptrunc").toString
+    val dir = tempDir("ldptrunc")
     def gz(name: String, lines: Seq[String]): Unit = {
       val out = new GZIPOutputStream(new java.io.FileOutputStream(s"$dir/$name"))
       out.write(lines.mkString("\n").getBytes("UTF-8")); out.close()
     }
     gz("big.gz", (1 to 10).map(i => s"""{"id": $i}"""))
-    val hist = Files.createTempDirectory("ldpth").toString + "/history"
+    val hist = tempDir("ldpth") + "/history"
     // limit cuts the only archive short → the ledger must stay empty, and
     // the next unlimited poll must deliver ALL rows (reference semantics:
     // the read entry lands only after an archive is fully streamed)

@@ -1,12 +1,32 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs — one per suite, UTC, small parallelism. */
-trait SparkSuite extends AnyFunSuite {
+trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSuite.session
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
+
+  // every directory tempDir() made, deleted when the suite ends
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
+
+  /** A fresh directory in `java.io.tmpdir`, deleted when the suite ends. */
+  def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    tempDirs.add(d)
+    d.toString
+  }
+
+  override def afterAll(): Unit =
+    try if (!tempDirs.isEmpty) {
+      // a state store keeps writing snapshots of a stopped query in the
+      // background, which would recreate a deleted checkpoint dir
+      spark.streams.active.foreach(_.stop())
+      org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+      tempDirs.forEach(graft.operators.LayoutOps.deleteTree(_))
+    } finally super.afterAll()
 
   /** Spark jobs `body` schedules. */
   def jobsIn(body: => Any): Long = jobsByDescription(body).values.sum

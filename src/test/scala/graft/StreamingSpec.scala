@@ -13,20 +13,9 @@ import graft.streaming.{LakeSink, Sessionize, StreamPipeline}
 /** Streaming semantics (SURVEY.md §2.10 / north rule): watermarked dedup,
   * stateful sessionization, windowed counts, stream-stream join,
   * exactly-once sink, checkpoint resume. */
-class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
+class StreamingSpec extends SparkSuite {
   import spark.implicits._
   implicit lazy val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-  // every directory tmp() made, deleted when the suite ends
-  private val made = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
-  private def tmp(prefix: String): String = {
-    val d = Files.createTempDirectory(prefix)
-    made.add(d)
-    d.toString
-  }
-  override def afterAll(): Unit =
-    try made.forEach(graft.operators.LayoutOps.deleteTree(_))
-    finally super.afterAll()
 
   private def inputRows(from: Long, until: Long): Seq[InputRow] =
     (from until until).map { i =>
@@ -36,8 +25,8 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
 
   test("end-to-end stream: validate → convert → dedup → exactly-once lake sink") {
     val mem = MemoryStream[InputRow]
-    val sinkPath = tmp("lake")
-    val cp = tmp("cp")
+    val sinkPath = tempDir("lake")
+    val cp = tempDir("cp")
     mem.addData(inputRows(0, 400): _*)
     val q = StreamPipeline.run(mem.toDF(), sinkPath, cp)
     q.processAllAvailable(); q.stop()
@@ -57,8 +46,8 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
 
   test("checkpoint resume: kill mid-stream, restart — no loss, no duplicates") {
     val mem = MemoryStream[InputRow]
-    val sinkPath = tmp("lake")
-    val cp = tmp("cp")
+    val sinkPath = tempDir("lake")
+    val cp = tempDir("cp")
     mem.addData(inputRows(0, 200): _*)
     val q1 = StreamPipeline.run(mem.toDF(), sinkPath, cp)
     q1.processAllAvailable(); q1.stop() // "crash" after batch committed
@@ -77,7 +66,7 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
   }
 
   test("lake sink replays are idempotent (batch-level exactly-once)") {
-    val sinkPath = tmp("lake")
+    val sinkPath = tempDir("lake")
     val sink = new LakeSink(sinkPath)
     val df = Seq(("a", 1), ("b", 2)).toDF("event_id", "v")
     assert(sink.addBatch(7, df))
@@ -91,10 +80,10 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
 
   test("late rows beyond the watermark still land in the lake (no silent drop)") {
     val mem = MemoryStream[InputRow]
-    val sinkPath = tmp("lake")
+    val sinkPath = tempDir("lake")
     val sink = new LakeSink(sinkPath)
     val q = StreamPipeline.toLake(StreamPipeline.statements(mem.toDF()), sink,
-      tmp("cplate"), trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0)).start()
+      tempDir("cplate"), trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0)).start()
     // rows 100000+ carry far-future event times → advance the watermark way
     // past the event times of rows 0..49
     mem.addData(inputRows(100000, 100050): _*)
@@ -115,7 +104,7 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
     val mem = MemoryStream[InputRow]
     val q = StreamPipeline.deduped(StreamPipeline.statements(mem.toDF())).select("id")
       .writeStream.format("memory").queryName("deduped_late")
-      .option("checkpointLocation", tmp("cpdeduplate"))
+      .option("checkpointLocation", tempDir("cpdeduplate"))
       .trigger(Trigger.ProcessingTime(0)).start()
     try {
       // far-future rows advance the watermark past rows 0..49's event times
@@ -135,10 +124,10 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
 
   test("forwarding tees statements to a downstream store after the primary write") {
     val mem = MemoryStream[InputRow]
-    val primary = new LakeSink(tmp("primary"))
-    val forward = new LakeSink(tmp("forward"))
+    val primary = new LakeSink(tempDir("primary"))
+    val forward = new LakeSink(tempDir("forward"))
     val q = StreamPipeline.toLakeWithForward(
-      StreamPipeline.statements(mem.toDF()), primary, forward, tmp("cpfwd"),
+      StreamPipeline.statements(mem.toDF()), primary, forward, tempDir("cpfwd"),
       trigger = Trigger.ProcessingTime(0)).start()
     mem.addData(inputRows(0, 100): _*)
     q.processAllAvailable()
@@ -152,7 +141,7 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
     val mem = MemoryStream[InputRow]
     val stmts = StreamPipeline.statements(mem.toDF())
     val q = stmts.writeStream.format("noop")
-      .option("checkpointLocation", tmp("cpobs")).start()
+      .option("checkpointLocation", tempDir("cpobs")).start()
     mem.addData(inputRows(0, 100): _*)
     q.processAllAvailable()
     val obs = q.recentProgress.flatMap(p =>
@@ -166,7 +155,7 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
   }
 
   test("sink MERGE-by-id drops late duplicates beyond the watermark; compaction dedups") {
-    val sinkPath = tmp("lake")
+    val sinkPath = tempDir("lake")
     val sink = new LakeSink(sinkPath)
     val b0 = Seq(("a", 1), ("b", 2)).toDF("event_id", "v")
     val b1 = Seq(("b", 99), ("c", 3)).toDF("event_id", "v") // "b" is a late dup
@@ -175,7 +164,7 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
     val rows = sink.read(spark).select("event_id", "v").as[(String, Int)].collect().toMap
     assert(rows === Map("a" -> 1, "b" -> 2, "c" -> 3)) // first write wins
     // compaction folds batches into one deduped table
-    val target = tmp("compacted")
+    val target = tempDir("compacted")
     sink.compact(spark, s"$target/store", "event_id")
     val compacted = spark.read.parquet(s"$target/store")
     assert(compacted.count() === 3)
@@ -185,7 +174,7 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
   test("merged-sink probe is bounded by event-time overlap, not committed history") {
     // VERDICT r1 wrong-4: the probe must not grow with total batches ever
     // committed — manifest time ranges prune it to the disorder window
-    val sink = new LakeSink(tmp("lakebound"))
+    val sink = new LakeSink(tempDir("lakebound"))
     def batch(ids: Seq[String], hour: Int) =
       ids.map(id => (id, Timestamp.valueOf(f"2024-01-01 $hour%02d:00:00")))
         .toDF("event_id", "ts")
@@ -209,7 +198,7 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
     // different bit sizes throws IncompatibleMergeException — the probe must
     // OR across them instead. Batch 0 (2500 rows) and batch 1 (3 rows) get
     // different filter sizes; batch 2 probes both.
-    val sink = new LakeSink(tmp("lakebloom"))
+    val sink = new LakeSink(tempDir("lakebloom"))
     val ts = Timestamp.valueOf("2024-01-01 05:00:00")
     val big = (0 until 2500).map(i => (s"big-$i", ts)).toDF("event_id", "ts")
     val small = Seq(("s-1", ts), ("s-2", ts), ("s-3", ts)).toDF("event_id", "ts")
@@ -226,7 +215,7 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
     // committed byte each run (quadratic I/O over the stream's life). With
     // a tier threshold, a segment that grew past it graduates: its dir
     // must survive later compactions byte-identical.
-    val sink = new LakeSink(tmp("laketier"))
+    val sink = new LakeSink(tempDir("laketier"))
     val ts = Timestamp.valueOf("2024-01-01 05:00:00")
     def batch(n: Int, tag: String) =
       (0 until n).map(i => (s"$tag-$i", ts)).toDF("event_id", "ts")
@@ -288,7 +277,7 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
   }
 
   test("in-place compaction folds the manifest to one segment, reads unchanged") {
-    val sink = new LakeSink(tmp("lakecompact"))
+    val sink = new LakeSink(tempDir("lakecompact"))
     def batch(ids: Seq[String], hour: Int) =
       ids.map(id => (id, Timestamp.valueOf(f"2024-01-01 $hour%02d:00:00")))
         .toDF("event_id", "ts")
@@ -326,8 +315,8 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
     // toLake(compactEvery=2) folds committed segments as the stream runs;
     // data completeness must be unaffected and entry count stays O(1)
     // instead of O(batches)
-    val sink = new LakeSink(tmp("lakesched"))
-    val cp = tmp("cpsched")
+    val sink = new LakeSink(tempDir("lakesched"))
+    val cp = tempDir("cpsched")
     val stream = MemoryStream[InputRow]
     val statements = Pipeline.validateConvert(stream.toDF())
     val q = StreamPipeline
@@ -351,95 +340,12 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
     assert(sink.committed().length < 3)
   }
 
-  test("content dedup drops same-payload rows across DIFFERENT ids in-stream") {
-    val mem = MemoryStream[(String, Timestamp, String)]
-    val ts = Timestamp.valueOf("2024-01-01 10:00:00")
-    val statements = mem.toDF().toDF("id", "ts", "xapi")
-      .withWatermark("ts", "10 minutes")
-    val out = StreamPipeline.dedupedByContent(statements)
-    val cp = tmp("cpcontent")
-    val q = out.writeStream.format("memory").queryName("content_dedup")
-      .option("checkpointLocation", cp).outputMode("append").start()
-    mem.addData(
-      ("id-1", ts, """{"verb":"played","object":"v1"}"""),
-      ("id-2", ts, """{"verb":"played","object":"v1"}"""), // re-sent, new id
-      ("id-3", ts, """{"verb":"played","object":"v2"}"""))
-    q.processAllAvailable(); q.stop()
-    val rows = spark.table("content_dedup").select("xapi").as[String].collect()
-    assert(rows.length === 2) // one survivor per distinct payload
-    assert(rows.toSet.size === 2)
-    // the helper column never leaks into the output schema
-    assert(!spark.table("content_dedup").columns.contains("_content_h"))
-  }
-
-  test("token quality gate runs in-stream: stateless, filters degenerate rows") {
-    val mem = MemoryStream[InputRow]
-    val gated = graft.operators.CorpusOps.qualityGateTokens(mem.toDF())
-      .filter(col("gate_keep") === 1)
-    val cp = tmp("cpgate")
-    val q = gated.writeStream.format("memory").queryName("gate_out")
-      .option("checkpointLocation", cp).outputMode("append").start()
-    mem.addData(
-      InputRow("deg", Array.fill(64)(7), 64, "src1"),   // degenerate: dropped
-      InputRow("div", (0 until 64).toArray, 64, "src1")) // diverse: kept
-    q.processAllAvailable()
-    // stateless gate: a pure projection+filter needs no state store
-    assert(!q.lastProgress.json.contains("stateOperators\":[{"),
-      q.lastProgress.json)
-    q.stop()
-    val kept = spark.table("gate_out").select("doc_id").as[String].collect()
-    assert(kept.toSeq === Seq("div"))
-  }
-
-  test("decontamination gate flags benchmark-overlapping rows in-stream, stateless") {
-    val mem = MemoryStream[InputRow]
-    // benchmark = the shingles of a known eval sequence
-    val benchTokens = (100 until 110).map(_.toString)
-    val bench = benchTokens.sliding(3).map(_.mkString(" ")).toSeq
-    val gated = graft.operators.CorpusOps.decontamGateTokens(mem.toDF(), bench)
-    val cp = tmp("cpdecontam")
-    val q = gated.writeStream.format("memory").queryName("decontam_out")
-      .option("checkpointLocation", cp).outputMode("append").start()
-    mem.addData(
-      InputRow("leak", (98 until 108).toArray, 10, "s"), // overlaps the eval run
-      InputRow("clean", (200 until 210).toArray, 10, "s"))
-    q.processAllAvailable()
-    assert(!q.lastProgress.json.contains("stateOperators\":[{"), q.lastProgress.json)
-    q.stop()
-    val flags = spark.table("decontam_out").select("doc_id", "contaminated")
-      .as[(String, Long)].collect().toMap
-    assert(flags === Map("leak" -> 1L, "clean" -> 0L))
-  }
-
-  test("bloom decontamination gate runs in-stream: stateless, flags like the exact gate") {
-    // the large-eval-set gate must be as stream-safe as the plan-literal
-    // one: pure projection+filter (no watermark, no state operators), the
-    // serialized filter riding the plan
-    val mem = MemoryStream[InputRow]
-    val benchTokens = (100 until 110).map(_.toString)
-    val bench = benchTokens.sliding(3).map(_.mkString(" ")).toSeq
-    val gated = graft.operators.CorpusOps
-      .decontamGateTokensBloom(mem.toDF(), bench, fpp = 1e-6)
-    val cp = tmp("cpdecontambloom")
-    val q = gated.writeStream.format("memory").queryName("decontam_bloom_out")
-      .option("checkpointLocation", cp).outputMode("append").start()
-    mem.addData(
-      InputRow("leak", (98 until 108).toArray, 10, "s"), // overlaps the eval run
-      InputRow("clean", (200 until 210).toArray, 10, "s"))
-    q.processAllAvailable()
-    assert(!q.lastProgress.json.contains("stateOperators\":[{"), q.lastProgress.json)
-    q.stop()
-    val flags = spark.table("decontam_bloom_out").select("doc_id", "contaminated")
-      .as[(String, Long)].collect().toMap
-    assert(flags === Map("leak" -> 1L, "clean" -> 0L))
-  }
-
   test("compaction composes with checkpoint resume: restart after fold, still exactly-once") {
     // kill the stream after batches are folded into a compacted segment,
     // then resume from the checkpoint with overlapping + new data: replayed
     // ids must still dedup against the COMPACTED manifest
-    val sink = new LakeSink(tmp("lakecr"))
-    val cp = tmp("cpcr")
+    val sink = new LakeSink(tempDir("lakecr"))
+    val cp = tempDir("cpcr")
     val stream = MemoryStream[InputRow]
     def start() = StreamPipeline
       .toLake(Pipeline.validateConvert(stream.toDF()), sink, cp,
@@ -468,7 +374,7 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
     // regression (review): compaction used to erase positive batch ids from
     // the manifest — the only replay guard addBatch (mergeById=false) has.
     // The compacted entry now records folded ids, so the replay check holds.
-    val sink = new LakeSink(tmp("lakefold"))
+    val sink = new LakeSink(tempDir("lakefold"))
     assert(sink.addBatch(0, Seq(("a", 1)).toDF("event_id", "v")))
     assert(sink.addBatch(1, Seq(("b", 2)).toDF("event_id", "v")))
     sink.compactInPlace(spark)
@@ -487,8 +393,8 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
   test("reconcile heals across INDEPENDENT compactions (streaming-id diff, not segment ids)") {
     // review regression: both sinks compact → each gets gen -1; a diff on
     // segment ids would treat them as the same content and skip the heal
-    val primary = new LakeSink(tmp("recp2"))
-    val forward = new LakeSink(tmp("recf2"))
+    val primary = new LakeSink(tempDir("recp2"))
+    val forward = new LakeSink(tempDir("recf2"))
     val ts = Timestamp.valueOf("2024-01-01 05:00:00")
     def batch(ids: Seq[String]) = ids.map(id => (id, ts)).toDF("event_id", "ts")
     Seq(0, 1, 2).foreach(b =>
@@ -518,7 +424,7 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
   }
 
   test("folded ranges stay O(gaps): contiguous batches compress to one range") {
-    val sink = new LakeSink(tmp("lakeranges"))
+    val sink = new LakeSink(tempDir("lakeranges"))
     (0 until 6).foreach(b =>
       assert(sink.addBatch(b, Seq((s"x$b", b)).toDF("event_id", "v"))))
     sink.compactInPlace(spark)
@@ -535,7 +441,7 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
   test("lake read tolerates schema evolution across committed batches") {
     // a long-running sink WILL see columns added mid-stream; readers must
     // union old and new batches with nulls for the missing columns
-    val sink = new LakeSink(tmp("lakeevo"))
+    val sink = new LakeSink(tempDir("lakeevo"))
     assert(sink.addBatch(0, Seq(("a", 1)).toDF("event_id", "v")))
     assert(sink.addBatch(1, Seq(("b", 2, "extra")).toDF("event_id", "v", "w")))
     // the fingerprints differ, so the read takes the mergeSchema fallback
@@ -556,7 +462,7 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
   }
 
   test("vacuum reclaims orphan dirs/blooms, never committed ones") {
-    val sink = new LakeSink(tmp("lakevac"))
+    val sink = new LakeSink(tempDir("lakevac"))
     assert(sink.addBatchMerged(0, Seq(("a", Timestamp.valueOf("2024-01-01 05:00:00")))
       .toDF("event_id", "ts"), "event_id"))
     // simulate a crash between compaction's manifest swap and dir delete:
@@ -578,8 +484,8 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
   }
 
   test("forward reconcile heals batches missing from the downstream manifest") {
-    val primary = new LakeSink(tmp("recp"))
-    val forward = new LakeSink(tmp("recf"))
+    val primary = new LakeSink(tempDir("recp"))
+    val forward = new LakeSink(tempDir("recf"))
     val t = Timestamp.valueOf("2024-01-01 10:00:00")
     val b0 = Seq(("a", t)).toDF("event_id", "ts")
     val b1 = Seq(("b", t)).toDF("event_id", "ts")
@@ -685,9 +591,9 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
       val reference = SessionizeReference(stmts.dropDuplicatesWithinWatermark("id")
         .select("actor_key", "source", "ts", "verb_id").as[Sessionize.Event])
       val qf = fused.writeStream.format("memory").queryName(s"fused_$seed")
-        .outputMode("append").option("checkpointLocation", tmp("cpfused")).start()
+        .outputMode("append").option("checkpointLocation", tempDir("cpfused")).start()
       val qr = reference.writeStream.format("memory").queryName(s"reference_$seed")
-        .outputMode("append").option("checkpointLocation", tmp("cpref")).start()
+        .outputMode("append").option("checkpointLocation", tempDir("cpref")).start()
       try {
         stmtBatches(seed, 8, 7 * Minute).zipWithIndex.foreach { case (batch, b) =>
           mem.addData(batch: _*)
@@ -709,10 +615,10 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
       .option("checkpointLocation", cp)
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) => sink.addBatch(id, b); () }
       .start()
-    val whole = new LakeSink(tmp("sesswhole"))
-    val restarted = new LakeSink(tmp("sessrestart"))
-    val cpWhole = tmp("cpwhole")
-    val cpRestart = tmp("cprestart")
+    val whole = new LakeSink(tempDir("sesswhole"))
+    val restarted = new LakeSink(tempDir("sessrestart"))
+    val cpWhole = tempDir("cpwhole")
+    val cpRestart = tempDir("cprestart")
     val qw = start(whole, cpWhole)
     var qr = start(restarted, cpRestart)
     try {
@@ -735,7 +641,7 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
       val stmts = StreamPipeline.statements(mem.toDF())
       val q = StreamPipeline.sessions(if (dedup) StreamPipeline.deduped(stmts) else stmts)
         .writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", tmp("cpsesscensus"))
+        .option("checkpointLocation", tempDir("cpsesscensus"))
         .trigger(Trigger.ProcessingTime(0)).start()
       try {
         mem.addData(inputRows(100000, 100050): _*) // advances the watermark past rows 0..49
@@ -775,7 +681,7 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
     spark.conf.set(key, "false")
     val q = try StreamPipeline.sessions(StreamPipeline.deduped(mem.toDF().withWatermark("ts", "10 minutes")))
       .writeStream.format("memory").queryName("sess_jump").outputMode("append")
-      .option("checkpointLocation", tmp("cpsessjump")).start()
+      .option("checkpointLocation", tempDir("cpsessjump")).start()
     finally spark.conf.unset(key)
     try {
       mem.addData(SessionStmt("a1", "A", "browser", at("10:00"), "v1"),
@@ -831,7 +737,7 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
     val stmts = mem.toDF().withColumn("arrival", col("ts")).withWatermark("arrival", "7 minutes")
     def error(plan: => org.apache.spark.sql.Dataset[Sessionize.Session]) =
       intercept[org.apache.spark.sql.AnalysisException](plan.writeStream.format("memory")
-        .queryName("arrival").option("checkpointLocation", tmp("cparrival")).start()).getCondition
+        .queryName("arrival").option("checkpointLocation", tempDir("cparrival")).start()).getCondition
     assert(error(StreamPipeline.sessions(StreamPipeline.deduped(stmts))) ===
       error(SessionizeReference(stmts.dropDuplicatesWithinWatermark("id")
         .select("actor_key", "source", "ts", "verb_id").as[Sessionize.Event])))
@@ -958,7 +864,7 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
     val mem = MemoryStream[(Long, String)]
     val q = mem.toDF().toDF("doc_id", "text").writeStream
       .outputMode("append")
-      .option("checkpointLocation", tmp("inccp"))
+      .option("checkpointLocation", tempDir("inccp"))
       .trigger(Trigger.ProcessingTime(0))
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
         stats += inc.addBatch(b); ()
@@ -1028,7 +934,7 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
       8L -> saltedDoc("e0w"), 9L -> saltedDoc("e0w", 25 -> "e1x"),
       10L -> saltedDoc("fw"))
     val batch3: Seq[(Long, String)] = Seq(11L -> dedupDoc(3 -> "b3", 7 -> "b7"))
-    val lake = tmp("declake")
+    val lake = tempDir("declake")
 
     val d1 = new DurableIncrementalDedup(spark, lake, threshold = 0.5)
     d1.addBatch(0L, batch1.toDF("doc_id", "text"))
@@ -1066,7 +972,7 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
     // answer on real data, like the in-memory one (the optional
     // q_dup_clusters_incremental path): spot-check at sf0.001
     val viaLake = IncrementalDedup.replayClustersDurable(
-      spark, sf("sf0.001"), tmp("declake2"))
+      spark, sf("sf0.001"), tempDir("declake2"))
     val viaMem = IncrementalDedup.replayClusters(spark, sf("sf0.001"))
     assert(viaLake.as[(Long, Long)].collect().toSet ===
       viaMem.as[(Long, Long)].collect().toSet)
@@ -1093,13 +999,13 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
       Files.write(p, lines.init.asJava); ()
     }
 
-    val ref = tmp("crashref")
+    val ref = tempDir("crashref")
     val want = batches.zipWithIndex.map { case (b, i) =>
       open(ref).addBatch(i.toLong, b.toDF("doc_id", "text")) }
     assert(want(1).nVerifiedPairs > 0 && want(2).nVerifiedPairs === 0L &&
       want(2).nCandidatePairs > 0 && want(3).nVerifiedPairs > 0)
 
-    val lake = tmp("crashlake")
+    val lake = tempDir("crashlake")
     open(lake).addBatch(0L, founding.toDF("doc_id", "text"))
     open(lake).addBatch(1L, merging.toDF("doc_id", "text"))
     val afterMerge = labelsOf(lake)
@@ -1123,7 +1029,7 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
 
   test("durable incremental dedup fails at once on a lake in the old three-table layout") {
     import graft.streaming.DurableIncrementalDedup
-    val old = tmp("oldlayout")
+    val old = tempDir("oldlayout")
     new LakeSink(s"$old/bands").addBatch(0L, Seq((0L, 0, 7L)).toDF("doc_id", "band", "bkey"))
     new LakeSink(s"$old/shingles").addBatch(0L,
       Seq((0L, Seq("a b c"))).toDF("doc_id", "sh"))
@@ -1132,7 +1038,7 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
       e.getMessage)
     assert(!Files.exists(java.nio.file.Paths.get(old, "docs")), "opening wrote a docs table")
     // a lake in the current layout reopens
-    val lake = tmp("newlayout")
+    val lake = tempDir("newlayout")
     new DurableIncrementalDedup(spark, lake).addBatch(0L,
       Seq(1L -> saltedDoc("aw"), 2L -> saltedDoc("aw", 25 -> "zz")).toDF("doc_id", "text"))
     assert(new DurableIncrementalDedup(spark, lake).labels.as[(Long, Long)].collect().toSet ===
@@ -1158,7 +1064,7 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
     val memStats = scala.collection.mutable.ArrayBuffer.empty[IncrementalDedup.BatchStats]
     val memJobs = batches.map(b =>
       jobsByDescription { memStats += mem.addBatch(b.toDF("doc_id", "text")) })
-    val dur = new DurableIncrementalDedup(spark, tmp("censuslake"), threshold = 0.5)
+    val dur = new DurableIncrementalDedup(spark, tempDir("censuslake"), threshold = 0.5)
     val durStats = scala.collection.mutable.ArrayBuffer.empty[IncrementalDedup.BatchStats]
     val durJobs = batches.zipWithIndex.map { case (b, i) =>
       jobsByDescription { durStats += dur.addBatch(i.toLong, b.toDF("doc_id", "text")) } }
@@ -1213,7 +1119,7 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
   test("readGeneration reads exactly one segment and fails loudly after compaction") {
     import graft.streaming.LakeSink
     import spark.implicits._
-    val sink = new LakeSink(tmp("gensink"))
+    val sink = new LakeSink(tempDir("gensink"))
     sink.addBatch(0L, Seq((1L, "a")).toDF("doc_id", "rep"))
     sink.addBatch(1L, Seq((1L, "a"), (2L, "b")).toDF("doc_id", "rep"))
     // generation-snapshot read: ONLY the requested segment's rows
@@ -1240,7 +1146,7 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
       .as[Funnel.Ev].collect().sortBy(e => (e.ts.getTime, e.event_id))
     val mem = MemoryStream[Funnel.Ev]
     val out = Funnel(mem.toDS().withWatermark("ts", "30 minutes"))
-    val cp = tmp("cpfunnel")
+    val cp = tempDir("cpfunnel")
     val q = out.writeStream.format("memory").queryName("cep_conv")
       .option("checkpointLocation", cp).outputMode("append").start()
     // three time-contiguous chunks, each delivered in REVERSED arrival
@@ -1299,7 +1205,7 @@ class StreamingSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
     val out = Funnel(mem.toDS().withWatermark("ts", "30 minutes"),
       pattern = pattern)
     val q = out.writeStream.format("memory").queryName("cep_conv4")
-      .option("checkpointLocation", tmp("cpfunnel4")).outputMode("append").start()
+      .option("checkpointLocation", tempDir("cpfunnel4")).outputMode("append").start()
     evs.grouped(evs.length / 3 + 1).foreach { c =>
       mem.addData(c.reverse.toIndexedSeq: _*); q.processAllAvailable()
       mem.addData(c.toIndexedSeq: _*); q.processAllAvailable()
@@ -1331,7 +1237,7 @@ test("streaming quota: buffered-until-watermark admission ≡ the batch window r
     val mem = MemoryStream[Quota.Ev]
     val out = Quota(mem.toDS().withWatermark("ts", "30 minutes"))
     val q = out.writeStream.format("memory").queryName("quota_admit")
-      .option("checkpointLocation", tmp("cpquota")).outputMode("append").start()
+      .option("checkpointLocation", tempDir("cpquota")).outputMode("append").start()
     // time-contiguous chunks delivered in REVERSED arrival order: within
     // the watermark horizon, arrival order must not change who wins.
     // Every chunk is then REDELIVERED (at-least-once upstream): in-horizon
@@ -1355,7 +1261,7 @@ test("streaming quota: buffered-until-watermark admission ≡ the batch window r
   }
 
 test("time travel: snapshots read the pre-compaction table; vacuum honors retention") {
-    val sink = new LakeSink(tmp("laketravel"))
+    val sink = new LakeSink(tempDir("laketravel"))
     val ts = Timestamp.valueOf("2024-01-01 05:00:00")
     def batch(n: Int, tag: String) =
       (0 until n).map(i => (s"$tag-$i", ts)).toDF("event_id", "ts")
@@ -1409,7 +1315,7 @@ test("time travel: snapshots read the pre-compaction table; vacuum honors retent
       .agg(agg(col("doc_id")).as("hh"))
     val q = counts.writeStream.outputMode("complete")
       .format("memory").queryName("ss_stream")
-      .option("checkpointLocation", tmp("ss_cp"))
+      .option("checkpointLocation", tempDir("ss_cp"))
       .start()
     // two microbatches: the sketch must merge state across them
     mem.addData(inputRows(0, 200): _*); q.processAllAvailable()

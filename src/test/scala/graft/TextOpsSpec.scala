@@ -59,8 +59,11 @@ class TextOpsSpec extends SparkSuite {
   }
 
   test("fingerprint is deterministic and order-sensitive") {
-    val fp1 = TextOps.fingerprint(spark, dir).as[(Long, Long)].collect().toMap
-    val fp2 = TextOps.fingerprint(spark, dir).as[(Long, Long)].collect().toMap
+    def fingerprints = TextOps.documents(spark, dir)
+      .select(col("doc_id"), TextOps.fingerprintCol(col("text")))
+      .as[(Long, Long)].collect().toMap
+    val fp1 = fingerprints
+    val fp2 = fingerprints
     assert(fp1 === fp2)
     // shuffled word order must change the fingerprint (rolling hash)
     val df = Seq((1L, "alpha beta gamma"), (2L, "gamma beta alpha")).toDF("doc_id", "text")

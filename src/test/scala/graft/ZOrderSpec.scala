@@ -58,7 +58,7 @@ class ZOrderSpec extends SparkSuite {
     val rows = (0 until n).map(i =>
       (i.toLong, rnd.nextInt(100000).toLong, rnd.nextInt(1000000).toLong))
     val df = rows.toDF("id", "ua", "tb")
-    val dir = Files.createTempDirectory("graft-zspec").toString
+    val dir = tempDir("graft-zspec")
     val zm = LayoutOps.zorderWrite(df, Seq("ua", "tb"), dir, files)
     (dir, zm)
   }
@@ -107,8 +107,8 @@ class ZOrderSpec extends SparkSuite {
     val rows = (0 until 20000).map(i =>
       (i.toLong, rnd.nextInt(100000).toLong, rnd.nextInt(1000000).toLong))
     val df = rows.toDF("id", "ua", "tb")
-    val zDir = Files.createTempDirectory("graft-zd").toString
-    val sDir = Files.createTempDirectory("graft-sd").toString
+    val zDir = tempDir("graft-zd")
+    val sDir = tempDir("graft-sd")
     try {
       LayoutOps.zorderWrite(df, Seq("ua", "tb"), zDir, 16)
       // linear layout, SAME zone-map machinery — only the ordering differs
